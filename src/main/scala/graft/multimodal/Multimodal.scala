@@ -108,32 +108,12 @@ object Multimodal {
     * registry entries consume this frame and each was re-paying the
     * full container encode — including the H.264 GOP encodes — per
     * entry; a curation pipeline stages its media table once and feeds
-    * every extractor from it, which is exactly what the Memo does
-    * (localCheckpoint'd, same lifecycle rules as the LSH pair cache).
+    * every extractor from it, which is exactly what the
+    * [[graft.queries.SessionMemo]] frame does.
     */
-  def mediaFromDocuments(spark: SparkSession, dir: String): DataFrame = {
-    val memo = mediaCache.synchronized {
-      mediaCache.getOrElseUpdate(spark, scala.collection.mutable.Map.empty)
-        .getOrElseUpdate(dir, new Memo(() => {
-          val df = mediaFromDocumentsUncached(spark, dir)
-          val r = df.rdd.localCheckpoint()
-          r.count() // materialize eagerly, once per (session, corpus)
-          (df.schema, r)
-        }))
-    }
-    val (schema, rdd) = memo.get
-    spark.createDataFrame(rdd, schema)
-  }
-
-  // Session-weak cache around QueriesLLM's compute-once Memo (one
-  // holder class, one set of lifecycle rules: value must not strongly
-  // reach the session, builder nulled after first evaluation)
-  private type Memo[T] = graft.queries.QueriesLLM.Memo[T]
-  private val mediaCache =
-    new scala.collection.mutable.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String,
-        Memo[(org.apache.spark.sql.types.StructType,
-          org.apache.spark.rdd.RDD[org.apache.spark.sql.Row])]]]
+  def mediaFromDocuments(spark: SparkSession, dir: String): DataFrame =
+    graft.queries.SessionMemo.frame(spark, dir, "media")(
+      mediaFromDocumentsUncached(spark, dir))
 
   /** Build count — test hook pinning the build-once contract (the
     * lshIndexWrites idiom): seven registry entries share one media
@@ -142,8 +122,8 @@ object Multimodal {
     */
   private[graft] val mediaBuilds = new java.util.concurrent.atomic.AtomicLong
 
-  /** The un-memoized media build (the Memo discipline's raw-builder
-    * rule: anything that MEASURES the encode — LargeMediaBench, probes
+  /** The un-memoized media build (the raw-builder rule of the memoized
+    * entries: anything that MEASURES the encode — LargeMediaBench, probes
     * — must see the real build, never a cache hit).
     */
   private[graft] def mediaFromDocumentsUncached(

@@ -61,51 +61,11 @@ object QueriesLLM {
     * PageRank, triangles) consume the same candidate graph, which is
     * exactly how a production curation pipeline runs — the near-dup
     * candidate table is computed once and feeds many jobs, not rebuilt
-    * per consumer. The cached frame is a localCheckpoint of the final
-    * (small) pair list, not the intermediate signature/band frames.
+    * per consumer. The [[SessionMemo]] frame is a localCheckpoint of the
+    * final (small) pair list, not the intermediate signature/band frames.
     */
-  // weak session keys: when a session is dropped, its entries (and the
-  // checkpoint blocks they pin) become collectible — a plain map keyed
-  // by session id would leak blocks for the life of a long driver.
-  // The VALUE must not be a DataFrame: a frame's QueryExecution strongly
-  // references its SparkSession, which would keep the weak KEY reachable
-  // forever and turn the weak map into a plain one. Cache the
-  // materialized (schema, RDD[Row]) instead — an RDD references only the
-  // SparkContext — and rebuild the cheap frame wrapper per call.
-  // Compute-once holder: the GLOBAL cache lock is held only long enough
-  // to install the holder; the (possibly multi-minute) Spark build runs
-  // under the holder's own lazy-val lock, so only same-key callers
-  // block — a second session/corpus proceeds instead of queueing behind
-  // an unrelated materialization.
-  // the builder reference is nulled after first evaluation: the Memo is
-  // stored as a VALUE in session-weak-keyed caches, and a builder
-  // closure captures the SparkSession — a value that strongly reaches
-  // its own weak key pins the entry (and the stopped session) forever,
-  // exactly the lifecycle leak the weak keying exists to prevent
-  private[graft] final class Memo[T](b: () => T) {
-    private[this] var build: () => T = b
-    lazy val get: T = { val r = build(); build = null; r }
-  }
-
-  private val lshPairsCache =
-    new scala.collection.mutable.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String,
-        Memo[(org.apache.spark.sql.types.StructType,
-          org.apache.spark.rdd.RDD[org.apache.spark.sql.Row])]]]
-
-  def minhashLshPairs(s: SparkSession, dir: String): DataFrame = {
-    val memo = lshPairsCache.synchronized {
-      lshPairsCache.getOrElseUpdate(s, scala.collection.mutable.Map.empty)
-        .getOrElseUpdate(dir, new Memo(() => {
-          val df = minhashLshPairsUncached(s, dir)
-          val r = df.rdd.localCheckpoint()
-          r.count() // materialize eagerly, once per key
-          (df.schema, r)
-        }))
-    }
-    val (schema, rdd) = memo.get
-    s.createDataFrame(rdd, schema)
-  }
+  def minhashLshPairs(s: SparkSession, dir: String): DataFrame =
+    SessionMemo.frame(s, dir, "lsh_pairs")(minhashLshPairsUncached(s, dir))
 
   /** The un-memoized build — what the registry's `x_minhash_lsh` entry
     * and the bench time (the cache must never make the MEASURED query a
@@ -783,30 +743,16 @@ object QueriesLLM {
     lshSearch(s, dir, cand, tables, bitsPerTable)
   }
 
-  // one write per (session, corpus, tables, bpt) — parameters ride the
-  // directory name so two parameterizations never clobber each other
-  // (the PQ-index discipline)
-  private val lshPersistCache =
-    new scala.collection.mutable.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String, Memo[String]]]
-
   /** Registry entry: build → WRITE → LOAD → search, end to end. The
     * oracle is the same static SQL as `x_ann_lsh` — the persisted
-    * round-trip must be invisible in the answer.
+    * round-trip must be invisible in the answer. One write per
+    * (session, corpus, tables, bpt); the parameters ride the directory
+    * name so two parameterizations never clobber each other.
     */
   def annLshPersisted(s: SparkSession, dir: String, tables: Int = 4,
       bitsPerTable: Int = 6): DataFrame = {
-    val out = lshPersistCache.synchronized {
-      lshPersistCache.getOrElseUpdate(s, scala.collection.mutable.Map.empty)
-        .getOrElseUpdate(s"$dir|t=$tables|b=$bitsPerTable", new Memo(() => {
-          val p = new java.io.File(sys.props("java.io.tmpdir"),
-            s"graft_lsh_index_${s.sparkContext.applicationId}_" +
-              java.lang.Integer.toHexString(dir.hashCode) +
-              s"_t${tables}_b$bitsPerTable").getAbsolutePath
-          lshIndexWrite(s, dir, p, tables, bitsPerTable)
-          p
-        }))
-    }.get
+    val out = SessionMemo.path(s, dir, s"lsh_index_t${tables}_b$bitsPerTable")(
+      lshIndexWrite(s, dir, _, tables, bitsPerTable))
     annLshFrom(s, dir, out, tables, bitsPerTable)
   }
 
@@ -868,17 +814,8 @@ object QueriesLLM {
   private[graft] final case class QuantCents(
       cents: IndexedSeq[IndexedSeq[Long]], cn2: IndexedSeq[Long])
 
-  private val ivfModelCache =
-    new scala.collection.mutable.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String, Memo[QuantCents]]]
-
-  private[graft] def ivfModelFor(s: SparkSession, dir: String, k: Int): QuantCents = {
-    val memo = ivfModelCache.synchronized {
-      ivfModelCache.getOrElseUpdate(s, scala.collection.mutable.Map.empty)
-        .getOrElseUpdate(s"$dir|k=$k", new Memo(() => ivfModelBuild(s, dir, k)))
-    }
-    memo.get
-  }
+  private[graft] def ivfModelFor(s: SparkSession, dir: String, k: Int): QuantCents =
+    SessionMemo(s, dir, s"ivf_model|k=$k")(ivfModelBuild(s, dir, k))
 
   private def quantizeCenter(c: Array[Double]): IndexedSeq[Long] =
     c.iterator.map(x => math.floor(x * 1e6 + 0.5).toLong).toIndexedSeq
@@ -1043,29 +980,14 @@ object QueriesLLM {
     ivfSearch(s, dir, codes, mdl, nprobe)
   }
 
-  // one write per (session, corpus, k) — same path discipline as the
-  // PQ index: k rides the directory name so parameterizations never
-  // share (or clobber) an artifact
-  private val ivfPersistCache =
-    new scala.collection.mutable.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String, Memo[String]]]
-
   /** Registry entry: build → WRITE → LOAD → search, end to end. The
     * oracle is the same generated SQL as `x_ann_ivf` — the persisted
-    * round-trip must be invisible in the answer.
+    * round-trip must be invisible in the answer. One write per
+    * (session, corpus, k); k rides the directory name.
     */
   def annIvfPersisted(s: SparkSession, dir: String, k: Int = 16,
       nprobe: Int = 4): DataFrame = {
-    val out = ivfPersistCache.synchronized {
-      ivfPersistCache.getOrElseUpdate(s, scala.collection.mutable.Map.empty)
-        .getOrElseUpdate(s"$dir|k=$k", new Memo(() => {
-          val p = new java.io.File(sys.props("java.io.tmpdir"),
-            s"graft_ivf_index_${s.sparkContext.applicationId}_" +
-              java.lang.Integer.toHexString(dir.hashCode) + s"_k$k").getAbsolutePath
-          ivfIndexWrite(s, dir, p, k)
-          p
-        }))
-    }.get
+    val out = SessionMemo.path(s, dir, s"ivf_index_k$k")(ivfIndexWrite(s, dir, _, k))
     annIvfFrom(s, dir, out, nprobe)
   }
 
@@ -1111,18 +1033,9 @@ object QueriesLLM {
       books: IndexedSeq[IndexedSeq[IndexedSeq[Long]]],
       bn2: IndexedSeq[IndexedSeq[Long]])
 
-  private val pqModelCache =
-    new scala.collection.mutable.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String, Memo[PqModel]]]
-
   private[queries] def pqModelFor(s: SparkSession, dir: String, k: Int,
-      m: Int): PqModel = {
-    val memo = pqModelCache.synchronized {
-      pqModelCache.getOrElseUpdate(s, scala.collection.mutable.Map.empty)
-        .getOrElseUpdate(s"$dir|k=$k|m=$m", new Memo(() => pqModelBuild(s, dir, k, m)))
-    }
-    memo.get
-  }
+      m: Int): PqModel =
+    SessionMemo(s, dir, s"pq_model|k=$k|m=$m")(pqModelBuild(s, dir, k, m))
 
   /** Fits only — coarse KMeans (shared with [[annIvf]] via
     * [[ivfModelFor]]) + m per-subspace codebooks, each sample-trained
@@ -1158,8 +1071,8 @@ object QueriesLLM {
     PqModel(coarse, books, books.map(_.map(c => c.map(x => x * x).sum)))
   }
 
-  /** The built PQ index, as session-leak-safe plain data (the Memo
-    * discipline of [[minhashLshPairs]]): the per-candidate code table
+  /** The built PQ index, as session-leak-safe plain data (the
+    * [[SessionMemo]] value rule): the per-candidate code table
     * as a materialized (schema, RDD) — `cand_id, cell, codes[m],
     * approx_norm2` — plus the quantized model. Production builds an
     * ANN index ONCE and queries it many times; before r7 every
@@ -1171,21 +1084,12 @@ object QueriesLLM {
       codesRdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row],
       model: PqModel)
 
-  private val pqIndexCache =
-    new scala.collection.mutable.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String, Memo[PqIndex]]]
-
-  /** Memoized per (session, corpus, k, m) — `nprobe`/`rerank` are
-    * query-time parameters and do not key the index. Same weak-key /
-    * value-holds-no-session rules as [[lshPairsCache]].
+  /** Memoized per (session, corpus, k, m) in [[SessionMemo]] —
+    * `nprobe`/`rerank` are query-time parameters and do not key the
+    * index.
     */
-  private[graft] def pqIndexFor(s: SparkSession, dir: String, k: Int, m: Int): PqIndex = {
-    val memo = pqIndexCache.synchronized {
-      pqIndexCache.getOrElseUpdate(s, scala.collection.mutable.Map.empty)
-        .getOrElseUpdate(s"$dir|k=$k|m=$m", new Memo(() => pqIndexBuild(s, dir, k, m)))
-    }
-    memo.get
-  }
+  private[graft] def pqIndexFor(s: SparkSession, dir: String, k: Int, m: Int): PqIndex =
+    SessionMemo(s, dir, s"pq_index|k=$k|m=$m")(pqIndexBuild(s, dir, k, m))
 
   /** The un-memoized index build: one full-corpus pass assigning every
     * vector its coarse cell and its m sub-codes by integer argmin over
@@ -1417,33 +1321,16 @@ object QueriesLLM {
     pqSearch(s, dir, codes, mdl, nprobe, m, rerank)
   }
 
-  // one write per (session, corpus): the registry entry's index lives
-  // under the application id, so a stale index from an earlier round's
-  // testdata can never leak into this run's answers
-  private val pqPersistCache =
-    new scala.collection.mutable.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String, Memo[String]]]
-
   /** Registry entry: build → WRITE → LOAD → search, end to end. The
     * oracle is the same generated SQL as `x_ann_pq` — the persisted
-    * round-trip must be invisible in the answer.
+    * round-trip must be invisible in the answer. One write per
+    * (session, corpus, k, m): k and m ride the path, or a second
+    * parameterization's write would clobber the first index while its
+    * memo still serves that path.
     */
   def annIvfPqPersisted(s: SparkSession, dir: String, k: Int = 16,
       nprobe: Int = 4, m: Int = 8, rerank: Int = 256): DataFrame = {
-    val out = pqPersistCache.synchronized {
-      pqPersistCache.getOrElseUpdate(s, scala.collection.mutable.Map.empty)
-        .getOrElseUpdate(s"$dir|k=$k|m=$m", new Memo(() => {
-          // k and m ride the path: the memo key is (dir, k, m) but two
-          // parameterizations of one corpus must never share a
-          // directory, or the second write clobbers the first index
-          // while its memo still serves the stale path (r8 advice)
-          val p = new java.io.File(sys.props("java.io.tmpdir"),
-            s"graft_pq_index_${s.sparkContext.applicationId}_" +
-              java.lang.Integer.toHexString(dir.hashCode) + s"_k${k}_m$m").getAbsolutePath
-          pqIndexWrite(s, dir, p, k, m)
-          p
-        }))
-    }.get
+    val out = SessionMemo.path(s, dir, s"pq_index_k${k}_m$m")(pqIndexWrite(s, dir, _, k, m))
     annIvfPqFrom(s, dir, out, nprobe, m, rerank)
   }
 
@@ -1511,17 +1398,9 @@ object QueriesLLM {
     * 100 TB at scan speed. Rows-only (the merges are learned);
     * TextPipelineSpec pins totals against the reference tokenizer.
     */
-  // weak session keys for the same lifecycle reason as lshPairsCache
-  private val bpeMergesCache =
-    new scala.collection.mutable.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String, Memo[Seq[String]]]]
-
   def bpeApply(s: SparkSession, dir: String): DataFrame = {
-    val merges = bpeMergesCache.synchronized {
-      bpeMergesCache.getOrElseUpdate(s, scala.collection.mutable.Map.empty)
-        .getOrElseUpdate(dir,
-          new Memo(() => bpeTrain(s, dir).collect().map(_.getString(1)).toSeq))
-    }.get
+    val merges = SessionMemo(s, dir, "bpe_merges")(
+      bpeTrain(s, dir).collect().map(_.getString(1)).toSeq)
     val sym0 = concat_ws(" ", split(col("w"), ""))
     val symN = merges.foldLeft(sym0) { (c, pair) =>
       trim(regexp_replace(concat(lit(" "), c, lit(" ")),
@@ -1706,28 +1585,10 @@ object QueriesLLM {
     * edge set within a session, and a production curation run computes
     * the near-dup graph once and feeds every downstream job from it —
     * re-staging it per consumer re-pays the corpus shingle + posting
-    * self-join each time. Same weak-key/RDD-value lifecycle rules as
-    * [[lshPairsCache]] (the value must not hold a DataFrame).
+    * self-join each time. The frame lives in [[SessionMemo]].
     */
-  private val exactPairsCache =
-    new scala.collection.mutable.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[(String, Double),
-        Memo[(org.apache.spark.sql.types.StructType,
-          org.apache.spark.rdd.RDD[org.apache.spark.sql.Row])]]]
-
-  def exactJaccardPairs(s: SparkSession, dir: String, tau: Double = 0.2): DataFrame = {
-    val memo = exactPairsCache.synchronized {
-      exactPairsCache.getOrElseUpdate(s, scala.collection.mutable.Map.empty)
-        .getOrElseUpdate((dir, tau), new Memo(() => {
-          val df = exactJaccardPairsPrefix(s, dir, tau)
-          val r = df.rdd.localCheckpoint()
-          r.count() // materialize eagerly, once per key
-          (df.schema, r)
-        }))
-    }
-    val (schema, rdd) = memo.get
-    s.createDataFrame(rdd, schema)
-  }
+  def exactJaccardPairs(s: SparkSession, dir: String, tau: Double = 0.2): DataFrame =
+    SessionMemo.frame(s, dir, s"exact_pairs|tau=$tau")(exactJaccardPairsPrefix(s, dir, tau))
 
   /** The plain inverted-index build — no longer what the consumers run
     * (the memo builds [[exactJaccardPairsPrefix]] since r12), kept as

@@ -454,12 +454,13 @@ object QueriesScalar {
   val CorruptLines: Seq[String] = Seq("notanint,CORRUPT_TYPE,xx", "too,many,fields,here,5")
   private def stageCorruptCsv(s: SparkSession, dir: String): String = {
     val base = corruptCsvPath(dir)
+    // the tag in the path already names the corpus state; the marker
+    // only flags a complete staging (written last). Double-checked:
+    // re-test INSIDE the lock so two concurrent callers can't both
+    // stage (same idiom as QueriesRel.zorderedLineitem)
     val marker = java.nio.file.Paths.get(base, "_source_dir")
-    def staged = try new String(java.nio.file.Files.readAllBytes(marker)) catch { case _: Throwable => "" }
-    // double-checked: re-read the marker INSIDE the lock so two
-    // concurrent callers can't both stage (same idiom as
-    // QueriesRel.zorderedLineitem)
-    if (staged != dir) synchronized { if (staged != dir) {
+    def staged = java.nio.file.Files.exists(marker)
+    if (!staged) synchronized { if (!staged) {
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(base))
       val rows = t(s, dir, "nation")
         .select(col("n_nationkey").cast("long"), col("n_name"), col("n_regionkey").cast("long"))
@@ -492,17 +493,16 @@ object QueriesScalar {
 
   /** Two-epoch orders layout: `old/` lacks `o_orderpriority`, `new/`
     * carries it. The path is CORPUS-TAG-KEYED (r10, same hazard and fix
-    * as [[corruptCsvPath]]); the marker still records the source dir so
-    * a regenerated corpus under the same tag re-stages.
+    * as [[corruptCsvPath]]), so a regenerated corpus gets a new path.
     */
   def schemaEvoPath(dir: String): String =
     s"/tmp/graft_schevo_${Queries.stageTag(dir)}"
   def schemaEvolutionDirs(s: SparkSession, dir: String): String = {
     val loc = schemaEvoPath(dir)
     val marker = java.nio.file.Paths.get(loc, "_source_dir")
-    def staged = try new String(java.nio.file.Files.readAllBytes(marker)) catch { case _: Throwable => "" }
-    // double-checked (see stageCorruptCsv)
-    if (staged != dir) synchronized { if (staged != dir) {
+    def staged = java.nio.file.Files.exists(marker)
+    // completion flag, double-checked (see stageCorruptCsv)
+    if (!staged) synchronized { if (!staged) {
       val o = t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"),
           Queries.cents(col("o_totalprice")).as("price_cents"),

@@ -1,0 +1,82 @@
+package graft.queries
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** The one compute-once cache for per-corpus artifacts reused within a
+  * session: pair graphs, ANN models and indexes, BPE merges, the media
+  * frame. An entry is keyed by (session, dir, key) and stamped with the
+  * corpus fingerprint [[Queries.stageTag]]; a call that finds a
+  * different fingerprint (the corpus was rewritten under the same dir)
+  * replaces the entry, so a stale artifact is neither served nor left
+  * pinned beside the fresh one. `key` names the artifact and its
+  * parameters and must be unique across call sites.
+  *
+  * Lifecycle and locking rules:
+  *  - sessions are WEAK keys: when a session is dropped, its entries
+  *    (and the checkpoint blocks they pin) become collectible;
+  *  - a value must never reach its session, or the weak key stays
+  *    reachable forever. A DataFrame's QueryExecution references its
+  *    SparkSession, so frames are stored as a materialized
+  *    (schema, RDD[Row]) — an RDD references only the SparkContext —
+  *    and re-wrapped per call ([[frame]]);
+  *  - the builder closure captures the session, so the holder drops it
+  *    after the first evaluation;
+  *  - the global lock is held only long enough to install the holder;
+  *    the (possibly multi-minute) build runs under the holder's own
+  *    lock, so only callers of the same key wait.
+  */
+private[graft] object SessionMemo {
+
+  private final class Holder(val tag: String, b: () => Any) {
+    private[this] var build: () => Any = b
+    lazy val get: Any = { val r = build(); build = null; r }
+  }
+
+  private val entries = new scala.collection.mutable.WeakHashMap[SparkSession,
+    scala.collection.mutable.Map[(String, String), Holder]]
+
+  private def holder(s: SparkSession, dir: String, key: String,
+      build: String => Any): Holder = {
+    val tag = Queries.stageTag(dir) // file listing: outside the lock
+    entries.synchronized {
+      val m = entries.getOrElseUpdate(s, scala.collection.mutable.Map.empty)
+      m.get((dir, key)).filter(_.tag == tag).getOrElse {
+        val h = new Holder(tag, () => build(tag))
+        m((dir, key)) = h
+        h
+      }
+    }
+  }
+
+  /** The value built once per (session, corpus fingerprint, key). */
+  def apply[T](s: SparkSession, dir: String, key: String)(build: => T): T =
+    holder(s, dir, key, _ => build).get.asInstanceOf[T]
+
+  /** A frame materialized once per (session, corpus fingerprint, key)
+    * by an eager localCheckpoint (not cache: checkpoint blocks are
+    * released by the ContextCleaner once the entry is dropped).
+    */
+  def frame(s: SparkSession, dir: String, key: String)(build: => DataFrame): DataFrame = {
+    val (schema, rdd) = apply(s, dir, key) {
+      val df = build
+      val r = df.rdd.localCheckpoint()
+      r.count()
+      (df.schema, r)
+    }
+    s.createDataFrame(rdd, schema)
+  }
+
+  /** A directory written once per (session, corpus fingerprint, key):
+    * `write` receives a tmpdir path carrying the application id, the
+    * fingerprint and `key`, so a stale index from another run or
+    * another corpus never shares it; `key` must carry every parameter
+    * the artifact depends on.
+    */
+  def path(s: SparkSession, dir: String, key: String)(write: String => Unit): String =
+    holder(s, dir, key, tag => {
+      val p = new java.io.File(sys.props("java.io.tmpdir"),
+        s"graft_${key}_${s.sparkContext.applicationId}_$tag").getAbsolutePath
+      write(p)
+      p
+    }).get.asInstanceOf[String]
+}
