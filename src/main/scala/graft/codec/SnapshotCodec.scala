@@ -1,6 +1,7 @@
 package graft.codec
 
 import java.io.InputStream
+import java.nio.charset.StandardCharsets
 
 /** One decoded unspent output — the row the engine's `utxo` source emits.
   * Mirrors the output relation of the reference
@@ -112,16 +113,7 @@ object SnapshotCodec {
   * `Txid`'s `Display`, `/root/reference/src/main.rs:232`).
   */
 object TxidHex {
-  def render(raw32: Array[Byte]): String = {
-    val sb = new java.lang.StringBuilder(64)
-    var i = raw32.length - 1
-    while (i >= 0) {
-      val b = raw32(i) & 0xff
-      sb.append(Hex.digits(b >>> 4)).append(Hex.digits(b & 0x0f))
-      i -= 1
-    }
-    sb.toString
-  }
+  def render(raw32: Array[Byte]): String = Hex.latin1(raw32, reversed = true)
 
   /** Inverse of [[render]] — test-side, for fixture generation. */
   def parse(hex64: String): Array[Byte] = Hex.decode(hex64).reverse
@@ -145,18 +137,36 @@ object UnsignedBytes extends ((Array[Byte], Array[Byte]) => Int) with Serializab
 }
 
 object Hex {
-  private[codec] val digits = "0123456789abcdef".toCharArray
 
-  def encode(bytes: Array[Byte]): String = {
-    val sb = new java.lang.StringBuilder(bytes.length * 2)
+  /** The two lowercase ASCII digits of every byte value, high nibble
+    * first: entry `2 * b` and `2 * b + 1` for byte `b`.
+    */
+  private val pairs: Array[Byte] = {
+    val digits = "0123456789abcdef".getBytes(StandardCharsets.US_ASCII)
+    val t = new Array[Byte](512)
+    var b = 0
+    while (b < 256) { t(2 * b) = digits(b >>> 4); t(2 * b + 1) = digits(b & 0x0f); b += 1 }
+    t
+  }
+
+  /** The one hex kernel behind [[encode]] and [[TxidHex.render]]: two
+    * table lookups per byte into a `byte[]` that becomes a Latin-1
+    * `String` in one copy. `reversed` renders the last byte first.
+    */
+  private[codec] def latin1(bytes: Array[Byte], reversed: Boolean): String = {
+    val n = bytes.length
+    val out = new Array[Byte](2 * n)
     var i = 0
-    while (i < bytes.length) {
-      val b = bytes(i) & 0xff
-      sb.append(digits(b >>> 4)).append(digits(b & 0x0f))
+    while (i < n) {
+      val b = (bytes(if (reversed) n - 1 - i else i) & 0xff) << 1
+      out(2 * i) = pairs(b)
+      out(2 * i + 1) = pairs(b + 1)
       i += 1
     }
-    sb.toString
+    new String(out, StandardCharsets.ISO_8859_1)
   }
+
+  def encode(bytes: Array[Byte]): String = latin1(bytes, reversed = false)
 
   def decode(hex: String): Array[Byte] = {
     require(hex.length % 2 == 0, "odd-length hex string")

@@ -177,6 +177,12 @@ class CodecSpec extends AnyFunSuite {
     assert(hex.startsWith("1f1e1d"))
     assert(hex.endsWith("020100"))
     assert(TxidHex.parse(hex).toSeq == raw.toSeq)
+    // the shared hex kernel over every byte value, both directions
+    val all = Array.tabulate[Byte](256)(_.toByte)
+    val want = (0 until 256).map(b => f"$b%02x")
+    assert(Hex.encode(all) == want.mkString)
+    assert(TxidHex.render(all) == want.reverse.mkString)
+    assert(Hex.encode(Array.emptyByteArray) == "")
   }
 
   // --- snapshot end-to-end --------------------------------------------

@@ -49,6 +49,44 @@ class UtxoSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("a snapshot cut inside a skipped oversized script fails in the codec, the indexer and the source") {
+    // the last script (20,000 bytes) is over MaxScriptSize, so decode and
+    // index skip it; cutting 5,000 bytes off the end must not let the
+    // skip run past EOF and report success
+    val big = Array.fill[Byte](20000)(0x42)
+    val groups = Seq(
+      SnapshotGen.Group("44" * 32, Seq(SnapshotGen.GenCoin(0, 5, coinbase = false, 100, knownScript))),
+      SnapshotGen.Group("55" * 32, Seq(SnapshotGen.GenCoin(1, 6, coinbase = false, 200, big))))
+    val bytes = {
+      val out = new java.io.ByteArrayOutputStream()
+      SnapshotGen.write(out, groups)
+      out.toByteArray
+    }
+    val cut = new java.io.File(tmp, "cut-in-skip.bin")
+    Files.write(cut.toPath, java.util.Arrays.copyOf(bytes, bytes.length - 5000))
+    val conf = UtxoTable.hadoopConf()
+
+    val in = SnapshotIndexer.open(cut.getAbsolutePath, conf)
+    try {
+      val r = new ByteReader(in)
+      val h = SnapshotCodec.readHeader(r)
+      intercept[java.io.EOFException](SnapshotCodec.coins(r, h).foreach(_ => ()))
+      assert(r.bytesRead == cut.length(), "bytesRead must not pass the end of the file")
+    } finally in.close()
+
+    intercept[java.io.EOFException] {
+      SnapshotIndexer.index(cut.getAbsolutePath, 64L * 1024, conf, sidecar = false)
+    }
+
+    def causes(t: Throwable): Seq[Throwable] = if (t == null) Nil else t +: causes(t.getCause)
+    for (indexed <- Seq("true", "false")) {
+      val e = intercept[Exception] {
+        spark.read.format("utxo").option("index", indexed).load(cut.getAbsolutePath).count()
+      }
+      assert(causes(e).exists(_.isInstanceOf[java.io.EOFException]), s"index=$indexed: $e")
+    }
+  }
+
   /** Snapshot: 3 coins with a known P2PKH script at heights 30/10/20 in
     * distinct txid groups, plus 2000 synthetic noise coins.
     */
@@ -261,6 +299,53 @@ class UtxoSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
       .collect()
     assert(unsortedFiles.forall(identity))
+  }
+
+  /** What `readConverted` did before it resolved the schema itself:
+    * Spark's schema inference, then the unsigned columns cast to long.
+    */
+  private def inferredRead(path: String): org.apache.spark.sql.DataFrame = {
+    val df = spark.read.parquet(path)
+    Seq("vout", "height", "amount").foldLeft(df)((d, c) => d.withColumn(c, col(c).cast("long")))
+  }
+
+  test("readConverted matches schema inference on stamped and unstamped outputs") {
+    val stamped = new java.io.File(tmp, "rc-stamped").getAbsolutePath
+    UtxoConvert.convert(spark, fixturePath, stamped, partitions = 4)
+    val unstamped = new java.io.File(tmp, "rc-unstamped").getAbsolutePath
+    spark.read.format("utxo").load(fixturePath).write.mode("overwrite").parquet(unstamped)
+    def point(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+      df.filter(col("script") === lit(knownScript)).orderBy("height").collect().toSeq
+        .map(_.toSeq.map { case b: Array[Byte] => b.toSeq; case v => v })
+    for (dir <- Seq(stamped, unstamped)) {
+      val got = UtxoConvert.readConverted(spark, dir)
+      val want = inferredRead(dir)
+      assert(got.schema == want.schema, dir)
+      assert(point(got) == point(want), dir)
+      assert(point(got).size == 3)
+    }
+  }
+
+  test("readConverted builds its DataFrame without running a Spark job") {
+    val dir = new java.io.File(tmp, "rc-nojob").getAbsolutePath
+    UtxoConvert.convert(spark, fixturePath, dir, partitions = 2)
+    val sc = spark.sparkContext
+    val group = "read-converted-no-job"
+    sc.setJobGroup(group, "schema resolution")
+    try {
+      val df = UtxoConvert.readConverted(spark, dir)
+      assert(df.schema("height").dataType == org.apache.spark.sql.types.LongType)
+    } finally sc.clearJobGroup()
+    assert(sc.statusTracker.getJobIdsForGroup(group).isEmpty)
+  }
+
+  test("readConverted on a directory without data files fails like spark.read.parquet") {
+    val dir = new java.io.File(tmp, "rc-success-only")
+    dir.mkdirs()
+    new java.io.File(dir, "_SUCCESS").createNewFile()
+    val want = intercept[Exception](spark.read.parquet(dir.getAbsolutePath))
+    val got = intercept[Exception](UtxoConvert.readConverted(spark, dir.getAbsolutePath))
+    assert(got.getClass == want.getClass)
   }
 
   test("row groups cap at exactly the reference's 64Ki-row granularity") {
