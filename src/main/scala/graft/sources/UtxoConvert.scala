@@ -7,6 +7,7 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
 /** The conversion pipeline (SURVEY.md §2.1 R2, §3.1): snapshot →
@@ -30,9 +31,11 @@ import org.apache.spark.sql.types.StructType
   *  - page-level column statistics / column index are parquet-mr
   *    defaults, giving the same page-skipping DuckDB exploits.
   *
-  * The footer `sortingColumns` field is not writable through Spark's
-  * public API; documented omission (readers skip via min/max stats, not
-  * that field).
+  * The footer `sortingColumns` field (reference `src/main.rs:212`)
+  * and the UINT_64 annotations on vout/height/amount are not writable
+  * through Spark's public API: every convert stamps them into each file
+  * inside the write task's commit, before the file is published
+  * ([[StampingOutputCommitter]], [[graft.tools.FooterSort]]).
   */
 object UtxoConvert {
 
@@ -206,28 +209,6 @@ object UtxoConvert {
     */
   final case class ConvertStats(rows: Long, maxHeight: Long)
 
-  /** A derived session that carries the stamping commit protocol:
-    * shares the caller's SparkContext, inherits the caller's RUNTIME
-    * SQL conf (newSession starts from spark-defaults, not the caller's
-    * live changes — shuffle partitions etc. must carry over), and sets
-    * `spark.sql.sources.commitProtocolClass` ONLY here. Concurrent
-    * writes on the caller's session provably use the stock protocol —
-    * its conf is never mutated (StampingConvertSpec pins both sides).
-    */
-  private[graft] def stampingSession(spark: SparkSession): SparkSession = {
-    val s2 = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      // static confs (spark.sql.extensions, warehouse dir, ...) are
-      // fixed at context creation and reject runtime set — skip them;
-      // they are shared through the context anyway
-      try s2.conf.set(k, v)
-      catch { case _: org.apache.spark.sql.AnalysisException => () }
-    }
-    s2.conf.set(StampingCommitProtocol.ConfKey,
-      classOf[StampingCommitProtocol].getName)
-    s2
-  }
-
   def convert(spark: SparkSession, input: String, output: String,
       partitions: Int = 0, rangePartition: Boolean = false,
       blockSizeBytes: Long = 16L * 1024 * 1024,
@@ -268,17 +249,7 @@ object UtxoConvert {
     // the snapshot while every core stays busy
     val coinsPerSplit = math.max(64L * 1024,
       totalCoins / (8L * math.max(n, spark.sparkContext.defaultParallelism)))
-    val outUri = new org.apache.hadoop.fs.Path(output).toUri
-    val localOut = outUri.getScheme == null || outUri.getScheme == "file"
-    // Session-scoped stamping-protocol selection (r7 design nit): the
-    // commit-protocol class is a SESSION conf, so setting it on the
-    // caller's session — even set/restore around the write — would leak
-    // into any CONCURRENT write on that session. Non-local converts
-    // therefore run the whole pipeline on a derived session (shared
-    // SparkContext, cloned runtime conf) that alone carries the
-    // protocol; the caller's session conf is never touched.
-    val session = if (localOut) spark else stampingSession(spark)
-    val df = session.read.format("utxo")
+    val df = spark.read.format("utxo")
       .option("coinsPerSplit", coinsPerSplit.toString)
       .load(input)
     // indexed scans (source default) already plan ~64Ki-coin partitions:
@@ -312,7 +283,7 @@ object UtxoConvert {
         // binary search against the sampled bounds inside whole-stage
         // codegen — see graft.functions.ScriptRouteExpr
         df.repartition(n,
-          graft.functions.GraftFunctions.scriptRoute(session, bounds, tokens, col("script")))
+          graft.functions.GraftFunctions.scriptRoute(spark, bounds, tokens, col("script")))
         }
         }
       } else df
@@ -362,28 +333,17 @@ object UtxoConvert {
     // write the field, so the convert stamps it itself — plus UINT_64
     // logical annotations on vout/height/amount (the reference schema
     // declares them UInt64, src/main.rs:199-206; values are
-    // non-negative so signed page order == unsigned order).
-    //  - local outputs: post-write in-place tail rewrite
-    //    (RandomAccessFile — metadata-only cost);
-    //  - everything else (HDFS/S3A/...): the stamp RIDES THE WRITE via
-    //    StampingCommitProtocol — each task stamps its staged files in
-    //    commitTask while it still owns the bytes, so the table is
-    //    never re-read+re-written post-hoc (stampFs's copy-rewrite is
-    //    probe-measured at 12× the in-place cost; at 100 TB that is a
-    //    second full pass). Total bytes written stay ≈ 1× output size
-    //    on truncate+append stores.
-    if (localOut) {
-      writer2.parquet(output)
-      graft.tools.FooterSort.stamp(outUri.getPath, Seq("script"),
-        unsigned = Seq("vout", "height", "amount"))
-    } else {
-      // the stamping protocol rides the DERIVED session the pipeline was
-      // built on — nothing to set or restore on the caller's session
-      writer2
-        .option(StampingCommitProtocol.SortedKey, "script")
-        .option(StampingCommitProtocol.UnsignedKey, "vout,height,amount")
-        .parquet(output)
-    }
+    // non-negative so signed page order == unsigned order). The stamp
+    // rides the write on every filesystem: each task stamps its files
+    // in its commit, before they are published, so `_SUCCESS` only
+    // ever marks a stamped table. The committer is a per-write option —
+    // the caller's session conf is never touched.
+    writer2
+      .option(SQLConf.PARQUET_OUTPUT_COMMITTER_CLASS.key,
+        classOf[StampingOutputCommitter].getName)
+      .option(StampingOutputCommitter.SortedKey, "script")
+      .option(StampingOutputCommitter.UnsignedKey, "vout,height,amount")
+      .parquet(output)
     val m = obs.get
     def longOf(k: String): Long =
       m.get(k).collect { case v: java.lang.Number => v.longValue() }.getOrElse(0L)

@@ -10,13 +10,13 @@ import org.apache.hadoop.util.Progressable
 /** A Hadoop `FileSystem` measurement double with a non-`file` scheme
   * (`graftdfs://`), backed by `RawLocalFileSystem`, that counts every
   * byte written and read. It exists to PIN the convert's write
-  * amplification: with the footer stamp riding the commit protocol
-  * ([[graft.sources.StampingCommitProtocol]]) a convert to a DFS
+  * amplification: with the footer stamp riding each task's commit
+  * ([[graft.sources.StampingOutputCommitter]]) a convert to a DFS
   * target must write ≈ 1× the output size and read back only footers —
   * not stream the whole table a second time. Raw local supports
-  * truncate+append (like HDFS), so this exercises the in-place staged
-  * stamp; [[CountingObjectStore]] (`graftobj://`) advertises neither
-  * capability (like S3A) and pins the copy fallback.
+  * truncate+append (like HDFS), so this exercises the in-place
+  * [[FooterSort.stampStaged]]; [[CountingObjectStore]] (`graftobj://`)
+  * advertises neither capability (like S3A) and pins its copy fallback.
   *
   * Register with `fs.graftdfs.impl` / `fs.graftobj.impl`; counters are
   * JVM-global (local-mode executors share them) — reset around the

@@ -1,36 +1,43 @@
 package graft.tools
 
+import java.io.IOException
+
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{ChecksumFileSystem, CommonPathCapabilities, FileSystem, Path}
 import org.apache.parquet.format.{ConvertedType, IntType, LogicalType, SortingColumn, Util}
 
-/** Post-write footer rewrite stamping `sorting_columns` into every row
-  * group's metadata — the reference writes this field natively
+/** Footer rewrite stamping `sorting_columns` into every row group's
+  * metadata — the reference writes this field natively
   * (`/root/reference/src/main.rs:212`) but Spark's public writer API
-  * cannot, so the convert re-opens each local output file and rewrites
-  * the thrift footer in place (the data pages are untouched; only the
-  * tail [footer][len][PAR1] is re-serialized).
+  * cannot, so the thrift footer is rewritten after Parquet closes the
+  * file (the data pages are untouched; only the tail
+  * [footer][len][PAR1] is re-serialized).
   *
-  * Two paths, same footer mutation:
-  *  - [[stamp]]/[[stampFile]]: in-place tail rewrite via
-  *    `RandomAccessFile` — zero data movement, local files only (the
-  *    convert's default for `file://` outputs).
-  *  - [[stampFs]]/[[stampFsFile]]: Hadoop-`FileSystem` copy-rewrite —
-  *    stream the data pages to a staged sibling, append the rewritten
-  *    footer, publish with the `s_upsert` rename idiom (live → _old,
-  *    stage → live, drop _old; crash-recoverable at every step). Works
-  *    on HDFS/S3A/any Hadoop FS, where an in-place truncate either
-  *    doesn't exist (object stores) or rewrites a whole block anyway.
-  *    Without this path the sortingColumns/UINT_64 stamp silently did
-  *    not apply off the local FS — a layout regression at exactly the
-  *    scale the engine targets.
+  * One path: [[stampStaged]] stamps one file through its Hadoop
+  * `FileSystem`. The convert calls it from
+  * [[graft.sources.StampingOutputCommitter]] inside each write task's
+  * commit, before the file is published, on every filesystem; [[stamp]]
+  * loops it over an existing output directory.
+  *  - Filesystems with truncate+append (HDFS, raw local): truncate off
+  *    the old footer and append the new one. Zero data movement.
+  *  - Everything else (object stores): stream the data pages once to a
+  *    sibling, append the new tail, swap.
+  * A `ChecksumFileSystem` (the local `file://` filesystem) is stamped
+  * through its raw filesystem, and the file's stale `.crc` sidecar is
+  * dropped; the local filesystem reads fine without one.
+  *
   * Readers that exploit sortedness (DuckDB, query planners) read the
   * field; readers that don't ignore it — stamped files stay fully
   * compatible.
   */
 object FooterSort {
 
-  private val MagicTail = "PAR1".getBytes("US-ASCII")
+  private val Magic = "PAR1".getBytes("US-ASCII")
+
+  /** Default Hadoop conf for [[stamp]] and the `java.io.File` readers. */
+  private lazy val defaultConf = new Configuration()
 
   /** The shared footer mutation: parse the thrift footer, stamp
     * sorting_columns on every row group (and optionally UINT_64
@@ -75,7 +82,8 @@ object FooterSort {
     out.toByteArray
   }
 
-  /** Stamp all .parquet files in `dir`; returns files stamped.
+  /** Stamp all .parquet files directly in `dir` (any Hadoop path; a
+    * bare path is local); returns files stamped.
     *
     * `unsigned` columns additionally get the UINT_64 logical/converted
     * annotation on their INT64 leaves — the reference schema declares
@@ -85,246 +93,122 @@ object FooterSort {
     * value is non-negative, so the signed byte order the pages and
     * min/max statistics were written with coincides with the unsigned
     * order — data pages, dictionaries, and stats all stay valid.
+    * Re-stamping a stamped file rewrites the same footer.
     */
   def stamp(dir: String, sortedBy: Seq[String],
       unsigned: Seq[String] = Seq.empty): Int = {
-    val files = new java.io.File(dir).listFiles()
-      .filter(_.getName.endsWith(".parquet"))
-    files.foreach(stampFile(_, sortedBy, unsigned))
-    files.length
-  }
-
-  def stampFile(f: java.io.File, sortedBy: Seq[String],
-      unsigned: Seq[String] = Seq.empty): Unit = {
-    val raf = new java.io.RandomAccessFile(f, "rw")
-    try {
-      val len = raf.length()
-      raf.seek(len - 8)
-      val tail = new Array[Byte](8)
-      raf.readFully(tail)
-      require(tail.slice(4, 8).sameElements(MagicTail), s"not a parquet file: $f")
-      val footerLen = (tail(0) & 0xff) | ((tail(1) & 0xff) << 8) |
-        ((tail(2) & 0xff) << 16) | ((tail(3) & 0xff) << 24)
-      val footerStart = len - 8 - footerLen
-      raf.seek(footerStart)
-      val footerBytes = new Array[Byte](footerLen)
-      raf.readFully(footerBytes)
-      val newFooter = rewriteFooter(footerBytes, sortedBy, unsigned)
-      raf.seek(footerStart)
-      raf.write(newFooter)
-      raf.write(Array[Byte](
-        (newFooter.length & 0xff).toByte,
-        ((newFooter.length >> 8) & 0xff).toByte,
-        ((newFooter.length >> 16) & 0xff).toByte,
-        ((newFooter.length >> 24) & 0xff).toByte))
-      raf.write(MagicTail)
-      raf.setLength(footerStart + newFooter.length + 8)
-    } finally raf.close()
-    // the rewrite invalidates Hadoop's local CRC sidecar; drop it (the
-    // LocalFileSystem reads fine without one — same as any externally
-    // produced file)
-    val crc = new java.io.File(f.getParentFile, "." + f.getName + ".crc")
-    if (crc.exists()) crc.delete()
-  }
-
-  /** DFS-safe stamp: all `.parquet` files under `dir` through the
-    * Hadoop `FileSystem` for `dir`'s scheme. Returns files stamped.
-    */
-  def stampFs(conf: org.apache.hadoop.conf.Configuration, dir: String,
-      sortedBy: Seq[String], unsigned: Seq[String] = Seq.empty): Int = {
-    import org.apache.hadoop.fs.Path
     val d = new Path(dir)
-    val fs = d.getFileSystem(conf)
-    val listed = fs.listStatus(d)
-    // orphan recovery BEFORE listing the work set: a prior stamp that
-    // died between its two publish renames leaves only `x.parquet._old`
-    // — without this sweep the live name isn't listed and the file
-    // would silently never be recovered or stamped
-    listed.filter(st => st.isFile && st.getPath.getName.endsWith("._old"))
-      .foreach { st =>
-        val live = new Path(d, st.getPath.getName.stripSuffix("._old"))
-        if (!fs.exists(live)) {
-          if (!fs.rename(st.getPath, live))
-            throw new java.io.IOException(s"orphan recovery ${st.getPath} -> $live failed")
-        }
-      }
-    // ... and sweep staging leftovers: a stamp that died mid-copy (or
-    // whose publish rename failed) leaves `.<name>.stamp.tmp` behind —
-    // hidden from parquet readers, but on object stores billed per
-    // object it accumulates forever, and no later stamp of a DIFFERENT
-    // file would ever clean it
-    listed.filter(st => st.isFile && st.getPath.getName.endsWith(".stamp.tmp"))
-      .foreach(st => fs.delete(st.getPath, false))
+    val fs = d.getFileSystem(defaultConf)
     val files = fs.listStatus(d)
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-    files.foreach(st => stampFsFile(conf, st.getPath, sortedBy, unsigned))
+    files.foreach(st => stampStaged(fs, st.getPath, sortedBy, unsigned))
     files.length
   }
 
-  /** Copy-rewrite one file through the Hadoop `FileSystem` API: stream
-    * the data pages (bounded buffer, never whole-file memory) into a
-    * staged sibling, append the rewritten footer + length + magic, then
-    * publish with the two-rename idiom (live → `_old`, stage → live,
-    * drop `_old`) — the same crash-recoverable publish `s_upsert` uses,
-    * because plain `rename` over an existing destination fails on HDFS
-    * and nothing on an object store truncates in place. A crash between
-    * the renames leaves `_old` as the only complete copy; the recovery
-    * preamble restores it before restaging, so no crash point loses the
-    * file.
+  /** Stamp one file that no reader or writer is using — a task's staged
+    * output inside its commit, or a file of an output being re-stamped.
+    * Either path may leave the file torn if the process dies mid-stamp;
+    * inside a task commit that just fails the attempt and Spark restages
+    * the whole file.
+    *
+    *  - FS advertises truncate+append path capabilities (HDFS, raw
+    *    local): in-place tail rewrite — truncate off the old footer,
+    *    append the new one. The capability probe runs BEFORE any
+    *    mutation, so an unsupported store never sees a half-truncated
+    *    file.
+    *  - otherwise (object stores): stream the data pages once to a
+    *    sibling and swap.
     */
-  def stampFsFile(conf: org.apache.hadoop.conf.Configuration,
-      file: org.apache.hadoop.fs.Path, sortedBy: Seq[String],
-      unsigned: Seq[String] = Seq.empty): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = file.getFileSystem(conf)
-    val old = new Path(file.getParent, file.getName + "._old")
-    // crash recovery FIRST: a prior stamp that died after `live → _old`
-    // left `_old` as the only complete copy — restore it before reading
-    if (!fs.exists(file) && fs.exists(old)) {
-      if (!fs.rename(old, file))
-        throw new java.io.IOException(s"recovery rename $old -> $file failed")
-    } else if (fs.exists(old)) {
-      fs.delete(old, false) // stale leftover from a completed publish
-    }
+  def stampStaged(fs: FileSystem, file: Path, sortedBy: Seq[String],
+      unsigned: Seq[String]): Unit = fs match {
+    case cfs: ChecksumFileSystem =>
+      // the checksummed local FS neither truncates nor appends (Hive's
+      // ProxyLocalFileSystem still advertises truncate): stamp the raw
+      // file and drop the sidecar the rewrite invalidates
+      val raw = cfs.getRawFileSystem
+      stampStaged(raw, file, sortedBy, unsigned)
+      raw.delete(cfs.getChecksumFile(file), false)
+    case _ =>
+      val (footerStart, footer) = readFooterBytes(fs, file)
+      val tail = tailOf(rewriteFooter(footer, sortedBy, unsigned))
+      if (fs.hasPathCapability(file, CommonPathCapabilities.FS_TRUNCATE) &&
+          fs.hasPathCapability(file, CommonPathCapabilities.FS_APPEND)) {
+        if (!fs.truncate(file, footerStart)) {
+          // async truncate (HDFS off-block-boundary lease recovery): the
+          // call returns false and the shrink completes in the background
+          var tries = 0
+          while (fs.getFileStatus(file).getLen != footerStart && tries < 600) {
+            Thread.sleep(50); tries += 1
+          }
+          if (fs.getFileStatus(file).getLen != footerStart)
+            throw new IOException(s"truncate of $file to $footerStart did not complete")
+        }
+        val out = fs.append(file)
+        try out.write(tail) finally out.close()
+      } else {
+        // single-pass copy: data pages streamed once, new tail appended,
+        // then swap. delete+rename is safe here precisely because the
+        // file is staged — nothing reads it until the commit publishes it
+        val tmp = new Path(file.getParent, "." + file.getName + ".stamp.tmp")
+        val src = fs.open(file)
+        try {
+          val out = fs.create(tmp, true)
+          try {
+            val buf = new Array[Byte](1 << 20)
+            var remaining = footerStart
+            while (remaining > 0) {
+              val n = src.read(buf, 0, math.min(buf.length.toLong, remaining).toInt)
+              if (n <= 0)
+                throw new IOException(s"unexpected EOF copying $file at ${footerStart - remaining}")
+              out.write(buf, 0, n)
+              remaining -= n
+            }
+            out.write(tail)
+          } finally out.close()
+        } finally src.close()
+        if (!fs.delete(file, false) || !fs.rename(tmp, file)) {
+          fs.delete(tmp, false)
+          throw new IOException(s"staged stamp swap $tmp -> $file failed")
+        }
+      }
+  }
+
+  /** The one tail reader: (footer start offset, footer bytes) of
+    * `file`, after checking the trailing magic and that the footer
+    * length fits between the leading magic and the tail. A file that
+    * fails either check raises an `IOException` naming it.
+    */
+  private def readFooterBytes(fs: FileSystem, file: Path): (Long, Array[Byte]) = {
     val len = fs.getFileStatus(file).getLen
-    require(len > 12, s"not a parquet file: $file")
-    val stage = new Path(file.getParent, "." + file.getName + ".stamp.tmp")
+    def corrupt(why: String) =
+      new IOException(s"not a parquet file: $file ($why, length $len)")
+    if (len < 12) throw corrupt("too short")
     val in = fs.open(file)
     try {
       val tail = new Array[Byte](8)
       in.readFully(len - 8, tail)
-      require(tail.slice(4, 8).sameElements(MagicTail), s"not a parquet file: $file")
+      if (!tail.slice(4, 8).sameElements(Magic)) throw corrupt("bad tail magic")
       val footerLen = (tail(0) & 0xff) | ((tail(1) & 0xff) << 8) |
         ((tail(2) & 0xff) << 16) | ((tail(3) & 0xff) << 24)
+      if (footerLen <= 0 || footerLen > len - 12)
+        throw corrupt(s"footer length $footerLen out of range")
       val footerStart = len - 8 - footerLen
-      val footerBytes = new Array[Byte](footerLen)
-      in.readFully(footerStart, footerBytes)
-      val newFooter = rewriteFooter(footerBytes, sortedBy, unsigned)
-
-      in.seek(0)
-      val out = fs.create(stage, true)
-      try {
-        val buf = new Array[Byte](1 << 20)
-        var remaining = footerStart
-        while (remaining > 0) {
-          val n = in.read(buf, 0, math.min(buf.length.toLong, remaining).toInt)
-          require(n > 0, s"unexpected EOF copying $file at ${footerStart - remaining}")
-          out.write(buf, 0, n)
-          remaining -= n
-        }
-        out.write(newFooter)
-        out.write(Array[Byte](
-          (newFooter.length & 0xff).toByte,
-          ((newFooter.length >> 8) & 0xff).toByte,
-          ((newFooter.length >> 16) & 0xff).toByte,
-          ((newFooter.length >> 24) & 0xff).toByte))
-        out.write(MagicTail)
-      } finally out.close()
+      val footer = new Array[Byte](footerLen)
+      in.readFully(footerStart, footer)
+      (footerStart, footer)
     } finally in.close()
-    // publish: live → _old, stage → live, drop _old. Failure paths
-    // drop the staged copy — a completed-but-unpublished stage is just
-    // a re-derivable artifact, and leaving it behind leaks storage
-    if (!fs.rename(file, old)) {
-      fs.delete(stage, false)
-      throw new java.io.IOException(s"publish rename $file -> $old failed")
-    }
-    if (!fs.rename(stage, file)) {
-      fs.rename(old, file) // best-effort rollback to the unstamped copy
-      fs.delete(stage, false)
-      throw new java.io.IOException(s"publish rename $stage -> $file failed")
-    }
-    fs.delete(old, false)
   }
 
-  /** Stamp a task-owned STAGED file — one that is not yet committed or
-    * visible to readers. This is the path that lets the stamp ride the
-    * convert itself ([[graft.sources.StampingCommitProtocol]]): each
-    * write task stamps its own staged outputs inside `commitTask`,
-    * while the task still owns the bytes, so a 100 TB convert is never
-    * re-read and re-written a second time (the standalone `stampFs`
-    * copy-rewrite is probe-measured at 12× the in-place cost).
-    *
-    *  - FS advertises truncate+append path capabilities (HDFS, raw
-    *    local): in-place tail rewrite — truncate off the old footer,
-    *    append the new one. Zero data movement. The capability probe
-    *    runs BEFORE any mutation, so an unsupported store never sees a
-    *    half-truncated file.
-    *  - otherwise (object stores): stream the data pages once to a
-    *    sibling and swap. Still pre-commit and executor-distributed.
-    *
-    * No publish/rollback dance on either path: a crash mid-stamp just
-    * fails the task attempt and Spark restages the whole file.
-    */
-  def stampStaged(conf: org.apache.hadoop.conf.Configuration,
-      file: org.apache.hadoop.fs.Path, sortedBy: Seq[String],
-      unsigned: Seq[String]): Unit =
-    stampStaged(file.getFileSystem(conf), file, sortedBy, unsigned)
+  /** The one tail writer: footer ++ little-endian length ++ magic. */
+  private def tailOf(footer: Array[Byte]): Array[Byte] = {
+    val n = footer.length
+    footer ++ Array[Byte](n.toByte, (n >> 8).toByte, (n >> 16).toByte, (n >> 24).toByte) ++ Magic
+  }
 
-  def stampStaged(fs: org.apache.hadoop.fs.FileSystem,
-      file: org.apache.hadoop.fs.Path, sortedBy: Seq[String],
-      unsigned: Seq[String]): Unit = {
-    import org.apache.hadoop.fs.{CommonPathCapabilities, Path}
-    val len = fs.getFileStatus(file).getLen
-    require(len > 12, s"not a parquet file: $file")
-    val in = fs.open(file)
-    val (footerStart, newFooter) =
-      try {
-        val tail = new Array[Byte](8)
-        in.readFully(len - 8, tail)
-        require(tail.slice(4, 8).sameElements(MagicTail), s"not a parquet file: $file")
-        val footerLen = (tail(0) & 0xff) | ((tail(1) & 0xff) << 8) |
-          ((tail(2) & 0xff) << 16) | ((tail(3) & 0xff) << 24)
-        val fStart = len - 8 - footerLen
-        val footerBytes = new Array[Byte](footerLen)
-        in.readFully(fStart, footerBytes)
-        (fStart, rewriteFooter(footerBytes, sortedBy, unsigned))
-      } finally in.close()
-    val tailBytes = newFooter ++ Array[Byte](
-      (newFooter.length & 0xff).toByte,
-      ((newFooter.length >> 8) & 0xff).toByte,
-      ((newFooter.length >> 16) & 0xff).toByte,
-      ((newFooter.length >> 24) & 0xff).toByte) ++ MagicTail
-    val inPlace =
-      fs.hasPathCapability(file, CommonPathCapabilities.FS_TRUNCATE) &&
-        fs.hasPathCapability(file, CommonPathCapabilities.FS_APPEND)
-    if (inPlace) {
-      if (!fs.truncate(file, footerStart)) {
-        // async truncate (HDFS off-block-boundary lease recovery): the
-        // call returns false and the shrink completes in the background
-        var tries = 0
-        while (fs.getFileStatus(file).getLen != footerStart && tries < 600) {
-          Thread.sleep(50); tries += 1
-        }
-        require(fs.getFileStatus(file).getLen == footerStart,
-          s"truncate of $file to $footerStart did not complete")
-      }
-      val out = fs.append(file)
-      try out.write(tailBytes) finally out.close()
-    } else {
-      // single-pass copy: data pages streamed once, new tail appended,
-      // then swap. delete+rename is safe here precisely because the
-      // file is staged — nothing reads it until the commit publishes it
-      val tmp = new Path(file.getParent, "." + file.getName + ".stamp.tmp")
-      val src = fs.open(file)
-      try {
-        val out = fs.create(tmp, true)
-        try {
-          val buf = new Array[Byte](1 << 20)
-          var remaining = footerStart
-          while (remaining > 0) {
-            val n = src.read(buf, 0, math.min(buf.length.toLong, remaining).toInt)
-            require(n > 0, s"unexpected EOF copying $file at ${footerStart - remaining}")
-            out.write(buf, 0, n)
-            remaining -= n
-          }
-          out.write(tailBytes)
-        } finally out.close()
-      } finally src.close()
-      if (!fs.delete(file, false) || !fs.rename(tmp, file)) {
-        fs.delete(tmp, false)
-        throw new java.io.IOException(s"staged stamp swap $tmp -> $file failed")
-      }
-    }
+  private def readFooter(file: java.io.File): org.apache.parquet.format.FileMetaData = {
+    val fs = FileSystem.getLocal(defaultConf).getRawFileSystem
+    val footer = readFooterBytes(fs, new Path(file.toURI))._2
+    Util.readFileMetaData(new java.io.ByteArrayInputStream(footer))
   }
 
   /** Read back (leaf name → converted-type name) for audit/spec. */
@@ -332,22 +216,6 @@ object FooterSort {
     val md = readFooter(file)
     md.getSchema.asScala.drop(1).map(se =>
       se.getName -> Option(se.getConverted_type).map(_.name).getOrElse("")).toMap
-  }
-
-  private def readFooter(file: java.io.File): org.apache.parquet.format.FileMetaData = {
-    val raf = new java.io.RandomAccessFile(file, "r")
-    try {
-      val len = raf.length()
-      raf.seek(len - 8)
-      val tail = new Array[Byte](8)
-      raf.readFully(tail)
-      val footerLen = (tail(0) & 0xff) | ((tail(1) & 0xff) << 8) |
-        ((tail(2) & 0xff) << 16) | ((tail(3) & 0xff) << 24)
-      raf.seek(len - 8 - footerLen)
-      val footerBytes = new Array[Byte](footerLen)
-      raf.readFully(footerBytes)
-      Util.readFileMetaData(new java.io.ByteArrayInputStream(footerBytes))
-    } finally raf.close()
   }
 
   /** Read back the stamped field (test/audit side). */

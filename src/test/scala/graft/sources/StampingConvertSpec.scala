@@ -3,6 +3,8 @@ package graft.sources
 import java.io.{BufferedOutputStream, FileOutputStream}
 import java.nio.file.Files
 
+import org.apache.hadoop.fs.{FileSystem, Path}
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,16 +13,17 @@ import org.scalatest.BeforeAndAfterAll
 import graft.codec._
 import graft.tools.{CountingDfs, CountingObjectStore, FooterSort}
 
-/** Pins the round-7 write-amplification contract: a convert to a DFS
-  * (non-`file://`) target stamps the footer INSIDE the write's commit
-  * protocol, so total bytes written ≈ 1× the output size and the data
-  * pages are never re-read — versus the post-hoc `stampFs`
-  * copy-rewrite, which costs a second full pass (probe-measured 12×
-  * the in-place stamp). Measured against [[graft.tools.CountingDfs]],
-  * a byte-counting RawLocalFileSystem under a `graftdfs://` scheme
-  * (truncate+append capable, like HDFS) and
+/** Pins where and how the convert stamps its footers: inside each
+  * write task's commit ([[StampingOutputCommitter]]), before the files
+  * are published, on every filesystem — so total bytes written ≈ 1× the
+  * output size and the data pages are never re-read. Measured against
+  * [[graft.tools.CountingDfs]], a byte-counting RawLocalFileSystem under
+  * a `graftdfs://` scheme (truncate+append capable, like HDFS) and
   * [[graft.tools.CountingObjectStore]] (`graftobj://`, neither — like
-  * S3A — where the staged copy fallback must kick in pre-commit).
+  * S3A — where the staged copy fallback must kick in pre-commit); the
+  * local `file:` target goes through the checksummed local filesystem.
+  * The committer is chosen per write, so the caller's session conf is
+  * never touched.
   */
 class StampingConvertSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -115,43 +118,74 @@ class StampingConvertSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(UtxoConvert.readConverted(spark, s"graftobj:$dir").count() == 20000)
   }
 
-  test("stamping protocol is session-scoped: caller conf untouched, concurrent writes unstamped") {
-    // r8 (r7 design nit): the protocol class must never appear in the
-    // CALLER's session conf — a concurrent write on that session during
-    // a convert would silently inherit it. The convert runs its
-    // pipeline on a derived session instead.
-    // the key has a stock default (SQLHadoopMapReduceCommitProtocol), so
-    // "untouched" means "still the stock value", not "unset"
-    val stock = spark.conf.get(StampingCommitProtocol.ConfKey)
-    assert(stock != classOf[StampingCommitProtocol].getName,
-      "caller session carries the stamping protocol before any convert")
-    val dir = new java.io.File(tmp, "scoped-out").getAbsolutePath
-    // replicate the convert's mechanism directly: while the derived
-    // session (carrying the protocol) is alive, a plain parquet write
-    // through the CALLER's session must come out unstamped
-    val derived = UtxoConvert.stampingSession(spark)
-    assert(derived.conf.get(StampingCommitProtocol.ConfKey) ==
-      classOf[StampingCommitProtocol].getName)
-    assert(derived.conf.get("spark.sql.shuffle.partitions") == "4",
-      "derived session must inherit the caller's runtime conf")
-    assert(spark.conf.get(StampingCommitProtocol.ConfKey) == stock,
-      "deriving the stamping session mutated the caller's conf")
+  test("local convert: stamped inside the commit, crc-clean, complete") {
+    val dir = new java.io.File(tmp, "local-out").getAbsolutePath
+    val stats = UtxoConvert.convert(spark, fixturePath, s"file:$dir", partitions = 3)
+    assert(stats.rows == 20000)
+    assertStamped(dir)
+    // a .crc left next to a stamped file would no longer verify: read
+    // every part file fully through the checksummed local filesystem
+    val local = FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    parquetFiles(dir).foreach { f =>
+      val in = local.open(new Path(f.getAbsolutePath))
+      try {
+        val buf = new Array[Byte](1 << 16)
+        var total = 0L
+        var n = in.read(buf)
+        while (n > 0) { total += n; n = in.read(buf) }
+        assert(total == f.length(), s"short read of ${f.getName}")
+      } finally in.close()
+    }
+    assert(UtxoConvert.readConverted(spark, s"file:$dir").count() == 20000)
+  }
+
+  test("re-stamping a stamped output is idempotent and keeps the data bytes") {
+    val dir = new java.io.File(tmp, "local-out").getAbsolutePath
+    def footerStart(b: Array[Byte]): Int = {
+      val n = b.length
+      val footerLen = (b(n - 8) & 0xff) | ((b(n - 7) & 0xff) << 8) |
+        ((b(n - 6) & 0xff) << 16) | ((b(n - 5) & 0xff) << 24)
+      n - 8 - footerLen
+    }
+    val before = parquetFiles(dir).map(f => f.getName -> Files.readAllBytes(f.toPath)).toMap
+    assert(FooterSort.stamp(dir, Seq("script"),
+      unsigned = Seq("vout", "height", "amount")) == before.size)
+    assertStamped(dir)
+    parquetFiles(dir).foreach { f =>
+      val old = before(f.getName)
+      val now = Files.readAllBytes(f.toPath)
+      val start = footerStart(old)
+      assert(footerStart(now) == start, s"${f.getName}: footer moved")
+      assert(java.util.Arrays.equals(old, 0, start, now, 0, start),
+        s"${f.getName}: data bytes changed by a re-stamp")
+    }
+    assert(UtxoConvert.readConverted(spark, dir).count() == 20000)
+  }
+
+  test("the convert leaves the caller's session conf untouched") {
+    val conf = spark.conf.getAll
+    UtxoConvert.convert(spark, fixturePath,
+      s"file:${new java.io.File(tmp, "scoped-local").getAbsolutePath}", partitions = 2)
+    assert(spark.conf.getAll == conf, "a file: convert changed the caller's conf")
+    val dfsDir = new java.io.File(tmp, "scoped-dfs").getAbsolutePath
+    UtxoConvert.convert(spark, fixturePath, s"graftdfs:$dfsDir", partitions = 2)
+    assert(spark.conf.getAll == conf, "a graftdfs: convert changed the caller's conf")
+    assertStamped(dfsDir)
+    // the committer rode the convert's write only: a plain parquet write
+    // on the same session afterwards comes out unstamped
     val plain = new java.io.File(tmp, "plain-out").getAbsolutePath
     spark.range(100).selectExpr("id", "id * 2 AS v")
       .write.mode("overwrite").parquet(s"graftdfs:$plain")
     parquetFiles(plain).foreach { f =>
       assert(FooterSort.sortingColumnsOf(f).forall(_.isEmpty),
-        s"concurrent caller-session write got stamped: ${f.getName}")
+        s"a plain write after the convert got stamped: ${f.getName}")
+      assert(!FooterSort.convertedTypesOf(f).values.exists(_ == "UINT_64"),
+        s"a plain write after the convert got UINT_64 annotations: ${f.getName}")
     }
-    // and the real convert end-to-end: stamped output, caller conf clean
-    UtxoConvert.convert(spark, fixturePath, s"graftdfs:$dir", partitions = 2)
-    assertStamped(dir)
-    assert(spark.conf.get(StampingCommitProtocol.ConfKey) == stock,
-      "convert leaked the stamping protocol into the caller's session")
   }
 
   test("no staging leftovers or temp dirs survive the DFS convert") {
-    Seq("dfs-out", "obj-out").foreach { d =>
+    Seq("dfs-out", "obj-out", "local-out").foreach { d =>
       val dir = new java.io.File(tmp, d)
       if (dir.exists()) {
         val leftovers = dir.listFiles().filter(f =>

@@ -494,7 +494,7 @@ class UtxoSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     // min/max stats leave >= 1 candidate row group per file even for a
     // key the file does not hold — at 100 TB that is thousands of
     // wasted row-group reads per point lookup. The opt-in split-block
-    // bloom on `script` must (a) survive the FooterSort in-place stamp,
+    // bloom on `script` must (a) survive the FooterSort footer stamp,
     // (b) admit the present key, (c) reject an absent key stats cannot.
     val bloomDir = new java.io.File(tmp, "skip-bloom").getAbsolutePath
     UtxoConvert.convert(spark, fixturePath, bloomDir, partitions = 2,
@@ -534,88 +534,6 @@ class UtxoSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       .filter(col("script") === unhex(lit(knownHex)))
       .select("height").orderBy("height").collect().map(_.getLong(0)).toSeq
     assert(viaBloom == Seq(10L, 20L, 30L))
-  }
-
-  test("DFS-safe stamp: copy-rewrite through the Hadoop FileSystem API round-trips") {
-    import org.apache.hadoop.fs.Path
-    // a plain Spark-written table, stamped ONLY through the
-    // FileSystem copy-rewrite path (no java.io.File anywhere) — the
-    // route every non-local output takes; on HDFS/S3A the same calls
-    // run against the remote FS, so this pins the whole mechanism
-    // minus the wire
-    val dir = new java.io.File(tmp, "fsstamp").getAbsolutePath
-    spark.range(0, 5000)
-      .selectExpr("id AS height", "id * 3 AS amount",
-        "cast(format_string('%08d', id) as binary) AS script")
-      .orderBy("script")
-      .coalesce(1).write.mode("overwrite").parquet(dir)
-    val before = spark.read.parquet(dir).orderBy("height")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-
-    val conf = spark.sparkContext.hadoopConfiguration
-    val n = graft.tools.FooterSort.stampFs(conf, dir,
-      Seq("script"), unsigned = Seq("height", "amount"))
-    assert(n == 1)
-
-    // footer carries the stamp on every row group + the UINT_64
-    // annotations, and no staging/backup leftovers survive the publish
-    val files = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
-    files.foreach { f =>
-      val rgs = graft.tools.FooterSort.sortingColumnsOf(f)
-      assert(rgs.nonEmpty && rgs.forall(_ == Seq((2, false, false))),
-        s"sortingColumns missing/wrong in ${f.getName}: $rgs")
-      val ann = graft.tools.FooterSort.convertedTypesOf(f)
-      Seq("height", "amount").foreach(c =>
-        assert(ann.get(c).contains("UINT_64"), s"$c not UINT_64: $ann"))
-    }
-    val leftovers = new java.io.File(dir).listFiles()
-      .filter(f => f.getName.contains(".stamp.tmp") || f.getName.endsWith("._old"))
-    assert(leftovers.isEmpty, s"staging leftovers: ${leftovers.map(_.getName).toSeq}")
-
-    // the rewritten file round-trips through BOTH the Hadoop FS (crc
-    // sidecars must be consistent after the rename chain) and Spark
-    val fs = new Path(dir).getFileSystem(conf)
-    files.foreach { f =>
-      val p = new Path(f.getAbsolutePath)
-      val in = fs.open(p) // ChecksumFileSystem verifies the sidecar here
-      try { val b = new Array[Byte](4); in.readFully(0, b)
-        assert(new String(b, "US-ASCII") == "PAR1") } finally in.close()
-    }
-    val after = spark.read.parquet(dir)
-      .selectExpr("cast(height as long) AS height", "cast(amount as long) AS amount")
-      .orderBy("height").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(after == before, "data changed through the copy-rewrite")
-
-    // crash recovery: only `_old` present (death between the renames)
-    // → next stamp restores and restamps instead of failing or losing
-    val f0 = new Path(files.head.getAbsolutePath)
-    val old0 = new Path(f0.getParent, f0.getName + "._old")
-    assert(fs.rename(f0, old0))
-    graft.tools.FooterSort.stampFsFile(conf, f0, Seq("script"),
-      unsigned = Seq("height", "amount"))
-    assert(fs.exists(f0) && !fs.exists(old0))
-    assert(spark.read.parquet(dir).count() == 5000)
-
-    // directory-level orphan sweep: the same crash state must also heal
-    // through stampFs (a live name that is MISSING is not listed as
-    // *.parquet, so without the sweep the file would be skipped forever)
-    assert(fs.rename(f0, old0))
-    val n2 = graft.tools.FooterSort.stampFs(conf, dir,
-      Seq("script"), unsigned = Seq("height", "amount"))
-    assert(n2 == 1)
-    assert(fs.exists(f0) && !fs.exists(old0))
-    assert(spark.read.parquet(dir).count() == 5000)
-
-    // staging-leftover sweep: a stamp that died mid-copy (or whose
-    // publish rename failed) leaves `.<name>.stamp.tmp` — hidden from
-    // readers but leaked forever without the directory-level sweep
-    val stale = new Path(f0.getParent, "." + f0.getName + ".stamp.tmp")
-    val os = fs.create(stale, true)
-    os.write(Array[Byte](1, 2, 3)); os.close()
-    graft.tools.FooterSort.stampFs(conf, dir,
-      Seq("script"), unsigned = Seq("height", "amount"))
-    assert(!fs.exists(stale), "stale .stamp.tmp not swept by stampFs")
-    assert(spark.read.parquet(dir).count() == 5000)
   }
 
   test("clusterRowsPerBucket sizes reduce sorts from the real heap (r11)") {
