@@ -346,7 +346,7 @@ object Queries {
       val rows = parquetRowCount(s, s"$dir/orders.parquet")
       s.conf.set(key, math.max(1000000L, 2L * rows).toString)
       // shipped form: loop-invariant nxt pre-materialized + broadcast
-      // frontier (r13 — 42.7 → 11.9 s sf1, RecursiveProbe); the full
+      // frontier (r13 — 42.7 → 11.9 s sf1, ROUND13_NOTES.md item 6); the full
       // recursive text stays the oracle and QueriesRelSpec pins
       // fast == full row-for-row
       try QueriesRel.recursiveChainFast(s, dir).localCheckpoint()

@@ -262,7 +262,7 @@ object QueriesLLM {
     // matches per probe row (28.7M pairs at sf1), and Catalyst's default
     // pick for the ~5 MB band table is a BROADCAST hash join — whose
     // many-match probe iteration measured ~13× slower per emitted pair
-    // than a shuffled hash join's (SimhashProbe at sf1: broadcast 9.1 s,
+    // than a shuffled hash join's (ROUND10_NOTES.md §2, sf1: broadcast 9.1 s,
     // sort-merge 2.5 s, shuffle_hash 1.9 s for the identical 28.7M-pair
     // output). The hint matters MORE at corpus scale, where the index
     // side outgrows broadcast anyway and the planner would fall back to
@@ -1148,10 +1148,11 @@ object QueriesLLM {
     pqStagePlans(s, dir, codes, mdl, nprobe, m, rerank).result
 
   /** The PQ search's stage frames, individually runnable — the
-    * SimhashProbe discipline applied to the ADC pipeline (r11, verdict
-    * item 4): AnnProbe times the LUT aggregate, the shortlist
-    * join+window, and the full search separately, and A/B-tests the
-    * shortlist join's engine via `shortlistHint` (the r10 simhash
+    * r10 simhash stage attribution applied to the ADC pipeline (r11,
+    * verdict item 4): the LUT aggregate, the shortlist join+window and
+    * the full search can be timed separately, and `shortlistHint`
+    * A/B-tests the shortlist join's engine (ROUND11_NOTES.md §4 has the
+    * r11 numbers; the r10 simhash
     * lesson says Catalyst's broadcast pick can be the wrong engine for
     * many-match probe joins — each code row here matches every probe
     * of its cell). Production callers take `.result`; the stage frames
@@ -1652,14 +1653,14 @@ object QueriesLLM {
     // build below references this lineage twice more (broadcast
     // collect + posting join), and re-running the shingle kernel and
     // the spread text exchange per reference measured 2.5× the whole
-    // query (JaccardFixProbe: 116 s vs 45.6 s same-session at sf1).
+    // query (OPTIMIZATION_r14.md §3: 116 s vs 45.6 s same-session at sf1).
     val d = Queries.spread(t(s, dir, "documents"), Queries.SpreadHeavy)
       .select(col("doc_id"), array_distinct(shingles(col("text"), 3)).as("sh"))
       .localCheckpoint()
     val post = d.select(col("doc_id"), explode(col("sh")).as("s"))
     // global shingle frequency — ONE corpus-wide count aggregation
     val freq = post.groupBy(col("s")).agg(count(lit(1)).as("df"))
-    // r14 DICTIONARY ENCODING (JaccardDictProbe, r13 verdict item 4):
+    // r14 DICTIONARY ENCODING (OPTIMIZATION_r14.md §3, r13 verdict item 4):
     // map each distinct shingle to its dense 1-based rank in a global
     // df-ascending order (r14: (df, s); r15: (df, h32, s) — see below).
     // That rank order IS the prefix
@@ -1698,7 +1699,7 @@ object QueriesLLM {
     //     row_number over (pid | df, h32, s) = the exact global rank,
     //     sorted at defaultParallelism.
     // Two earlier r15 cuts are on the record because their failure
-    // modes are instructive (JaccardBisectProbe / JaccardPlanProbe):
+    // modes are instructive (plans/r15/x_jaccard_pairs_prefix_probe_evidence.txt):
     // a range-exchange + spark_partition_id + localCheckpoint rank
     // produced bit-identical sids BUT the checkpoint's REALISTIC size
     // statistics (and, in the first cut, an offsets-join row estimate)

@@ -1399,7 +1399,7 @@ object QueriesRel {
     * non-recursive CTEs (it has no CTE-materialization operator), so
     * running this text verbatim re-executed the full orders scan +
     * row_number window sort on EVERY UnionLoop iteration — 27
-    * iterations × 1.58 s at sf1 (RecursiveProbe, r13). QueriesRelSpec
+    * iterations × 1.58 s at sf1 (ROUND13_NOTES.md item 6). QueriesRelSpec
     * pins fast == this text row-for-row, so the oracle is untouched.
     */
   val recursiveChainSql: String =
@@ -1429,7 +1429,7 @@ object QueriesRel {
     *     rows and shrinks every iteration, while the probe side is the
     *     full 1.5M-row `nxt` — without the hint every iteration paid a
     *     full shuffle of `nxt` just to meet a dwindling frontier:
-    *     25.8 → 11.9 s at sf1 (RecursiveProbe, min-of-2, 3.6× total).
+    *     25.8 → 11.9 s at sf1 (ROUND13_NOTES.md item 6, min-of-2, 3.6× total).
     *
     * At 100 TB the same two moves are the difference between an
     * O(depth × table-shuffle) loop and O(depth × broadcast) over a

@@ -754,7 +754,8 @@ object StreamingQueries {
     * Batch count 8 → 4 (r15, verdict item 4): per-batch fixed cost
     * (trigger planning + addBatch job + walCommit + the Complete-mode
     * full-table memory-sink rewrite) owned the wall once state commit
-    * was fixed in r14 — StreamBatchProbe min-of-3 at sf0.1/32c:
+    * was fixed in r14 — min-of-3 at sf0.1/32c
+    * (plans/r15/s_eventlog_tumbling_probe_matrix.txt):
     * 8 batches 3.29 s, 4 batches 2.31 s, 2 batches 1.31 s at identical
     * final output (Complete-mode aggregate; the oracle hash is
     * batch-count-invariant). 4 keeps a REAL multi-batch tiling proof —
@@ -978,7 +979,8 @@ object StreamingQueries {
     * production state (rule of thumb: keep per-partition state in the
     * 100 MB-1 GB range a single store instance handles well, i.e.
     * partitions ≈ stateBytes / 256 MB). Default 8 → 4 this round:
-    * StreamBatchProbe min-of-3 on the eventlog stream at sf0.1/32c
+    * min-of-3 on the eventlog stream at sf0.1/32c
+    * (plans/r15/s_eventlog_tumbling_probe_matrix.txt)
     * (4 batches, ~3.6 K windowed groups): 8 partitions 2.31 s,
     * 4 partitions 1.87 s — per-batch store open+commit still scales
     * with partition count at KB state, and 4 keeps every gate stream's

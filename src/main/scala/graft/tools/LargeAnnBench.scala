@@ -89,7 +89,7 @@ object LargeAnnBench {
     runNoop(graft.queries.QueriesLLM.annLsh(spark, dir, 4, bitsPerTable))
 
     def time(name: String)(f: => DataFrame): (String, Double) = {
-      // one UNTIMED warm rep per entry (r11): AnnProbe measured the
+      // one UNTIMED warm rep per entry (r11): ROUND11_NOTES.md §3 shows the
       // k=500 argmin/ADC codegen methods JIT-compiling DURING the
       // first execution — assignment alone decays 13.1 → 2.9 s across
       // reps in one JVM — so a cold first rep is measuring the

@@ -14,6 +14,16 @@ import org.apache.spark.sql.SparkSession
   * minutes-scale proof, not a regression gate); invoked on demand:
   *
   * {{{ sbt "runMain graft.tools.LargeConvertBench [nCoins] [runs]" }}}
+  *
+  * Every timed convert is a [[Metrics.capture]]; the pass also writes
+  * `PROFILE_convert_<nCoins>.json` to the working directory: each run's
+  * wall and per-stage metrics (task run/CPU/GC time, shuffle bytes,
+  * shuffle write and fetch-wait time, spill — the clustered convert is
+  * the decode+shuffle-write map stage and the sort+write reduce stage),
+  * next to what the numbers depend on: the JVM's real max heap, the
+  * `SPARK_DRIVER_MEM` override, the core count, the bucket size the
+  * clustered auto sizing derives from them (`rows_per_bucket`) and the
+  * peak RSS.
   */
 object LargeConvertBench {
 
@@ -78,25 +88,25 @@ object LargeConvertBench {
       try Runtime.getRuntime.exec(Array("sync")).waitFor()
       catch { case _: Throwable => () }
 
-    def timeConvert(out: String, range: Boolean): Double = {
+    def profileConvert(out: String, range: Boolean): Metrics.Profile = {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
       new java.io.File(out).mkdirs()
       syncFs()
-      val t0 = System.nanoTime()
-      graft.sources.UtxoConvert.convert(spark, snap.getPath, out,
-        partitions = cpus.toInt, rangePartition = range)
-      (System.nanoTime() - t0) / 1e9
+      Metrics.capture(spark)(graft.sources.UtxoConvert.convert(spark, snap.getPath, out,
+        partitions = cpus.toInt, rangePartition = range))._2
     }
 
     // untimed warmups, one per shape: the first convert in a fresh JVM
     // pays ~30 s of codegen/writer init at 100M coins, which is
     // cold-start, not steady-state throughput (same policy as Bench)
-    timeConvert(s"$scratch/warm", range = false)
-    timeConvert(s"$scratch/warm", range = true)
+    profileConvert(s"$scratch/warm", range = false)
+    profileConvert(s"$scratch/warm", range = true)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$scratch/warm"))
 
-    val plain = (1 to runs).map(_ => timeConvert(s"$scratch/plain", range = false))
-    val clustered = (1 to runs).map(_ => timeConvert(s"$scratch/clustered", range = true))
+    val plainProfiles = (1 to runs).map(_ => profileConvert(s"$scratch/plain", range = false))
+    val clusteredProfiles = (1 to runs).map(_ => profileConvert(s"$scratch/clustered", range = true))
+    val plain = plainProfiles.map(_.wallSec)
+    val clustered = clusteredProfiles.map(_.wallSec)
     val outBytes = org.apache.commons.io.FileUtils
       .sizeOfDirectory(new java.io.File(s"$scratch/clustered"))
     org.apache.commons.io.FileUtils.deleteQuietly(scratch)
@@ -112,6 +122,13 @@ object LargeConvertBench {
       f""""clustered_best_rows_per_s":${(nCoins / bestClustered).toLong},""" +
       f""""plain_spread":${plain.max / bestPlain}%.2f,"clustered_spread":${clustered.max / bestClustered}%.2f,""" +
       s""""peak_rss_bytes":${peakRssBytes()}}""")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"PROFILE_convert_$nCoins.json"),
+      s"""{"coins":$nCoins,"runs":$runs,"heap_max_bytes":${Runtime.getRuntime.maxMemory},""" +
+      s""""driver_mem_env":"${sys.env.getOrElse("SPARK_DRIVER_MEM", "(default 8g)")}","cpus":$cpus,""" +
+      s""""rows_per_bucket":${graft.sources.UtxoConvert.clusterRowsPerBucket(spark)},""" +
+      s""""peak_rss_bytes":${peakRssBytes()},""" +
+      s""""plain":${plainProfiles.map(_.toJson).mkString("[\n", ",\n", "\n]")},""" +
+      s""""clustered":${clusteredProfiles.map(_.toJson).mkString("[\n", ",\n", "\n]")}}""" + "\n")
     spark.stop()
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File("/dev/shm/graft_large_spill"))
   }

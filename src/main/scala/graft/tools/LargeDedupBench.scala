@@ -43,7 +43,8 @@ object LargeDedupBench {
       // `baseId * GOLDEN_GAMMA` puts every doc on the SAME lattice
       // (doc b's stream == doc a's stream shifted by b−a), which
       // silently generated thousands of genuine near-dup docs — found
-      // by DedupProbe when LSH candidate volume wouldn't drop
+      // when LSH candidate volume wouldn't drop (ROUND5_NOTES.md,
+      // "LLM-dedup scale proof")
       val r = new java.util.SplittableRandom(
         new java.util.SplittableRandom(baseId).nextLong() ^ 17L)
       val n = 60 + r.nextInt(81)
@@ -194,7 +195,7 @@ object LargeDedupBench {
     }
     val bitsPerTable = math.max(6,
       math.ceil(math.log(nDocs / 64.0) / math.log(2)).toInt)
-    runNoop(graft.queries.QueriesLLM.embedDedupLsh(spark, dir, 4, bitsPerTable, tau = 0.7)) // warm (JIT, the AnnProbe lesson)
+    runNoop(graft.queries.QueriesLLM.embedDedupLsh(spark, dir, 4, bitsPerTable, tau = 0.7)) // warm (JIT, ROUND11_NOTES.md §3)
     val embedT = (1 to runs).map { _ =>
       val t0 = System.nanoTime()
       runNoop(graft.queries.QueriesLLM.embedDedupLsh(spark, dir, 4, bitsPerTable, tau = 0.7))

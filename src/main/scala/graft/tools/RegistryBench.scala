@@ -27,6 +27,12 @@ import org.apache.spark.sql.SparkSession
   * FIRST run exceeds [[RepeatCutoff]] are not repeated: no observed
   * weather fakes a minute from a sub-linear wall, and tripling the
   * declared quadratics' 300 s sf1 walls would buy nothing.
+  *
+  * Every timed run is a [[Metrics.capture]]. Besides the stdout line,
+  * the pass writes `PROFILE_registry_<basename of sfDir>.json` to the
+  * working directory: per entry the min/median/max of its walls and
+  * the [[Metrics.Profile]] (stages, operators, stream batches) of its
+  * fastest run, plus the failed entries by name.
   */
 object RegistryBench {
 
@@ -60,22 +66,19 @@ object RegistryBench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val walls = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
+    val profiles = scala.collection.mutable.LinkedHashMap[String, Seq[Metrics.Profile]]()
     val failed = scala.collection.mutable.ArrayBuffer[String]()
     graft.SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => filter(n) }.foreach { case (name, fn) =>
       try {
-        def once(): Double = {
-          val t0 = System.nanoTime()
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
+        def once(): Metrics.Profile =
+          Metrics.capture(spark)(fn(spark, sfDir).write.format("noop").mode("overwrite").save())._2
         val first = once()
         val rest =
-          if (first >= RepeatCutoff) Seq.empty
+          if (first.wallSec >= RepeatCutoff) Seq.empty
           else (2 to runs).map(_ => once())
-        val all = first +: rest
-        walls += name -> all
+        profiles += name -> (first +: rest)
+        val all = (first +: rest).map(_.wallSec)
         System.err.println(f"[registry-bench] $name%-28s ${all.min}%8.3f s" +
           (if (all.length > 1) all.map(t => f"$t%.3f").mkString("  [", " ", "]") else ""))
       } catch {
@@ -84,11 +87,21 @@ object RegistryBench {
           System.err.println(s"[registry-bench] $name FAILED: ${e.getMessage}")
       }
     }
+    val walls = profiles.map { case (k, ps) => k -> ps.map(_.wallSec) }
     val qs = walls.map { case (k, v) => s""""$k":${f"${v.min}%.3f"}""" }.mkString("{", ",", "}")
     val rs = walls.map { case (k, v) =>
       s""""$k":${v.map(t => f"$t%.3f").mkString("[", ",", "]")}""" }.mkString("{", ",", "}")
     val fl = failed.map(n => s""""$n"""").mkString("[", ",", "]")
     println(s"""{"metric":"registry_total","value":${f"${walls.values.map(_.min).sum}%.3f"},"unit":"sec","entries":${walls.size},"failed":$fl,"sf":"$sfDir","queries":$qs,"runs":$rs,${Calibration.json(calBefore, Calibration.sample())}}""")
+    val entries = walls.map { case (k, v) =>
+      val s = v.sorted
+      f""""$k":{"min_s":${s.head}%.3f,"median_s":${s(s.length / 2)}%.3f,"max_s":${s.last}%.3f,""" +
+        s""""walls_s":${v.map(t => f"$t%.3f").mkString("[", ",", "]")},"profile":${profiles(k).minBy(_.wallSec).toJson}}"""
+    }.mkString("{\n", ",\n", "\n}")
+    val sidecar = s"PROFILE_registry_${new java.io.File(sfDir).getName}.json"
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(sidecar),
+      s"""{"sf":"$sfDir","runs":$runs,"cpus":$cpus,"failed":$fl,"entries":$entries}""" + "\n")
+    System.err.println(s"[registry-bench] profiles -> $sidecar")
     spark.stop()
   }
 }
