@@ -17,7 +17,7 @@ object SparkEntry {
     * path end-to-end.
     */
   def entry(spark: SparkSession): DataFrame =
-    Queries.flagship(spark, "/root/testdata/sf0.001")
+    queries("q0_flagship")(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Queries.all

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftInternals, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Encoder
@@ -43,7 +43,8 @@ object GraftFunctions {
     * [[WordShinglesExpr]] kernel (identical strings, whole-stage
     * codegen; the transform+slice HOF form it replaces is interpreted
     * per element). Requires [[register]] — `Queries.t` registers on
-    * every session that touches a table.
+    * the session it reads a table with, which for a registry entry is
+    * the entry's own derived session, not the caller's.
     */
   def shingles(text: Column, k: Int): Column =
     call_function("word_shingles", text, lit(k))
@@ -189,17 +190,14 @@ object GraftFunctions {
         exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
   }
 
-  /** Register the clustered-convert range router with THIS convert's
-    * sampled bounds (the bounds are per-call data, so the builder
-    * closes over them; re-registering replaces the previous convert's).
-    * Returns the Column form.
+  /** The clustered-convert range router over THIS convert's sampled
+    * bounds, built as a column straight from [[ScriptRouteExpr]]: the
+    * bounds are per-call data, so nothing is registered on `spark` and
+    * two converts on one session never route with each other's bounds.
     */
   def scriptRoute(spark: SparkSession, bounds: Array[Array[Byte]],
-      tokens: Array[Int], script: Column): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction("script_route",
-      exprs => ScriptRouteExpr(exprs.head, bounds, tokens), "built-in")
-    call_function("script_route", script)
-  }
+      tokens: Array[Int], script: Column): Column =
+    GraftInternals.column(ScriptRouteExpr(GraftInternals.expression(script), bounds, tokens))
 
   /** Column-API forms of the native expressions (resolve through the
     * session registry — call [[register]] first).

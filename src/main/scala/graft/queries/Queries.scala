@@ -70,20 +70,16 @@ object Queries {
     }.sum
   }
 
-  /** Read one corpus table. Filters/pruning push into this scan.
-    *
-    * `events.ts` has shipped as both parquet TIMESTAMP(NANOS) (which
-    * Spark 4 refuses to map to TimestampType — read as raw nanos via
-    * `spark.sql.legacy.parquet.nanosAsLong` and rebuild the µs
-    * timestamp) and TIMESTAMP(MICROS) (arrives as NTZ — reinterpret as
-    * UTC instant). Normalize on the actual file schema, not an assumed
-    * generator layout: either way downstream sees TimestampType in UTC,
-    * the value DuckDB computes.
+  /** The engine's session contract: the conf every registry entry runs
+    * under, set by [[all]] on the entry's own derived session
+    * ([[SessionScope.withConf]]), never on the caller's.
     */
-  def t(s: SparkSession, dir: String, name: String): DataFrame = {
+  val Contract: Seq[(String, String)] = Seq(
     // oracle parity requires UTC regardless of how the caller built the
     // session (NTZ→LTZ casts and epoch renders are TZ-sensitive)
-    s.conf.set("spark.sql.session.timeZone", "UTC")
+    "spark.sql.session.timeZone" -> "UTC",
+    // nanos-layout events files are unreadable without it (see [[t]])
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     // session contract #3 (r10): typed-aggregate buffers stay HASHED up
     // to 64Ki grouping keys per task. Spark's ObjectHashAggregate falls
     // back to SORT-BASED aggregation after 128 distinct keys — which
@@ -95,22 +91,32 @@ object Queries {
     // because every typed aggregate this engine registers carries a
     // BOUNDED buffer (top-k: ≤ k pairs/key; GeoMean: 2 scalars) — 64Ki
     // keys × the largest k is megabytes per task, not a spill risk.
-    // CAVEAT: the conf is session-wide, so it also delays the fallback
-    // for Spark's BUILT-IN TypedImperativeAggregates with unbounded
-    // buffers — the collect_list sites in QueriesRel (ordered string
-    // agg) / QueriesScalar / QueriesLLM. Those groups are bounded by
-    // construction today (per-key lists of a handful of rows); any
+    // CAVEAT: the conf covers the whole entry, so it also delays the
+    // fallback for Spark's BUILT-IN TypedImperativeAggregates with
+    // unbounded buffers — the collect_list sites in QueriesRel (ordered
+    // string agg) / QueriesScalar / QueriesLLM. Those groups are bounded
+    // by construction today (per-key lists of a handful of rows); any
     // future entry that collect_lists fat groups must re-evaluate this
-    // ceiling or set the conf locally around the offending query.
-    s.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
+    // ceiling or run the offending query under its own `withConf`.
+    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "65536")
+
+  /** Read one corpus table. Filters/pruning push into this scan.
+    *
+    * `events.ts` has shipped as both parquet TIMESTAMP(NANOS) (which
+    * Spark 4 refuses to map to TimestampType — read as raw nanos under
+    * the [[Contract]]'s `spark.sql.legacy.parquet.nanosAsLong` and
+    * rebuild the µs timestamp) and TIMESTAMP(MICROS) (arrives as NTZ —
+    * reinterpret as UTC instant). Normalize on the actual file schema,
+    * not an assumed generator layout: either way downstream sees
+    * TimestampType in UTC, the value DuckDB computes.
+    */
+  def t(s: SparkSession, dir: String, name: String): DataFrame = {
     // every query builder funnels through here: make the native kernel
-    // functions (vec_dot, word_shingles, ...) resolvable everywhere
+    // functions (vec_dot, word_shingles, ...) resolvable on its session
     graft.functions.GraftFunctions.register(s)
-    if (name == "events") {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = s.read.parquet(s"$dir/$name.parquet")
-      raw.withColumn("ts", normalizeTs("ts", raw.schema("ts").dataType))
-    } else s.read.parquet(s"$dir/$name.parquet")
+    val df = s.read.parquet(s"$dir/$name.parquet")
+    if (name == "events") df.withColumn("ts", normalizeTs("ts", df.schema("ts").dataType))
+    else df
   }
 
   /** Per-task input-byte targets for [[spread]]: how many COMPRESSED
@@ -222,12 +228,14 @@ object Queries {
     floor(sum(cents(c)) / count(lit(1)) + lit(0.5)) / 100.0
 
   /** Register every corpus table as a temp view and run shared SQL text
-    * (used for the queries whose Spark and DuckDB form is the same).
+    * (used for the queries whose Spark and DuckDB form is the same). The
+    * views live on a derived session, never in the caller's catalog.
     */
-  def withViews(s: SparkSession, dir: String)(sql: String): DataFrame = {
-    TableNames.foreach(n => t(s, dir, n).createOrReplaceTempView(n))
-    s.sql(sql)
-  }
+  def withViews(s: SparkSession, dir: String)(sql: String): DataFrame =
+    SessionScope.withConf(s) { d =>
+      TableNames.foreach(n => t(d, dir, n).createOrReplaceTempView(n))
+      d.sql(sql)
+    }
 
   private def round2(c: Column): Column = round(c, 2)
 
@@ -261,7 +269,11 @@ object Queries {
 
   // ------------------------------------------------------------------ map
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** The registry. Every entry runs on its own session derived from the
+    * caller's, under the [[Contract]]: the caller's conf, temp views and
+    * functions are left as they were.
+    */
+  val all: Map[String, (SparkSession, String) => DataFrame] = Map[String, (SparkSession, String) => DataFrame](
     "q0_flagship" -> (flagship _),
     "q1_agg" -> (q1Agg _),
     "q_topk" -> (QueriesRel.topk _),
@@ -330,31 +342,18 @@ object Queries {
     "q_dq_audit" -> (QueriesRel.dqAudit _),
     "q_scd2" -> (QueriesRel.scd2 _),
     "q_join_asof_nearest" -> (QueriesRel.joinAsofNearest _),
-    "q_recursive" -> ((s: SparkSession, dir: String) => {
-      // the chain recursion is ROW-LINEAR (every order row visited
-      // exactly once), so Spark's runaway-recursion safety valve must
-      // scale with the input — the 1M default tripped at sf1's 1.5M
-      // orders (found by the r7 sf1 mirror). Raise it scoped to an
-      // EAGER materialization (the output is a tiny depth histogram;
-      // localCheckpoint executes under the raised limit and the
-      // restored session keeps the safety valve for everything else).
-      val key = "spark.sql.cteRecursionRowLimit"
-      val prev = s.conf.getOption(key)
-      // size the valve from parquet FOOTER metadata, not a count() job:
-      // the count was a second full table scan per invocation — at
-      // 100 TB it doubled the query's scan cost (r9 verdict item 7)
-      val rows = parquetRowCount(s, s"$dir/orders.parquet")
-      s.conf.set(key, math.max(1000000L, 2L * rows).toString)
-      // shipped form: loop-invariant nxt pre-materialized + broadcast
-      // frontier (r13 — 42.7 → 11.9 s sf1, ROUND13_NOTES.md item 6); the full
-      // recursive text stays the oracle and QueriesRelSpec pins
-      // fast == full row-for-row
-      try QueriesRel.recursiveChainFast(s, dir).localCheckpoint()
-      finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
-      }
-    }),
+    // the chain recursion is ROW-LINEAR (every order row visited exactly
+    // once), so the runaway-recursion safety valve must scale with the
+    // input (the 1M default tripped at sf1's 1.5M orders, r7). It is
+    // raised on the entry's own session and sized from parquet FOOTER
+    // metadata: a count() job was a second full scan (r9 item 7).
+    // Shipped form: pre-materialized nxt + broadcast frontier (r13 —
+    // 42.7 → 11.9 s sf1, ROUND13_NOTES.md item 6); QueriesRelSpec pins
+    // it row-for-row equal to the full recursive text, the oracle
+    "q_recursive" -> ((s: SparkSession, dir: String) =>
+      SessionScope.withConf(s, "spark.sql.cteRecursionRowLimit" ->
+        math.max(1000000L, 2L * parquetRowCount(s, s"$dir/orders.parquet")).toString)(
+        QueriesRel.recursiveChainFast(_, dir))),
     "q_variant" -> (QueriesScalar.variantExtract _),
     "x_quality_classify" -> (QueriesLLM.qualityClassify _),
     "x_compact_files" -> (QueriesRel.compactSmallFiles _),
@@ -535,7 +534,9 @@ object Queries {
         .orderBy("media_id")),
     "utxo_e2e_point_lookup" -> (QueriesUtxo.e2ePointLookup _),
     "utxo_e2e_script_types" -> (QueriesUtxo.e2eScriptTypes _)
-  )
+  ).map { case (name, f) =>
+    name -> ((s: SparkSession, dir: String) => SessionScope.withConf(s, Contract: _*)(f(_, dir)))
+  }
 
   // --------------------------------------------------------------- oracle
 

@@ -226,31 +226,28 @@ object QueriesRel {
     * join's selectivity. Broadcast is disabled for the measurement (the
     * dim-too-big-to-broadcast case runtime filters exist for) and the
     * application-side size floor is lowered so the rewrite fires on
-    * test-scale data; the aggregate is materialized eagerly
-    * (localCheckpoint) while those confs are active, then session state
-    * is restored. Values are oracled against the plain join; the spec
-    * pins `might_contain` into the physical plan.
+    * test-scale data. Those confs are set on the query's own derived
+    * session. The aggregate is materialized eagerly (localCheckpoint):
+    * the bloom filter is built by a global aggregate, an `Exchange
+    * SinglePartition` over one bounded partial filter per task, which
+    * the registry-wide plan lint in SparkEntrySpec would otherwise flag.
+    * Values are oracled against the plain join; the spec pins
+    * `might_contain` into the physical plan.
     */
-  def joinBloom(s: SparkSession, dir: String): DataFrame = {
-    val tuned = Seq(
+  def joinBloom(s: SparkSession, dir: String): DataFrame =
+    SessionScope.withConf(s,
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0")
-    val saved = tuned.map { case (k, _) => k -> s.conf.getOption(k) }
-    tuned.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
-      val o = t(s, dir, "orders").filter(col("o_orderpriority") === "1-URGENT")
-      t(s, dir, "lineitem")
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0") { d =>
+      val o = t(d, dir, "orders").filter(col("o_orderpriority") === "1-URGENT")
+      t(d, dir, "lineitem")
         .join(o, col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("l_returnflag"))
         .agg(sum(Queries.cents(col("l_extendedprice"))).as("rev_cents"),
           count(lit(1)).as("n"))
         .localCheckpoint(true)
         .orderBy(col("l_returnflag"))
-    } finally saved.foreach { case (k, v) =>
-      v.fold(s.conf.unset(k))(s.conf.set(k, _))
     }
-  }
 
   /** E63: dynamic partition pruning — the fact side is the Hive-
     * partitioned orders copy (E33's layout) but, unlike E33, the year
@@ -295,15 +292,12 @@ object QueriesRel {
     * fallback for pathological keys; this entry is the
     * runtime-re-optimization surface. Skew thresholds are lowered so
     * the split fires on test-scale data (at 100 TB the defaults fire
-    * on their own); the join is materialized while those confs are
-    * active, then session state is restored. The spec pins
-    * `skew=true` sub-partitioning in the executed adaptive plan.
+    * on their own); they are set on the join's own derived session
+    * ([[skewAqeConfs]]). The spec pins `skew=true` sub-partitioning in
+    * the executed adaptive plan.
     */
-  def joinSkewAqe(s: SparkSession, dir: String): DataFrame = {
-    skewAqeConfs(s) { () =>
-      skewAqeJoin(s, dir).localCheckpoint(true)
-    }.orderBy(col("flag"))
-  }
+  def joinSkewAqe(s: SparkSession, dir: String): DataFrame =
+    skewAqeConfs(s)(skewAqeJoin(_, dir).orderBy(col("flag")))
 
   /** The E64 join shape, pre-aggregation ordering left to the caller. */
   def skewAqeJoin(s: SparkSession, dir: String): DataFrame = {
@@ -322,10 +316,10 @@ object QueriesRel {
         count(lit(1)).as("n"))
   }
 
-  /** Run `body` with AQE skew-split thresholds lowered to fire at test
-    * scale; restores prior session state afterwards. */
-  def skewAqeConfs[A](s: SparkSession)(body: () => A): A = {
-    val tuned = Seq(
+  /** Run `body` on a session derived from `s` with AQE skew-split
+    * thresholds lowered to fire at test scale. */
+  def skewAqeConfs[A](s: SparkSession)(body: SparkSession => A): A =
+    SessionScope.withConf(s,
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1.2",
@@ -339,14 +333,7 @@ object QueriesRel {
       // groupBy's reuse of that partitioning (an extra shuffle), which
       // makes AQE decline the split by default; at real scale the
       // skew savings dwarf the re-shuffle, so force the trade here
-      "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true")
-    val saved = tuned.map { case (k, _) => k -> s.conf.getOption(k) }
-    tuned.foreach { case (k, v) => s.conf.set(k, v) }
-    try body()
-    finally saved.foreach { case (k, v) =>
-      v.fold(s.conf.unset(k))(s.conf.set(k, _))
-    }
-  }
+      "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true")(body)
 
   /** E12: exact distinct counts (shuffle-dedup partial aggregation). */
   def aggDistinct(s: SparkSession, dir: String): DataFrame =
@@ -420,14 +407,14 @@ object QueriesRel {
       |ORDER BY lang, source""".stripMargin
 
   /** E14: the system's one UDAF — geometric mean (Aggregator). */
-  def udafGeomean(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    t(s, dir, "orders").createOrReplaceTempView("orders_udaf")
-    s.sql(
-      """SELECT o_orderstatus AS status, round(geo_mean(o_totalprice), 2) AS geo_price,
-        |  count(*) AS n
-        |FROM orders_udaf GROUP BY o_orderstatus ORDER BY status""".stripMargin)
-  }
+  def udafGeomean(s: SparkSession, dir: String): DataFrame =
+    SessionScope.withConf(s) { d =>
+      t(d, dir, "orders").createOrReplaceTempView("orders_udaf")
+      d.sql(
+        """SELECT o_orderstatus AS status, round(geo_mean(o_totalprice), 2) AS geo_price,
+          |  count(*) AS n
+          |FROM orders_udaf GROUP BY o_orderstatus ORDER BY status""".stripMargin)
+    }
 
   /** E15: ranking window functions, deterministic tie-break. */
   def windowRank(s: SparkSession, dir: String): DataFrame = {
@@ -1437,28 +1424,24 @@ object QueriesRel {
     * recursiveChainSql's minus the hoisted CTE, the hint changes join
     * strategy only, and QueriesRelSpec pins fast == full text.
     */
-  def recursiveChainFast(s: SparkSession, dir: String): DataFrame = {
-    val nxt = t(s, dir, "orders")
-      .select(col("o_custkey").as("cust"), col("o_orderkey").as("k"),
-        row_number().over(Window.partitionBy(col("o_custkey"))
-          .orderBy(col("o_orderdate"), col("o_orderkey"))).as("rn"))
-      .localCheckpoint()
-    // session-unique view name, dropped once `sql()` has RESOLVED it
-    // (analysis embeds the view's plan; execution never re-looks it
-    // up) — a fixed name would leak the checkpointed frame for the
-    // session lifetime and shadow any other unqualified `nxt`
-    val view = s"graft_rec_nxt_${java.util.UUID.randomUUID().toString.take(8)}"
-    nxt.createOrReplaceTempView(view)
-    try s.sql(
-      s"""WITH RECURSIVE chain AS (
-        |  SELECT cust, k, rn, 1 AS depth FROM $view WHERE rn = 1
-        |  UNION ALL
-        |  SELECT /*+ BROADCAST(c) */ n.cust, n.k, n.rn, c.depth + 1
-        |  FROM chain c JOIN $view n ON n.cust = c.cust AND n.rn = c.rn + 1)
-        |SELECT depth, count(*) AS n_orders, CAST(sum(k) AS BIGINT) AS sum_keys
-        |FROM chain GROUP BY depth ORDER BY depth""".stripMargin)
-    finally s.catalog.dropTempView(view)
-  }
+  def recursiveChainFast(s: SparkSession, dir: String): DataFrame =
+    SessionScope.withConf(s) { d =>
+      // the `nxt` view lives on the derived session only
+      t(d, dir, "orders")
+        .select(col("o_custkey").as("cust"), col("o_orderkey").as("k"),
+          row_number().over(Window.partitionBy(col("o_custkey"))
+            .orderBy(col("o_orderdate"), col("o_orderkey"))).as("rn"))
+        .localCheckpoint()
+        .createOrReplaceTempView("nxt")
+      d.sql(
+        """WITH RECURSIVE chain AS (
+          |  SELECT cust, k, rn, 1 AS depth FROM nxt WHERE rn = 1
+          |  UNION ALL
+          |  SELECT /*+ BROADCAST(c) */ n.cust, n.k, n.rn, c.depth + 1
+          |  FROM chain c JOIN nxt n ON n.cust = c.cust AND n.rn = c.rn + 1)
+          |SELECT depth, count(*) AS n_orders, CAST(sum(k) AS BIGINT) AS sum_keys
+          |FROM chain GROUP BY depth ORDER BY depth""".stripMargin)
+    }
 
   /** E53: deterministic mode — the most frequent value per group via a
     * two-level aggregate: count per (group, value), then a row_number

@@ -11,6 +11,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * pinned beside the fresh one. `key` names the artifact and its
   * parameters and must be unique across call sites.
   *
+  * The session is the caller's: a session derived by
+  * [[SessionScope.withConf]] resolves to the session it was derived
+  * from, so every registry entry run for one caller shares its memo,
+  * while a `newSession()` starts empty.
+  *
   * Lifecycle and locking rules:
   *  - sessions are WEAK keys: when a session is dropped, its entries
   *    (and the checkpoint blocks they pin) become collectible;
@@ -39,7 +44,7 @@ private[graft] object SessionMemo {
       build: String => Any): Holder = {
     val tag = Queries.stageTag(dir) // file listing: outside the lock
     entries.synchronized {
-      val m = entries.getOrElseUpdate(s, scala.collection.mutable.Map.empty)
+      val m = entries.getOrElseUpdate(SessionScope.root(s), scala.collection.mutable.Map.empty)
       m.get((dir, key)).filter(_.tag == tag).getOrElse {
         val h = new Holder(tag, () => build(tag))
         m((dir, key)) = h

@@ -1,9 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftInternals, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
+
+import graft.queries.{Queries, SessionScope}
 
 /** Structured Streaming surface (SURVEY.md §2.10 S1-S5) over the events
   * schema. Each transform takes a streaming DataFrame (from
@@ -36,10 +38,9 @@ object StreamingQueries {
   /** Actual physical `ts` type of the events parquet in `eventsDir`
     * (LongType for nanos files, TimestampNTZType for micros files).
     */
-  def eventsTsType(spark: SparkSession, eventsDir: String): DataType = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(eventsDir).schema("ts").dataType
-  }
+  def eventsTsType(spark: SparkSession, eventsDir: String): DataType =
+    SessionScope.withConf(spark, "spark.sql.legacy.parquet.nanosAsLong" -> "true")(
+      _.read.parquet(eventsDir).schema("ts").dataType)
 
   /** `eventsDir` must be a DIRECTORY of events parquet files (Spark's
     * file streaming source watches directories, not single files) —
@@ -55,23 +56,21 @@ object StreamingQueries {
     * respect event time (the proof generator pins mtimes), or size the
     * watermark to cover the writer's full out-of-orderness.
     *
-    * DELIBERATE session-conf writes: UTC timezone and nanosAsLong are
-    * the engine's session contract (every batch entry point sets the
-    * same two through `Queries.t` — oracle parity requires UTC for
-    * NTZ→LTZ casts and epoch renders, and nanos-layout events files
-    * are unreadable without nanosAsLong). A host app embedding this
-    * library in a non-UTC session should run engine queries in their
-    * own session (`spark.newSession()`).
+    * The stream is bound to a session derived from `spark` under the
+    * engine's session contract ([[graft.queries.Queries.Contract]]:
+    * oracle parity requires UTC for NTZ→LTZ casts and epoch renders, and
+    * nanos-layout events files are unreadable without nanosAsLong), so
+    * a non-UTC caller gets the contract without its own session
+    * changing.
     */
-  def readEventsStream(spark: SparkSession, eventsDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    val tsType = eventsTsType(spark, eventsDir)
-    spark.readStream
-      .schema(eventsRawSchema(tsType))
-      .parquet(eventsDir)
-      .withColumn("ts", graft.queries.Queries.normalizeTs("ts", tsType))
-  }
+  def readEventsStream(spark: SparkSession, eventsDir: String): DataFrame =
+    SessionScope.withConf(spark, Queries.Contract: _*) { d =>
+      val tsType = eventsTsType(d, eventsDir)
+      d.readStream
+        .schema(eventsRawSchema(tsType))
+        .parquet(eventsDir)
+        .withColumn("ts", Queries.normalizeTs("ts", tsType))
+    }
 
   /** S1: tumbling 1-hour window counts/sums with a 2-hour watermark. */
   def tumbling(events: DataFrame): DataFrame =
@@ -239,29 +238,29 @@ object StreamingQueries {
     * same contract the batch `s_dedup_latest` query computes).
     */
   def runUpsert(spark: SparkSession, eventsDir: String, targetDir: String,
-      checkpointDir: String, maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(targetDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(targetDir), true)
-    fs.delete(new Path(checkpointDir), true)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tsType = eventsTsType(spark, eventsDir)
-    val reader = spark.readStream.schema(eventsRawSchema(tsType))
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val events = reader.parquet(eventsDir)
-      .withColumn("ts", graft.queries.Queries.normalizeTs("ts", tsType))
-      .select(col("user_id"), col("event_type"), col("event_id"), col("ts"))
-    val q = events.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        upsertMerge(batch.sparkSession, batch.toDF(), targetDir)
-      }
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.read.parquet(targetDir)
-  }
+      checkpointDir: String, maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    SessionScope.withConf(spark, Queries.Contract: _*) { d =>
+      import org.apache.hadoop.fs.Path
+      val fs = new Path(targetDir).getFileSystem(d.sparkContext.hadoopConfiguration)
+      fs.delete(new Path(targetDir), true)
+      fs.delete(new Path(checkpointDir), true)
+      val tsType = eventsTsType(d, eventsDir)
+      val reader = d.readStream.schema(eventsRawSchema(tsType))
+      maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
+      val events = reader.parquet(eventsDir)
+        .withColumn("ts", Queries.normalizeTs("ts", tsType))
+        .select(col("user_id"), col("event_type"), col("event_id"), col("ts"))
+      val q = events.writeStream
+        .outputMode(OutputMode.Append)
+        .option("checkpointLocation", checkpointDir)
+        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
+          upsertMerge(batch.sparkSession, batch.toDF(), targetDir)
+        }
+        .start()
+      try q.processAllAvailable()
+      finally q.stop()
+      d.read.parquet(targetDir)
+    }
 
   /** S12: offline state-store inspection — the `statestore` batch
     * source reads a streaming query's keyed state directly off its
@@ -763,23 +762,8 @@ object StreamingQueries {
     * still splitting mid-row-group — which 2 would weaken to a single
     * boundary. Still scale-invariant (rows/4).
     */
-  def runEventLogTumbling(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    val path = s"$dir/events.parquet"
-    val total = spark.read.format("eventlog").load(path).count()
-    val agg = spark.readStream.format("eventlog")
-      .option("partitions", "4")
-      .option("maxRowsPerTrigger", math.max(1L, total / 4).toString)
-      .load(path)
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))
-      .select(unix_millis(col("w.start")).as("hour_start_ms"), col("event_type"),
-        col("n"), col("total_value"))
-    runToBatch(spark, agg,
-      s"s17log_${java.util.UUID.randomUUID().toString.take(8)}")
-      .orderBy(col("hour_start_ms"), col("event_type"))
-      .localCheckpoint() // the memory-sink table dies with the query
-  }
+  def runEventLogTumbling(spark: SparkSession, dir: String): DataFrame =
+    runEventLog(spark, dir, None)
 
   /** The `s_eventlog_filtered` registry driver (S17 + streaming filter
     * pushdown, r14): the same offset-tracked rate-limited stream, with
@@ -794,27 +778,32 @@ object StreamingQueries {
     * never rows: offsets still advance over skipped row positions, so
     * batch tiling stays exact.
     */
-  def runEventLogFiltered(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    val path = s"$dir/events.parquet"
-    val total = spark.read.format("eventlog").load(path).count()
-    val agg = spark.readStream.format("eventlog")
-      .option("partitions", "4")
-      // rows/4 batches, same sizing (and the same rationale) as
-      // runEventLogTumbling — the filtered twin must tile identically
-      .option("maxRowsPerTrigger", math.max(1L, total / 4).toString)
-      .option("skipWhere", "event_type IN ('click', 'purchase')")
-      .load(path)
-      .filter(col("event_type").isin("click", "purchase"))
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))
-      .select(unix_millis(col("w.start")).as("hour_start_ms"), col("event_type"),
-        col("n"), col("total_value"))
-    runToBatch(spark, agg,
-      s"s17flt_${java.util.UUID.randomUUID().toString.take(8)}")
-      .orderBy(col("hour_start_ms"), col("event_type"))
-      .localCheckpoint() // the memory-sink table dies with the query
-  }
+  def runEventLogFiltered(spark: SparkSession, dir: String): DataFrame =
+    runEventLog(spark, dir, Some("event_type IN ('click', 'purchase')"))
+
+  /** The S17 stream, optionally filtered by `where`, which is both
+    * applied and pushed into the source as its `skipWhere` hint. Both
+    * drivers size batches at rows/4, so the filtered twin tiles
+    * identically.
+    */
+  private def runEventLog(spark: SparkSession, dir: String, where: Option[String]): DataFrame =
+    SessionScope.withConf(spark, Queries.Contract: _*) { d =>
+      val path = s"$dir/events.parquet"
+      val total = d.read.format("eventlog").load(path).count()
+      val reader = d.readStream.format("eventlog")
+        .option("partitions", "4")
+        .option("maxRowsPerTrigger", math.max(1L, total / 4).toString)
+      where.foreach(w => reader.option("skipWhere", w))
+      val events = reader.load(path)
+      val agg = where.fold(events)(w => events.filter(expr(w)))
+        .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
+        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))
+        .select(unix_millis(col("w.start")).as("hour_start_ms"), col("event_type"),
+          col("n"), col("total_value"))
+      runToBatch(d, agg, s"s17log_${java.util.UUID.randomUUID().toString.take(8)}")
+        .orderBy(col("hour_start_ms"), col("event_type"))
+        .localCheckpoint() // the memory-sink table dies with the query
+    }
 
   /** The `s_dedup_simhash_eventtime` registry driver — the one S16
     * entry that runs the REAL STREAM inside the correctness gate
@@ -842,8 +831,7 @@ object StreamingQueries {
     */
   def runEventTimeDedup(spark: SparkSession, dir: String,
       window: Long = Long.MaxValue): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val docs = graft.queries.Queries.t(spark, dir, "documents")
+    val docs = Queries.t(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
     val maxId = docs.agg(max(col("doc_id"))).collect()(0).getLong(0) // 1-row collect
     val nSlices = 12
@@ -890,26 +878,22 @@ object StreamingQueries {
       spark.sparkContext.hadoopConfiguration, watch)
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType)))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(watch)
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // changelog checkpointing (r14): without it every micro-batch
-    // uploads a FULL RocksDB snapshot zip per state partition to the
-    // checkpoint; with it only the batch's key deltas are written and
-    // snapshots happen on the background maintenance cadence. Pure
-    // state-durability IO — the store contents, and therefore every
-    // emitted row, are identical. This is also the structural answer
-    // to the r13 checkpoint-BYTES observation (dir size ~4.7× the
-    // in-order form: that residue was snapshot history, not state).
-    val prevChangelog = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-    try {
-      val verdicts = runToBatch(spark,
-        simhashBandVerdictsEventTime(spark, stream, delay, window),
+    // RocksDB with changelog checkpointing (r14): without it every
+    // micro-batch uploads a FULL RocksDB snapshot zip per state
+    // partition to the checkpoint; with it only the batch's key deltas
+    // are written and snapshots happen on the background maintenance
+    // cadence. Pure state-durability IO — the store contents, and
+    // therefore every emitted row, are identical. This is also the
+    // structural answer to the r13 checkpoint-BYTES observation (dir
+    // size ~4.7× the in-order form: that residue was snapshot history).
+    try SessionScope.withConf(spark,
+        "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true") { d =>
+      val stream = d.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(watch)
+      val verdicts = runToBatch(d,
+        simhashBandVerdictsEventTime(d, stream, delay, window),
         s"s16et_${java.util.UUID.randomUUID().toString.take(8)}",
         OutputMode.Append())
       arrivalVerdictRollup(verdicts)
@@ -917,18 +901,6 @@ object StreamingQueries {
         .orderBy(col("doc_id"))
         .localCheckpoint() // the memory-sink table dies with the query
     } finally {
-      prev match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-      prevChangelog match {
-        case Some(p) => spark.conf.set(
-          "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", p)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
-      }
       // the staged corpus copy is only needed while the stream runs;
       // the result above is localCheckpoint'd, so the files can go
       // (r12 advice: gate entries must not leak a corpus copy per run)
@@ -995,27 +967,22 @@ object StreamingQueries {
   def streamStatePartitions: Int =
     sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "4").toInt
 
+  /** Run `streamed` to completion into a memory sink and return its
+    * table. The stream is re-planned on a session derived from its own
+    * (keeping the conf it was built under) with the state-partition
+    * count set; the sink's view never reaches `spark`'s catalog.
+    */
   def runToBatch(spark: SparkSession, streamed: DataFrame, name: String,
-      mode: OutputMode = OutputMode.Complete()): DataFrame = {
-    // scope the state-partition override to the stream's lifetime; the
-    // session's batch shuffle sizing is restored before the caller's
-    // next action (results are partition-count-invariant either way)
-    val prev = spark.conf.getOption("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", streamStatePartitions.toString)
-    try {
-      val q = streamed.writeStream
+      mode: OutputMode = OutputMode.Complete()): DataFrame =
+    SessionScope.withConf(streamed.sparkSession,
+        "spark.sql.shuffle.partitions" -> streamStatePartitions.toString) { d =>
+      val q = GraftInternals.ofRows(d, streamed.queryExecution.logical).writeStream
         .outputMode(mode)
         .format("memory")
         .queryName(name)
         .start()
       try q.processAllAvailable()
       finally q.stop()
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.shuffle.partitions", p)
-        case None => spark.conf.unset("spark.sql.shuffle.partitions")
-      }
+      d.table(name)
     }
-    spark.table(name)
-  }
 }

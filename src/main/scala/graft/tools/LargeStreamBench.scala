@@ -168,7 +168,7 @@ object LargeStreamBench {
       ((System.nanoTime() - t0) / 1e9, r)
     }
     def stream(name: String, maxFiles: Int): DataFrame = {
-      val tsType = StreamingQueriesAccess.tsType(spark, eventsDir)
+      val tsType = graft.streaming.StreamingQueries.eventsTsType(spark, eventsDir)
       val reader = spark.readStream
         .schema(graft.streaming.StreamingQueries.eventsRawSchema(tsType))
         .option("maxFilesPerTrigger", maxFiles)
@@ -608,12 +608,4 @@ object LargeStreamBench {
       bytes: Long): String =
     s"""{"wall_sec":${f"$sec%.1f"},"rows_per_s":${(n / sec).toLong},""" +
     s""""output_rows":$outRows,"state_rows":$stateRows,"bytes":$bytes}"""
-
-  /** Tiny shim so this tool reuses the probing logic without widening
-    * StreamingQueries' API.
-    */
-  private object StreamingQueriesAccess {
-    def tsType(spark: SparkSession, dir: String) =
-      graft.streaming.StreamingQueries.eventsTsType(spark, dir)
-  }
 }

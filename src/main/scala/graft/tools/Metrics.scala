@@ -5,35 +5,37 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.GraftBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, StageInfo}
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerStageCompleted, StageInfo}
+import org.apache.spark.sql.{GraftInternals, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
-import org.apache.spark.sql.util.QueryExecutionListener
 
 /** One metrics collector: everything Spark reports about the work a
   * block of code does, captured as data instead of hand-timed.
   *
   * {{{ val (result, profile) = Metrics.capture(spark) { df.write.format("noop").save() } }}}
   *
-  * Around `body` it registers three listeners and removes them again,
-  * also when `body` throws:
-  *  - a `SparkListener` that records every completed stage: tasks,
-  *    run/CPU/GC time, shuffle bytes and time, spill, input and output;
-  *  - a `QueryExecutionListener` that records, for every successful
-  *    action on `spark`, the SQL metrics of each physical operator —
-  *    rows out, files read, broadcast size, aggregate time. The walk
-  *    goes through the AQE final plan and its query stages;
-  *  - a `StreamingQueryListener` that records every micro-batch of the
-  *    streams started on `spark`: input rows, the `durationMs` terms
+  * Around `body` it registers one `SparkListener` on `spark`'s context
+  * and removes it again, also when `body` throws. It records:
+  *  - every completed stage: tasks, run/CPU/GC time, shuffle bytes and
+  *    time, spill, input and output;
+  *  - for every successful action, the SQL metrics of each physical
+  *    operator — rows out, files read, broadcast size, aggregate time.
+  *    The walk goes through the AQE final plan and its query stages;
+  *  - every stream micro-batch: input rows, the `durationMs` terms
   *    (addBatch, getBatch, latestOffset, queryPlanning, walCommit,
   *    commitOffsets, ...) and each state operator's rows, memory and
   *    commit time. A stream stopped inside `body` is still recorded.
   *
+  * All three come off the context's bus, so work run on a session
+  * derived from `spark` (the registry runs every entry on one) is seen
+  * too; a per-session `QueryExecutionListener` or
+  * `StreamingQueryListener` would miss it.
+  *
   * Listener events are delivered asynchronously; the bus is drained
-  * before the listeners are added (so earlier work is not counted) and
+  * before the listener is added (so earlier work is not counted) and
   * after `body` returns (so none of its events is missed). `RegistryBench`
   * and `LargeConvertBench` write their profiles through this object.
   */
@@ -102,37 +104,28 @@ object Metrics {
     val stages = new ConcurrentLinkedQueue[Stage]()
     val actions = new ConcurrentLinkedQueue[Action]()
     val batches = new ConcurrentLinkedQueue[Batch]()
-    val stageListener = new SparkListener {
+    val listener = new SparkListener {
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
         stages.add(stage(e.stageInfo))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case end: SparkListenerSQLExecutionEnd =>
+          GraftInternals.succeeded(end).foreach { case (name, ns, qe) =>
+            actions.add(Action(name, ns / 1000000, operators(qe.executedPlan)))
+          }
+        case p: StreamingQueryListener.QueryProgressEvent => batches.add(batch(p.progress))
+        case _ =>
+      }
     }
-    val queryListener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        actions.add(Action(funcName, durationNs / 1000000, operators(qe.executedPlan)))
-      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    val streamListener = new StreamingQueryListener {
-      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
-        batches.add(batch(e.progress))
-      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-    }
-    GraftBus.drain(sc)
-    sc.addSparkListener(stageListener)
-    spark.listenerManager.register(queryListener)
-    spark.streams.addListener(streamListener)
+    GraftInternals.drain(sc)
+    sc.addSparkListener(listener)
     try {
       val t0 = System.nanoTime()
       val result = body
       val wall = (System.nanoTime() - t0) / 1e9
-      GraftBus.drain(sc)
+      GraftInternals.drain(sc)
       (result, Profile(wall, stages.asScala.toSeq.sortBy(_.id), actions.asScala.toSeq,
         batches.asScala.toSeq))
-    } finally {
-      spark.streams.removeListener(streamListener)
-      spark.listenerManager.unregister(queryListener)
-      sc.removeSparkListener(stageListener)
-    }
+    } finally sc.removeSparkListener(listener)
   }
 
   private def stage(si: StageInfo): Stage = {

@@ -138,6 +138,12 @@ class SparkEntrySpec extends AnyFunSuite with BeforeAndAfterAll {
     val bnlj = scala.collection.mutable.ArrayBuffer[String]()
     val single = scala.collection.mutable.ArrayBuffer[String]()
     val failed = scala.collection.mutable.ArrayBuffer[String]()
+    // every entry leaves the caller's session as it found it: the same
+    // conf and the same temp views after each entry as before the loop
+    def tempViews() = spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+    val conf0 = spark.conf.getAll
+    val views0 = tempViews()
+    var touched = Option.empty[String]
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
         val df = fn(spark, dir)
@@ -149,8 +155,16 @@ class SparkEntrySpec extends AnyFunSuite with BeforeAndAfterAll {
       } catch { case scala.util.control.NonFatal(e) =>
         failed += s"$name: ${e.getMessage.take(80)}"
       }
+      if (touched.isEmpty) {
+        val conf = spark.conf.getAll
+        val views = tempViews()
+        if (conf != conf0 || views != views0) touched = Some(
+          s"$name: conf ${(conf.toSet diff conf0.toSet) ++ (conf0.toSet diff conf.toSet)}, " +
+            s"views added ${views -- views0}, removed ${views0 -- views}")
+      }
     }
     assert(failed.isEmpty, s"queries failed to execute under the lint: $failed")
+    assert(touched.isEmpty, s"first entry that changed the caller's session: ${touched.mkString}")
     assert(cart.isEmpty, s"cartesian products in: $cart")
     val bnljBad = bnlj.toSet -- bnljAllowed
     assert(bnljBad.isEmpty,

@@ -187,8 +187,8 @@ class QueriesRelSpec extends AnyFunSuite with BeforeAndAfterAll {
     val saved = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "32")
     try {
-      val j = QueriesRel.skewAqeConfs(spark) { () =>
-        val jj = QueriesRel.skewAqeJoin(spark, dir)
+      val j = QueriesRel.skewAqeConfs(spark) { d =>
+        val jj = QueriesRel.skewAqeJoin(d, dir)
         jj.collect()
         jj
       }

@@ -48,6 +48,17 @@ class SessionMemoSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally pool.shutdownNow()
   }
 
+  test("registry entries run for one caller share the caller's memo") {
+    // each entry runs on its own derived session; the memo resolves it
+    // to the caller, so the second run reuses the first run's index
+    val s2 = spark.newSession()
+    val builds = QueriesLLM.pqBuilds.get()
+    graft.SparkEntry.queries("x_ann_pq")(s2, dir).collect()
+    graft.SparkEntry.queries("x_ann_pq")(s2, dir).collect()
+    assert(QueriesLLM.pqBuilds.get() == builds + 1,
+      s"${QueriesLLM.pqBuilds.get() - builds} PQ index builds for two runs of one entry")
+  }
+
   test("a slow build blocks only callers of its own key") {
     val release = new CountDownLatch(1)
     val entered = new CountDownLatch(1)

@@ -171,6 +171,15 @@ class StampingConvertSpec extends AnyFunSuite with BeforeAndAfterAll {
     UtxoConvert.convert(spark, fixturePath, s"graftdfs:$dfsDir", partitions = 2)
     assert(spark.conf.getAll == conf, "a graftdfs: convert changed the caller's conf")
     assertStamped(dfsDir)
+    // a clustered convert routes by its own sampled bounds without
+    // registering the router on the caller's session
+    UtxoConvert.convert(spark, fixturePath,
+      s"file:${new java.io.File(tmp, "scoped-clustered").getAbsolutePath}", partitions = 2,
+      rangePartition = true)
+    assert(spark.conf.getAll == conf, "a clustered convert changed the caller's conf")
+    assert(!spark.sessionState.functionRegistry.functionExists(
+      org.apache.spark.sql.catalyst.FunctionIdentifier("script_route")),
+      "a clustered convert registered script_route on the caller's session")
     // the committer rode the convert's write only: a plain parquet write
     // on the same session afterwards comes out unstamped
     val plain = new java.io.File(tmp, "plain-out").getAbsolutePath

@@ -112,6 +112,21 @@ class MetricsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(p.batches.last.state.map(_.rowsTotal).sum == 5, p.toJson)
   }
 
+  test("a stream run on a session derived by withConf is recorded") {
+    val src = new java.io.File(tmp, "derived-stream-src").getAbsolutePath
+    spark.range(0, 2000, 1, 2).select((col("id") % 3).as("k")).write.parquet(src)
+    val (rows, p) = Metrics.capture(spark) {
+      graft.queries.SessionScope.withConf(spark, "spark.sql.shuffle.partitions" -> "2") { d =>
+        val streamed = d.readStream.schema("k long").option("maxFilesPerTrigger", "1")
+          .parquet(src).groupBy("k").count()
+        graft.streaming.StreamingQueries.runToBatch(d, streamed, "metrics_spec_derived").collect()
+      }
+    }
+    assert(rows.length == 3)
+    assert(p.batches.map(_.id) == Seq(0L, 1L), p.toJson)
+    assert(p.batches.map(_.inputRows).sum == 2000, p.toJson)
+  }
+
   test("capture removes its listeners, also when the body throws, and never leaks stages") {
     def query() = spark.read.parquet(table).groupBy("k").count().collect()
     val before = spark.streams.listListeners().length
