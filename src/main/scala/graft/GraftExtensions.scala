@@ -2,43 +2,29 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.functions.{DecompressAmountExpr, ScriptTypeExpr, ZOrder2Expr}
+import graft.functions.GraftFunctions
 
 /** Library entry point for Spark's extension mechanism: activating via
   * `spark.sql.extensions=graft.GraftExtensions` (or
   * `SparkSession.builder().withExtensions(new GraftExtensions)`) makes
-  * the engine's native codegen expressions first-class SQL functions in
-  * every session of the application — no per-session `register()` call,
-  * and (unlike temp functions) visible to pure-SQL clients such as the
-  * Thrift server. This is the standard drop-in path for a Spark-native
-  * library on a shared 1000-executor cluster: ship the jar, set one
-  * conf, query.
+  * every native kernel in [[GraftFunctions.Kernels]] a first-class SQL
+  * function in every session of the application — no per-session
+  * `register()` call, and (unlike temp functions) visible to pure-SQL
+  * clients such as the Thrift server. This is the standard drop-in path
+  * for a Spark-native library on a shared 1000-executor cluster: ship
+  * the jar, set one conf, query.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def info(clazz: Class[_], name: String, usage: String): ExpressionInfo =
-    new ExpressionInfo(clazz.getName, null, name, usage, "")
-
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("script_type"),
-      info(classOf[ScriptTypeExpr], "script_type",
-        "script_type(script BINARY) - classifies a scriptPubKey as " +
-          "p2pkh|p2sh|p2pk|p2wpkh|p2wsh|p2tr|op_return|other"),
-      (exprs: Seq[Expression]) => ScriptTypeExpr(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("decompress_amount"),
-      info(classOf[DecompressAmountExpr], "decompress_amount",
-        "decompress_amount(x BIGINT) - inverse of Bitcoin Core's CompressAmount"),
-      (exprs: Seq[Expression]) => DecompressAmountExpr(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("zorder2"),
-      info(classOf[ZOrder2Expr], "zorder2",
-        "zorder2(x BIGINT, y BIGINT) - Morton-interleaved Z-order curve key " +
-          "for multi-dimension clustering layouts"),
-      (exprs: Seq[Expression]) => ZOrder2Expr.widened(exprs)))
+    GraftFunctions.Kernels.foreach { case (name, build) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(GraftFunctions.getClass.getName, null, name,
+          s"$name(...) - native graft kernel; Column form in graft.functions.GraftFunctions", ""),
+        build))
+    }
     // script-class predicates become sargable binary prefix ranges that
     // parquet row-group stats can skip on (the script-sorted layout's
     // whole point) — see the rule's scaladoc

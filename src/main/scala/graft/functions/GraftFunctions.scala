@@ -1,7 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftInternals, SparkSession}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.expressions.{Aggregator, UserDefinedFunction}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.Encoders
@@ -9,8 +10,15 @@ import org.apache.spark.sql.Encoders
 /** Column-level building blocks for the engine's query inventory.
   *
   * Everything here composes codegen'd Catalyst built-ins (SURVEY.md §2
-  * E20-E26, X1-X4); no Scala UDF sits on a hot path. The only UDAF in
-  * the system is [[GeoMean]] (E14).
+  * E20-E26, X1-X4); no Scala UDF sits on a hot path. The system's
+  * only UDAFs are [[GeoMean]] (E14) and the bounded top-k aggregates
+  * [[TopKAgg]] and [[TopKSimAgg]] (E14b).
+  *
+  * Every native kernel is built straight from its Catalyst expression,
+  * so nothing has to be registered on a session before a helper here
+  * is used. [[Kernels]] names them for SQL: `GraftExtensions` injects
+  * it into every session, and [[register]] installs it on one session
+  * built without the extension.
   *
   * Portability rule: any function that must be reproduced by the DuckDB
   * oracle uses only operations with identical semantics in both engines
@@ -36,22 +44,26 @@ object GraftFunctions {
   def permCoeffs(n: Int): Seq[(Long, Long)] =
     (0 until n).map { i => (1103515245L * (i + 1) % MinhashP, 12345L * (i + 7) % MinhashP) }
 
+  private def kernel(e: Expression): Column = GraftInternals.column(e)
+  private def ex(c: Column): Expression = GraftInternals.expression(c)
+
   /** Word k-shingles of a text column: array of the n-k+1 space-joined
     * k-grams (empty when the text has fewer than k tokens). DuckDB
     * mirror: `list_transform(range(len(toks)-k+1), i ->
     * array_to_string(toks[i+1:i+k], ' '))`. Served by the native
     * [[WordShinglesExpr]] kernel (identical strings, whole-stage
     * codegen; the transform+slice HOF form it replaces is interpreted
-    * per element). Requires [[register]] — `Queries.t` registers on
-    * the session it reads a table with, which for a registry entry is
-    * the entry's own derived session, not the caller's.
+    * per element).
     */
-  def shingles(text: Column, k: Int): Column =
-    call_function("word_shingles", text, lit(k))
+  def shingles(text: Column, k: Int): Column = kernel(WordShinglesExpr(ex(text), k))
+
+  /** The same shingles as one row each, column `shingle`, streamed by
+    * the [[ShingleGenerator]] (no per-document array).
+    */
+  def shingleRows(text: Column, k: Int): Column = kernel(ShingleGenerator(ex(text), k))
 
   /** Non-overlapping k-token chunks (see [[WordChunksExpr]]). */
-  def wordChunks(text: Column, k: Int): Column =
-    call_function("word_chunks", text, lit(k))
+  def wordChunks(text: Column, k: Int): Column = kernel(WordChunksExpr(ex(text), k))
 
   /** Sequential left-to-right double dot product of two float vectors.
     * Bitwise-deterministic: the native [[VecDotExpr]] kernel, Spark's
@@ -59,21 +71,18 @@ object GraftFunctions {
     * left-to-right over the same widened doubles — the kernel just does
     * it inside whole-stage codegen instead of per-element interpreted
     * lambdas (HOFs are CodegenFallback; measured ~4× on the pair
-    * loops). Requires [[register]] on the session (all X3/X17 query
-    * builders call it).
+    * loops).
     */
-  def dot(a: Column, b: Column): Column = call_function("vec_dot", a, b)
+  def dot(a: Column, b: Column): Column = kernel(VecDotExpr(ex(a), ex(b)))
 
   /** Integer companion for the SQ8 path: wrapping 64-bit fold. */
-  def dotI64(a: Column, b: Column): Column = call_function("vec_dot_i64", a, b)
+  def dotI64(a: Column, b: Column): Column = kernel(VecDotLongExpr(ex(a), ex(b)))
 
   /** PQ ADC score: sum of the candidate's m LUT hits (see [[AdcScore]]). */
-  def adcScore(codes: Column, lut: Column): Column =
-    call_function("adc_score", codes, lut)
+  def adcScore(codes: Column, lut: Column): Column = kernel(AdcScoreExpr(ex(codes), ex(lut)))
 
   /** |a∩b| of two SORTED string arrays (see [[SortedCommon]]). */
-  def sortedCommon(a: Column, b: Column): Column =
-    call_function("sorted_common", a, b)
+  def sortedCommon(a: Column, b: Column): Column = kernel(SortedCommonExpr(ex(a), ex(b)))
 
   /** Early-exit |a∩b|: exact whenever the true count can still reach
     * `need`, a partial (< need) count the moment it cannot — callers
@@ -81,7 +90,7 @@ object GraftFunctions {
     * [[SortedCommon.countAtLeast]]'s contract).
     */
   def sortedCommonAtLeast(a: Column, b: Column, need: Column): Column =
-    call_function("sorted_common_at_least", a, b, need)
+    kernel(SortedCommonAtLeastExpr(ex(a), ex(b), ex(need)))
 
   /** Parameterized bounded top-k over (DOUBLE sim, BIGINT id) — the
     * [[TopKSimAgg]] aggregate as a directly-applicable column function,
@@ -90,8 +99,12 @@ object GraftFunctions {
     * contract as the `row_number() OVER (ORDER BY sim DESC, id)` window
     * it replaces; partial state is ≤ k pairs per key per partition.
     */
-  def topKSim(k: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
+  def topKSim(k: Int): UserDefinedFunction =
     udaf(new TopKSimAgg(k), Encoders.tuple(Encoders.scalaDouble, Encoders.scalaLong))
+
+  /** [[TopKAgg]], bounded top-k over (BIGINT value, BIGINT id). */
+  def topK(k: Int): UserDefinedFunction =
+    udaf(new TopKAgg(k), Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
@@ -125,104 +138,82 @@ object GraftFunctions {
         + least(meanTokLen / lit(8.0), lit(1.0)) * lit(0.3)) * 10000 + lit(0.5)) / 10000.0
   }
 
-  /** Register SQL-facing functions. The codec scalars are native
-    * codegen Expressions (E26 "promote hot ones"), not Scala UDFs —
-    * they stay inside whole-stage codegen; the three Aggregators
-    * (geo_mean, and the two bounded top-k variants) are the system's
-    * only UDAFs — each exists precisely because no built-in gives a
-    * bounded-state per-key top-k / streaming log-mean.
+  private def intArg(e: Expression): Int = e.eval().asInstanceOf[Number].intValue()
+
+  /** The SQL name and builder of every native scalar and generator
+    * kernel — codegen Expressions (E26 "promote hot ones"), not Scala
+    * UDFs, so they stay inside whole-stage codegen. Integer parameters
+    * are literal arguments in SQL.
+    */
+  val Kernels: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    ("script_type", e => ScriptTypeExpr(e.head)),
+    ("decompress_amount", e => DecompressAmountExpr(e.head)),
+    ("zorder2", ZOrder2Expr.validated),
+    ("minhash_sigs", e => MinHashSigsExpr(e.head)),
+    ("simhash48", e => SimHash48Expr(e.head, 48)),
+    ("simhash60", e => SimHash48Expr(e.head, 60)),
+    ("vec_dot", e => VecDotExpr(e.head, e(1))),
+    ("vec_dot_i64", e => VecDotLongExpr(e.head, e(1))),
+    ("adc_score", e => AdcScoreExpr(e.head, e(1))),
+    ("sorted_common", e => SortedCommonExpr(e.head, e(1))),
+    ("sorted_common_at_least", e => SortedCommonAtLeastExpr(e.head, e(1), e(2))),
+    ("quant6", e => QuantizeMicroExpr(e.head)),
+    ("quant_nd2", e => QuantNd2Expr(e.head, intArg(e(1)), intArg(e(2)), e(3), e(4))),
+    ("quant_argmin", e => QuantArgminExpr(e.head, intArg(e(1)), intArg(e(2)), e(3), e(4))),
+    ("lsh_sign_bits", e => LshSignBitsExpr(e.head, intArg(e(1)))),
+    ("word_shingles", e => WordShinglesExpr(e.head, intArg(e(1)))),
+    ("word_chunks", e => WordChunksExpr(e.head, intArg(e(1)))),
+    ("shingle_gen", e => ShingleGenerator(e.head, intArg(e(1)))))
+
+  /** Make [[Kernels]] and the three UDAFs (`geo_mean`, `top_k3`,
+    * `top_k3_sim`) SQL functions of `spark` — for a session built
+    * without `GraftExtensions` that runs SQL text naming them. The
+    * Column helpers here need neither.
     */
   def register(spark: SparkSession): Unit = {
-    // idempotent fast path: Queries.t calls this on every table read
-    if (spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("word_shingles"))) return
     spark.udf.register("geo_mean", udaf(GeoMean))
-    spark.udf.register("top_k3",
-      udaf(new TopKAgg(3), Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)))
-    spark.udf.register("top_k3_sim",
-      udaf(new TopKSimAgg(3), Encoders.tuple(Encoders.scalaDouble, Encoders.scalaLong)))
+    spark.udf.register("top_k3", topK(3))
+    spark.udf.register("top_k3_sim", topKSim(3))
     val registry = spark.sessionState.functionRegistry
-    registry.createOrReplaceTempFunction("script_type",
-      exprs => ScriptTypeExpr(exprs.head), "built-in")
-    registry.createOrReplaceTempFunction("decompress_amount",
-      exprs => DecompressAmountExpr(exprs.head), "built-in")
-    registry.createOrReplaceTempFunction("zorder2",
-      exprs => ZOrder2Expr.widened(exprs), "built-in")
-    registry.createOrReplaceTempFunction("minhash_sigs",
-      exprs => MinHashSigsExpr(exprs.head), "built-in")
-    registry.createOrReplaceTempFunction("simhash48",
-      exprs => SimHash48Expr(exprs.head, 48), "built-in")
-    registry.createOrReplaceTempFunction("simhash60",
-      exprs => SimHash48Expr(exprs.head, 60), "built-in")
-    registry.createOrReplaceTempFunction("vec_dot",
-      exprs => VecDotExpr(exprs.head, exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction("vec_dot_i64",
-      exprs => VecDotLongExpr(exprs.head, exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction("adc_score",
-      exprs => AdcScoreExpr(exprs.head, exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction("sorted_common",
-      exprs => SortedCommonExpr(exprs.head, exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction("sorted_common_at_least",
-      exprs => SortedCommonAtLeastExpr(exprs.head, exprs(1), exprs(2)), "built-in")
-    registry.createOrReplaceTempFunction("quant6",
-      exprs => QuantizeMicroExpr(exprs.head), "built-in")
-    registry.createOrReplaceTempFunction("quant_nd2",
-      exprs => QuantNd2Expr(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        exprs(2).eval().asInstanceOf[Number].intValue(),
-        exprs(3), exprs(4)), "built-in")
-    registry.createOrReplaceTempFunction("quant_argmin",
-      exprs => QuantArgminExpr(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        exprs(2).eval().asInstanceOf[Number].intValue(),
-        exprs(3), exprs(4)), "built-in")
-    registry.createOrReplaceTempFunction("lsh_sign_bits",
-      exprs => LshSignBitsExpr(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
-    registry.createOrReplaceTempFunction("word_shingles",
-      exprs => WordShinglesExpr(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
-    registry.createOrReplaceTempFunction("word_chunks",
-      exprs => WordChunksExpr(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
-    registry.createOrReplaceTempFunction("shingle_gen",
-      exprs => ShingleGenerator(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
+    Kernels.foreach { case (name, build) =>
+      registry.createOrReplaceTempFunction(name, build, "built-in")
+    }
   }
 
   /** The clustered-convert range router over THIS convert's sampled
-    * bounds, built as a column straight from [[ScriptRouteExpr]]: the
-    * bounds are per-call data, so nothing is registered on `spark` and
-    * two converts on one session never route with each other's bounds.
+    * bounds: the bounds are per-call data, so two converts never route
+    * with each other's bounds.
     */
-  def scriptRoute(spark: SparkSession, bounds: Array[Array[Byte]],
-      tokens: Array[Int], script: Column): Column =
-    GraftInternals.column(ScriptRouteExpr(GraftInternals.expression(script), bounds, tokens))
+  def scriptRoute(bounds: Array[Array[Byte]], tokens: Array[Int], script: Column): Column =
+    kernel(ScriptRouteExpr(ex(script), bounds, tokens))
 
-  /** Column-API forms of the native expressions (resolve through the
-    * session registry — call [[register]] first).
+  def scriptType(c: Column): Column = kernel(ScriptTypeExpr(ex(c)))
+  def decompressAmount(c: Column): Column = kernel(DecompressAmountExpr(ex(c)))
+  /** Z-order key of two integral columns ([[ZOrder2Expr.widened]]);
+    * unlike the SQL form, the argument types are not checked.
     */
-  def scriptType(c: Column): Column = call_function("script_type", c)
-  def decompressAmount(c: Column): Column = call_function("decompress_amount", c)
-  def zorder2(x: Column, y: Column): Column = call_function("zorder2", x, y)
-  def minhashSigs(c: Column): Column = call_function("minhash_sigs", c)
-  def simhash48(c: Column): Column = call_function("simhash48", c)
+  def zorder2(x: Column, y: Column): Column = kernel(ZOrder2Expr.widened(ex(x), ex(y)))
+  def minhashSigs(c: Column): Column = kernel(MinHashSigsExpr(ex(c)))
+  def simhash48(c: Column): Column = kernel(SimHash48Expr(ex(c), 48))
   /** Full-width (60-bit) fingerprint — the banded near-dup input since
     * r10; the md5-derived token hash carries exactly 60 bits.
     */
-  def simhash60(c: Column): Column = call_function("simhash60", c)
-  def lshSignBits(v: Column, nBits: Int): Column =
-    call_function("lsh_sign_bits", v, lit(nBits))
-  /** Micro-quantize ARRAY<DOUBLE> → ARRAY<BIGINT> (see [[QuantizeMicro]]). */
-  def quant6(v: Column): Column = call_function("quant6", v.cast("array<double>"))
+  def simhash60(c: Column): Column = kernel(SimHash48Expr(ex(c), 60))
+  def lshSignBits(v: Column, nBits: Int): Column = kernel(LshSignBitsExpr(ex(v), nBits))
+  /** Micro-quantize ARRAY<DOUBLE> → ARRAY<BIGINT> (see [[QuantizeMicro]]):
+    * every element becomes floor(x·1e6 + 0.5). The fully-oracled ANN
+    * paths quantize with it, so everything downstream of the KMeans fit
+    * is exact integer arithmetic that the DuckDB oracle replicates.
+    */
+  def quant6(v: Column): Column = kernel(QuantizeMicroExpr(ex(v.cast("array<double>"))))
   /** Argmin cell over a flattened quantized codebook (see [[QuantArgmin]]). */
   def quantArgmin(q: Column, offset: Int, len: Int,
       centsFlat: Column, cn2: Column): Column =
-    call_function("quant_argmin", q, lit(offset), lit(len), centsFlat, cn2)
+    kernel(QuantArgminExpr(ex(q), offset, len, ex(centsFlat), ex(cn2)))
   /** Per-cell pseudo-distance list (see [[QuantNd2]]). */
   def quantNd2(q: Column, offset: Int, len: Int,
       centsFlat: Column, cn2: Column): Column =
-    call_function("quant_nd2", q, lit(offset), lit(len), centsFlat, cn2)
+    kernel(QuantNd2Expr(ex(q), offset, len, ex(centsFlat), ex(cn2)))
 }
 
 /** Bounded-memory top-k-per-key aggregate (E14b): keeps the k largest

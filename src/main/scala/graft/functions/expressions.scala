@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, Expression, TernaryExpression, UnaryExpression}
-// Cast: used by ZOrder2Expr.widened to accept INT args from SQL callers
+// Cast: used by ZOrder2Expr.widened to accept INT args
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -71,13 +71,18 @@ case class ZOrder2Expr(left: Expression, right: Expression)
 }
 
 object ZOrder2Expr {
-  /** Builder for the function registries: widens integral args to
-    * BIGINT (the expression itself is monomorphic on LongType).
-    * Validates like a built-in — wrong arity or a non-integral argument
-    * (DOUBLE/STRING would silently truncate through the Cast) is an
-    * analysis-time error, not a runtime exception.
+  /** The key over two integral inputs widened to BIGINT (the
+    * expression itself is monomorphic on LongType).
     */
-  def widened(exprs: Seq[Expression]): ZOrder2Expr = {
+  def widened(x: Expression, y: Expression): ZOrder2Expr =
+    ZOrder2Expr(Cast(x, LongType), Cast(y, LongType))
+
+  /** Builder for the SQL function registries: [[widened]] after
+    * validating like a built-in — wrong arity or a non-integral
+    * argument (DOUBLE/STRING would silently truncate through the Cast)
+    * is an analysis-time error, not a runtime exception.
+    */
+  def validated(exprs: Seq[Expression]): ZOrder2Expr = {
     if (exprs.length != 2)
       throw new org.apache.spark.sql.AnalysisException(
         errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
@@ -97,7 +102,7 @@ object ZOrder2Expr {
             "paramIndex" -> (i + 1).toString, "requiredType" -> "integral",
             "inputSql" -> e.sql, "inputType" -> e.dataType.sql))
     }
-    ZOrder2Expr(Cast(exprs.head, LongType), Cast(exprs(1), LongType))
+    widened(exprs.head, exprs(1))
   }
 }
 
@@ -979,9 +984,9 @@ case class WordShinglesExpr(child: Expression, k: Int) extends UnaryExpression {
   * shingle at a time from a lazily-advanced iterator, so peak memory
   * per row is ONE shingle regardless of document length — the 100 TB
   * outlier-document insurance. Plan-level extension tier (c): a custom
-  * Generator under GenerateExec, registered like any table-valued
-  * function; output rows are identical to the explode form
-  * (spec-pinned).
+  * Generator under GenerateExec (`GraftFunctions.shingleRows`, or
+  * `shingle_gen` in SQL); output rows are identical to the explode
+  * form (spec-pinned).
   */
 case class ShingleGenerator(child: Expression, k: Int)
     extends UnaryExpression

@@ -88,7 +88,7 @@ object Queries {
     // exists to avoid: at the 1M-vector ANN proof (10,000 query keys,
     // ~80M candidate pairs) the fallback measured the LSH path ~4×
     // slower than the rank window it replaced. Safe to raise here
-    // because every typed aggregate this engine registers carries a
+    // because every typed aggregate this engine defines carries a
     // BOUNDED buffer (top-k: ≤ k pairs/key; GeoMean: 2 scalars) — 64Ki
     // keys × the largest k is megabytes per task, not a spill risk.
     // CAVEAT: the conf covers the whole entry, so it also delays the
@@ -111,9 +111,6 @@ object Queries {
     * TimestampType in UTC, the value DuckDB computes.
     */
   def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    // every query builder funnels through here: make the native kernel
-    // functions (vec_dot, word_shingles, ...) resolvable on its session
-    graft.functions.GraftFunctions.register(s)
     val df = s.read.parquet(s"$dir/$name.parquet")
     if (name == "events") df.withColumn("ts", normalizeTs("ts", df.schema("ts").dataType))
     else df
@@ -889,7 +886,7 @@ object Queries {
   private def longList(xs: Seq[Long]): String = xs.mkString("[", ", ", "]")
 
   /** Shared micro-quantization clause — the SQL text mirror of
-    * [[QueriesLLM.quant6]]. */
+    * [[graft.functions.GraftFunctions.quant6]]. */
   private val quantClause =
     "list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT))"
 

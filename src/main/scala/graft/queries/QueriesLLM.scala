@@ -92,7 +92,6 @@ object QueriesLLM {
     // kernel), which makes THIS query — banding join included — fully
     // DuckDB-expressible: the r6 oracle replicates sig → band → join →
     // est bit-for-bit, and the four graph consumers inherit it.
-    graft.functions.GraftFunctions.register(s)
     // spread heavy (r15): 128-perm MinHash over every shingle is the
     // one genuinely expensive linear kernel in the signature family
     val sigArr = Queries.spread(t(s, dir, "documents"), Queries.SpreadHeavy)
@@ -363,7 +362,6 @@ object QueriesLLM {
     * DuckDB.
     */
   def simhashAll(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // spread moderate (r15; was full-width r14, which REGRESSED the
     // 32-core bench 0.72→1.20 s — the md5-per-token kernel is a few
     // hundred ms/MB, cheaper than a core-count-wide exchange)
@@ -380,7 +378,6 @@ object QueriesLLM {
     // norms precomputed per vector BEFORE the pair join: O(N·d) once
     // instead of O(N²·d) inside it; sqrt of the same sequential fold →
     // bitwise-identical sims, 3× less per-pair arithmetic
-    graft.functions.GraftFunctions.register(s) // native vec_dot kernel
     val e = t(s, dir, "embeddings")
     val q = e.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
@@ -423,7 +420,6 @@ object QueriesLLM {
     * smaller vec_id — fully deterministic.
     */
   def knnClassify(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s) // native vec_dot kernel
     val e = t(s, dir, "embeddings")
     val q = e.filter(col("vec_id") % 20 === 0)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
@@ -539,7 +535,6 @@ object QueriesLLM {
     * mirroring [[cosineTopk]].
     */
   def annQuantized(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s) // native vec_dot_i64 kernel
     val q8 = t(s, dir, "embeddings")
       .select(col("vec_id"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
@@ -627,7 +622,6 @@ object QueriesLLM {
     */
   private[queries] def lshCandIndex(s: SparkSession, dir: String,
       tables: Int, bitsPerTable: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     t(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"),
         norm(col("embedding")).as("nrm"),
@@ -645,7 +639,6 @@ object QueriesLLM {
     */
   private def lshSearch(s: SparkSession, dir: String, cand: DataFrame,
       tables: Int, bitsPerTable: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val bpt = bitsPerTable
     // query probes: per table, the exact bucket plus each Hamming-1
     // flip (numeric bit-flip = XOR with a power of two) — queries
@@ -792,18 +785,6 @@ object QueriesLLM {
   private[queries] def ivfTrainStride(total: Long): Long =
     math.max(1L, total / IvfTrainTarget)
 
-  /** Micro-quantization shared by the fully-oracled ANN paths (the
-    * x_ann_lsh discipline of r7 §8, one level up): every vector element
-    * becomes floor(x·1e6 + 0.5) as a 64-bit integer. Everything
-    * downstream of the KMeans FIT — cell assignment, probe selection,
-    * ADC scoring, the exact refine — is then exact integer arithmetic,
-    * bit-reproducible in any engine, so the generated DuckDB oracle
-    * replicates it clause for clause with the quantized centroids
-    * embedded as literals.
-    */
-  private[queries] def quant6(v: Column): Column =
-    graft.functions.GraftFunctions.quant6(v) // codegen kernel since r8
-
   /** The fitted coarse quantizer, quantized to micro-units: k centroids
     * plus their squared norms (all ≤ 64·(1e6)² — far inside BIGINT).
     * The fit stays engine-side (seeded, sample-trained KMeans — a model,
@@ -872,7 +853,6 @@ object QueriesLLM {
     * ties = lowest cell, exactly list_position's contract in the oracle.
     */
   private[graft] def ivfAssign(s: SparkSession, dir: String, mdl: QuantCents): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     t(s, dir, "embeddings")
       .select(col("vec_id"), quant6(col("embedding")).as("q"))
       .select(col("vec_id").as("cand_id"), col("q").as("cq"),
@@ -888,7 +868,6 @@ object QueriesLLM {
     */
   private def ivfSearch(s: SparkSession, dir: String, assigned: DataFrame,
       mdl: QuantCents, nprobe: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // query side: always from the raw corpus (queries arrive as
     // vectors, not index rows) — quantize + rank nprobe nearest cells
     // per query, (nd2, cell) asc
@@ -921,7 +900,7 @@ object QueriesLLM {
         (dotI64(col("qq"), col("cq")) /
           (sqrt(col("qn").cast("double")) * sqrt(col("cn2").cast("double")))).as("sim"))
       .groupBy(col("query_id"))
-      .agg(expr("top_k3_sim(sim, cand_id)").as("top"))
+      .agg(topKSim(3)(col("sim"), col("cand_id")).as("top"))
       .select(col("query_id"), posexplode(col("top")))
       .select(col("query_id"), col("col._2").as("cand_id"),
         (col("pos") + 1).cast("int").as("rnk"),
@@ -1105,7 +1084,6 @@ object QueriesLLM {
   private[queries] def pqIndexBuild(s: SparkSession, dir: String, k: Int,
       m: Int): PqIndex = {
     pqBuilds.incrementAndGet()
-    graft.functions.GraftFunctions.register(s)
     val subDim = 64 / m
     val mdl = pqModelFor(s, dir, k, m)
     val e = t(s, dir, "embeddings")
@@ -1164,7 +1142,6 @@ object QueriesLLM {
   private[graft] def pqStagePlans(s: SparkSession, dir: String, codes: DataFrame,
       mdl: PqModel, nprobe: Int, m: Int, rerank: Int,
       shortlistHint: Option[String] = None): PqStagePlans = {
-    graft.functions.GraftFunctions.register(s)
     import s.implicits._
     val subDim = 64 / m
     // LUT stride = codes per subspace (pqModelFor guarantees uniformity)
@@ -1357,7 +1334,6 @@ object QueriesLLM {
     */
   def bpeTrain(s: SparkSession, dir: String, nMerges: Int = 10): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     // word-frequency table; symbols start as characters, space-joined
     var vocab = Queries.spread(t(s, dir, "documents")) // r14: see Queries.spread
       .select(explode(split(col("text"), " ")).as("w"))
@@ -1471,7 +1447,6 @@ object QueriesLLM {
     * all-pairs join ([[embedDedupLsh]]).
     */
   def embedDedup(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s) // native vec_dot kernel
     val e = t(s, dir, "embeddings")
       .filter(col("vec_id") % 5 === 0 && col("vec_id") < EmbedSampleCap)
     // norms once per vector, not per pair (see cosineTopk)
@@ -1521,7 +1496,6 @@ object QueriesLLM {
     */
   def embedDedupLsh(s: SparkSession, dir: String,
       tables: Int = 4, bitsPerTable: Int = 6, tau: Double = 0.3): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val idx = lshCandIndex(s, dir, tables, bitsPerTable).localCheckpoint()
     val a = idx.select(col("bucket"), col("cand_id").as("vec_a"),
       col("cv").as("va"), col("cn").as("na"))

@@ -225,9 +225,8 @@ object QueriesScalar {
     * oracles it.
     */
   def generatorShingles(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     t(s, dir, "documents")
-      .select(call_function("shingle_gen", col("text"), lit(3)))
+      .select(graft.functions.GraftFunctions.shingleRows(col("text"), 3))
       .groupBy(col("shingle"))
       .agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("shingle"))
@@ -524,7 +523,6 @@ object QueriesScalar {
     * this query pins the code values against a bit-arithmetic oracle).
     */
   def zorderKeys(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     t(s, dir, "lineitem")
       .filter(col("l_orderkey") % 50 === 0)
       .select(col("l_orderkey"), col("l_linenumber"),

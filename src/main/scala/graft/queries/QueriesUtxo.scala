@@ -63,9 +63,8 @@ object QueriesUtxo {
     */
   def e2eScriptTypes(s: SparkSession, dir: String): DataFrame = {
     val parquet = ensureConverted(s)
-    graft.functions.GraftFunctions.register(s)
     UtxoConvert.readConverted(s, parquet)
-      .groupBy(callUDF("script_type", col("script")).as("script_class"))
+      .groupBy(graft.functions.GraftFunctions.scriptType(col("script")).as("script_class"))
       .agg(count(lit(1)).as("n"), sum(col("amount")).as("total_sats"))
       .orderBy(col("script_class"))
   }

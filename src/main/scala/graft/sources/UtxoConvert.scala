@@ -283,7 +283,7 @@ object UtxoConvert {
         // binary search against the sampled bounds inside whole-stage
         // codegen — see graft.functions.ScriptRouteExpr
         df.repartition(n,
-          graft.functions.GraftFunctions.scriptRoute(spark, bounds, tokens, col("script")))
+          graft.functions.GraftFunctions.scriptRoute(bounds, tokens, col("script")))
         }
         }
       } else df

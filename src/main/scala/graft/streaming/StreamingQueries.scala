@@ -687,7 +687,7 @@ object StreamingQueries {
   def simhashBandVerdictsEventTime(spark: SparkSession, docs: DataFrame,
       maxDisorderIds: Long, window: Long = Long.MaxValue): DataFrame = {
     import spark.implicits._
-    bandedBuckets(spark, docs)
+    bandedBuckets(docs)
       // event clock = (id + 1) seconds: the +1 keeps id 0 OFF epoch 0 —
       // the initial watermark is 0 and the operator's late filter drops
       // ts <= watermark, so a doc at exactly epoch 0 would be misdropped
@@ -710,8 +710,7 @@ object StreamingQueries {
     * (band, bits) bucket: band_idx << 15 | bits. One definition so the
     * in-order, windowed, and event-time forms cannot drift in banding.
     */
-  private def bandedBuckets(spark: SparkSession, docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
+  private def bandedBuckets(docs: DataFrame): DataFrame = {
     docs
       .select(col("doc_id"),
         graft.functions.GraftFunctions.simhash60(col("text")).as("fp"))
@@ -727,7 +726,7 @@ object StreamingQueries {
       processor: org.apache.spark.sql.streaming.StatefulProcessor[
         Long, (Long, Long, Long), (Long, Seq[Long])]): DataFrame = {
     import spark.implicits._
-    bandedBuckets(spark, docs)
+    bandedBuckets(docs)
       .as[(Long, Long, Long)]
       .groupByKey(_._1)
       .transformWithState(processor,

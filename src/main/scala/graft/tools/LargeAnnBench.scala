@@ -65,7 +65,6 @@ object LargeAnnBench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
 
     val dir = s"/tmp/graft_large_vecs_$nVecs"
     val table = new java.io.File(s"$dir/embeddings.parquet")

@@ -43,6 +43,33 @@ class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(desc.contains("script_type"))
   }
 
+  test("every native kernel in the table resolves as an injected SQL function") {
+    val cls = graft.functions.GraftFunctions.getClass.getName
+    graft.functions.GraftFunctions.Kernels.foreach { case (name, _) =>
+      val desc = spark.sql(s"DESCRIBE FUNCTION $name")
+        .collect().map(_.getString(0)).mkString("\n")
+      assert(desc.contains(s"Function: $name") && desc.contains(s"Class: $cls"),
+        s"$name is not injected:\n$desc")
+    }
+  }
+
+  test("SQL kernels equal their Column-helper forms") {
+    import org.apache.spark.sql.functions.lit
+    import graft.functions.GraftFunctions
+    val viaSql = spark.sql(
+      """SELECT word_shingles('a b c d', 3) AS sh,
+        |  vec_dot(CAST(array(1.0, 2.0) AS ARRAY<FLOAT>),
+        |          CAST(array(3.0, 4.0) AS ARRAY<FLOAT>)) AS d""".stripMargin)
+      .collect()(0)
+    val viaColumn = spark.range(1).select(
+      GraftFunctions.shingles(lit("a b c d"), 3).as("sh"),
+      GraftFunctions.dot(lit(Array(1.0f, 2.0f)), lit(Array(3.0f, 4.0f))).as("d"))
+      .collect()(0)
+    assert(viaSql.getSeq[String](0) == Seq("a b c", "b c d"))
+    assert(viaSql.getDouble(1) == 11.0)
+    assert(viaSql == viaColumn)
+  }
+
   /** Fixture scripts covering several classes, one of each. */
   private def scriptRows: Seq[Array[Byte]] = {
     def b(xs: Int*): Array[Byte] = xs.map(_.toByte).toArray

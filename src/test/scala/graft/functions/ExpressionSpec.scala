@@ -93,7 +93,7 @@ class ExpressionSpec extends AnyFunSuite with BeforeAndAfterAll {
     rows.toDF("script").write.mode("overwrite").parquet(dir)
     val df = spark.read.parquet(dir)
     val routed = df.select(col("script"),
-      GraftFunctions.scriptRoute(spark, bounds, tokens, col("script")).as("r"))
+      GraftFunctions.scriptRoute(bounds, tokens, col("script")).as("r"))
     routed.collect().foreach { r =>
       val s = r.getAs[Array[Byte]](0)
       assert(r.getInt(1) == expected(s(0)), s"script ${s(0) & 0xff}")
@@ -101,12 +101,12 @@ class ExpressionSpec extends AnyFunSuite with BeforeAndAfterAll {
     // exact-boundary scripts route to the bucket ABOVE the bound
     // (bound <= script), matching the sampler's cut-point contract
     val atBound = spark.range(1).select(
-      GraftFunctions.scriptRoute(spark, bounds, tokens, lit(Array[Byte](0x10))).as("r"))
+      GraftFunctions.scriptRoute(bounds, tokens, lit(Array[Byte](0x10))).as("r"))
     assert(atBound.collect()(0).getInt(0) == tokens(1))
     // the clustered-convert shape (repartition on the routing column)
     // must carry no ScalaUDF anywhere in its physical plan
     val plan = df.repartition(4,
-      GraftFunctions.scriptRoute(spark, bounds, tokens, col("script")))
+      GraftFunctions.scriptRoute(bounds, tokens, col("script")))
       .queryExecution.executedPlan.toString
     assert(!plan.contains("ScalaUDF"), plan)
     assert(plan.contains("script_route"), plan)

@@ -48,6 +48,25 @@ class SessionMemoSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally pool.shutdownNow()
   }
 
+  test("query builders called directly leave the caller's function registry alone") {
+    // the builders Bench calls outside the registry, a stream driver
+    // that reaches the banded simhash kernel, and the top-k UDAF entry
+    val s2 = spark.newSession()
+    def functions: Set[String] =
+      s2.sessionState.functionRegistry.listFunction().map(_.unquotedString).toSet
+    val before = functions
+    // a fresh corpus dir, so the z-ordered layout is built, not reused
+    val fresh = Files.createTempDirectory("zorder-fresh")
+    copyTable(dir, fresh, "lineitem")
+    s2.read.parquet(QueriesRel.zorderedLineitem(s2, fresh.toString)).count()
+    QueriesLLM.minhashLshPairs(s2, dir).count()
+    QueriesLLM.exactJaccardPairs(s2, dir).count()
+    graft.streaming.StreamingQueries.runEventTimeDedup(s2, dir).count()
+    QueriesRel.topkPerKey(s2, dir).collect()
+    val added = functions -- before
+    assert(added.isEmpty, s"builders registered ${added.size} functions: ${added.toSeq.sorted}")
+  }
+
   test("registry entries run for one caller share the caller's memo") {
     // each entry runs on its own derived session; the memo resolves it
     // to the caller, so the second run reuses the first run's index
