@@ -81,7 +81,9 @@ object GraftFunctions {
   /** PQ ADC score: sum of the candidate's m LUT hits (see [[AdcScore]]). */
   def adcScore(codes: Column, lut: Column): Column = kernel(AdcScoreExpr(ex(codes), ex(lut)))
 
-  /** |a∩b| of two SORTED string arrays (see [[SortedCommon]]). */
+  /** |a∩b| of two SORTED arrays, both STRING or both BIGINT (see
+    * [[SortedCommon]]); unlike the SQL form, INT arrays are not widened.
+    */
   def sortedCommon(a: Column, b: Column): Column = kernel(SortedCommonExpr(ex(a), ex(b)))
 
   /** Early-exit |a∩b|: exact whenever the true count can still reach
@@ -155,8 +157,9 @@ object GraftFunctions {
     ("vec_dot", e => VecDotExpr(e.head, e(1))),
     ("vec_dot_i64", e => VecDotLongExpr(e.head, e(1))),
     ("adc_score", e => AdcScoreExpr(e.head, e(1))),
-    ("sorted_common", e => SortedCommonExpr(e.head, e(1))),
-    ("sorted_common_at_least", e => SortedCommonAtLeastExpr(e.head, e(1), e(2))),
+    ("sorted_common", e => SortedCommonExpr(SortedCommon.widened(e.head), SortedCommon.widened(e(1)))),
+    ("sorted_common_at_least", e => SortedCommonAtLeastExpr(
+      SortedCommon.widened(e.head), SortedCommon.widened(e(1)), e(2))),
     ("quant6", e => QuantizeMicroExpr(e.head)),
     ("quant_nd2", e => QuantNd2Expr(e.head, intArg(e(1)), intArg(e(2)), e(3), e(4))),
     ("quant_argmin", e => QuantArgminExpr(e.head, intArg(e(1)), intArg(e(2)), e(3), e(4))),

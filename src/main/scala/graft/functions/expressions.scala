@@ -1,9 +1,12 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult.DataTypeMismatch
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, Expression, TernaryExpression, UnaryExpression}
-// Cast: used by ZOrder2Expr.widened to accept INT args
+// Cast: used by ZOrder2Expr.widened and SortedCommon.widened to accept INT args
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, IntegerType, LongType, ShortType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions for the hot codec-derived scalar
@@ -622,7 +625,7 @@ case class QuantArgminExpr(q: Expression, offset: Int, len: Int,
 }
 
 /** Sorted-set intersection count kernel (X2/X6/X19 exact-verify hot
-  * path): two ASCENDING-sorted string arrays → |a∩b| by a single
+  * path): two ASCENDING-sorted arrays → |a∩b| by a single
   * allocation-free merge walk. Replaces `size(array_intersect(a, b))`
   * in the Jaccard verify stage: ArrayIntersect/ArrayUnion are
   * interpreted (`nullSafeEval` + a fresh hash set per ROW) — at sf1
@@ -632,46 +635,18 @@ case class QuantArgminExpr(q: Expression, offset: Int, len: Int,
   * the count is the only array work the verify needs. Inputs MUST be
   * sorted (callers `array_sort` once per document, not per pair);
   * unsorted inputs undercount — kept cheap on purpose, like VecDot's
-  * length contract.
+  * length contract. Two merges, STRING and BIGINT, the one to run
+  * chosen when the plan is built, never per row; [[checkInputs]]
+  * makes any other pair of inputs an analysis error.
   */
 object SortedCommon {
-  def count(a: org.apache.spark.sql.catalyst.util.ArrayData,
-      b: org.apache.spark.sql.catalyst.util.ArrayData): Int = {
-    val n = a.numElements()
-    val m = b.numElements()
-    var i = 0
-    var j = 0
-    var c = 0
-    while (i < n && j < m) {
-      val cmp = a.getUTF8String(i).compareTo(b.getUTF8String(j))
-      if (cmp == 0) { c += 1; i += 1; j += 1 }
-      else if (cmp < 0) i += 1
-      else j += 1
-    }
-    c
-  }
+  def count(a: ArrayData, b: ArrayData): Int = countAtLeast(a, b, 0)
 
-  /** ARRAY<INT> overload — the dictionary-encoded verify path (r14):
-    * after shingles are mapped to dense int ids the merge compares
-    * ints, not UTF8 byte strings, and the arrays it walks are ~5×
-    * smaller on the wire. Same sorted-input contract.
+  /** ARRAY<BIGINT> merge — the exact-Jaccard verify path, whose
+    * dictionary keys are packed longs (see `QueriesLLM.shingleKey`):
+    * longs compare without touching UTF8 bytes.
     */
-  def countInt(a: org.apache.spark.sql.catalyst.util.ArrayData,
-      b: org.apache.spark.sql.catalyst.util.ArrayData): Int = {
-    val n = a.numElements()
-    val m = b.numElements()
-    var i = 0
-    var j = 0
-    var c = 0
-    while (i < n && j < m) {
-      val x = a.getInt(i)
-      val y = b.getInt(j)
-      if (x == y) { c += 1; i += 1; j += 1 }
-      else if (x < y) i += 1
-      else j += 1
-    }
-    c
-  }
+  def countLong(a: ArrayData, b: ArrayData): Int = countAtLeastLong(a, b, 0)
 
   /** Threshold-aware merge (r13): EXACT |a∩b| whenever the true count
     * can still reach `need`; the moment c + min(remaining) < need —
@@ -684,10 +659,10 @@ object SortedCommon {
     * and whose ratio filter is strictly increasing in the count. On
     * the sf1 verify (87M candidate pairs, ~28-element sets, τ = 0.2 ⇒
     * need ≈ 10) most pairs exit a third of the way through the merge
-    * instead of walking both arrays to the end.
+    * instead of walking both arrays to the end. `need` ≤ 0 never exits
+    * early, so it is the plain count.
     */
-  def countAtLeast(a: org.apache.spark.sql.catalyst.util.ArrayData,
-      b: org.apache.spark.sql.catalyst.util.ArrayData, need: Int): Int = {
+  def countAtLeast(a: ArrayData, b: ArrayData, need: Int): Int = {
     val n = a.numElements()
     val m = b.numElements()
     var i = 0
@@ -705,11 +680,8 @@ object SortedCommon {
     c
   }
 
-  /** ARRAY<INT> overload of [[countAtLeast]] (r14, see [[countInt]]).
-    * Same early-exit contract.
-    */
-  def countAtLeastInt(a: org.apache.spark.sql.catalyst.util.ArrayData,
-      b: org.apache.spark.sql.catalyst.util.ArrayData, need: Int): Int = {
+  /** ARRAY<BIGINT> form of [[countAtLeast]]. Same early-exit contract. */
+  def countAtLeastLong(a: ArrayData, b: ArrayData, need: Int): Int = {
     val n = a.numElements()
     val m = b.numElements()
     var i = 0
@@ -718,36 +690,69 @@ object SortedCommon {
     while (i < n && j < m) {
       val rem = if (n - i < m - j) n - i else m - j
       if (c + rem < need) return c
-      val x = a.getInt(i)
-      val y = b.getInt(j)
+      val x = a.getLong(i)
+      val y = b.getLong(j)
       if (x == y) { c += 1; i += 1; j += 1 }
       else if (x < y) i += 1
       else j += 1
     }
     c
   }
+
+  /** Whether an input type that passed [[checkInputs]] takes the
+    * BIGINT merge (else the STRING one).
+    */
+  def isLong(t: DataType): Boolean = t match {
+    case ArrayType(LongType, _) => true
+    case _ => false
+  }
+
+  /** The SQL builders' form of an argument: an ARRAY<TINYINT|SMALLINT|INT>
+    * is read as ARRAY<BIGINT> (widening keeps the sort order), so the one
+    * integral merge serves every integral element type. Anything else
+    * passes unchanged, for [[checkInputs]] to judge.
+    */
+  def widened(e: Expression): Expression = if (!e.resolved) e else e.dataType match {
+    case ArrayType(ByteType | ShortType | IntegerType, nulls) => Cast(e, ArrayType(LongType, nulls))
+    case _ => e
+  }
+
+  /** Both expressions' analysis-time check: the two arrays share one
+    * element type, STRING or BIGINT, and a third argument (`need`) is
+    * an INT. Without it an ARRAY<BIGINT> against an ARRAY<INT> would
+    * read 4-byte elements as 8-byte ones, past the array's data.
+    */
+  def checkInputs(args: Seq[Expression]): TypeCheckResult = {
+    def element(e: Expression): Option[DataType] = e.dataType match {
+      case ArrayType(t, _) if t == StringType || t == LongType => Some(t)
+      case _ => None
+    }
+    def mismatch(i: Int, required: String): TypeCheckResult = DataTypeMismatch(
+      "UNEXPECTED_INPUT_TYPE", Map("paramIndex" -> Seq("first", "second", "third")(i),
+        "requiredType" -> required, "inputSql" -> s"\"${args(i).sql}\"",
+        "inputType" -> s"\"${args(i).dataType.sql}\""))
+    val want = element(args.head)
+    if (want.isEmpty) mismatch(0, "(\"ARRAY<STRING>\" or \"ARRAY<BIGINT>\")")
+    else if (element(args(1)) != want) mismatch(1, s"\"ARRAY<${want.get.sql}>\"")
+    else if (args.length > 2 && args(2).dataType != IntegerType) mismatch(2, "\"INT\"")
+    else TypeCheckResult.TypeCheckSuccess
+  }
 }
 
-/** sorted_common (X2): (ARRAY<STRING>|ARRAY<INT> sorted, same sorted)
-  * → INT. Dispatches on the ELEMENT type at plan time (not per row):
-  * int arrays take the [[SortedCommon.countInt]] merge.
+/** sorted_common (X2): (sorted ARRAY<STRING|BIGINT>, same type) → INT
+  * via the [[SortedCommon]] merge for the element type.
   */
 case class SortedCommonExpr(left: Expression, right: Expression)
     extends BinaryExpression {
   override def dataType: DataType = IntegerType
-  private def isInt: Boolean = left.dataType match {
-    case ArrayType(IntegerType, _) => true
-    case _ => false
+  override def checkInputDataTypes(): TypeCheckResult = SortedCommon.checkInputs(children)
+  private lazy val isLong = SortedCommon.isLong(left.dataType)
+  override def nullSafeEval(a: Any, b: Any): Any = {
+    val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+    if (isLong) SortedCommon.countLong(x, y) else SortedCommon.count(x, y)
   }
-  override def nullSafeEval(a: Any, b: Any): Any =
-    if (isInt) SortedCommon.countInt(
-      a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-    else SortedCommon.count(
-      a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val m = if (isInt) "countInt" else "count"
+    val m = if (isLong) "countLong" else "count"
     defineCodeGen(ctx, ev, (a, b) => s"graft.functions.SortedCommon.$m($a, $b)")
   }
   override protected def withNewChildrenInternal(
@@ -756,30 +761,23 @@ case class SortedCommonExpr(left: Expression, right: Expression)
   override def prettyName: String = "sorted_common"
 }
 
-/** sorted_common_at_least (X2, r13): (ARRAY<STRING> sorted, ARRAY<STRING>
-  * sorted, INT need) → INT via [[SortedCommon.countAtLeast]] — the
-  * early-exit merge for `>= need`-monotone verify filters (see the
-  * kernel's caller contract).
+/** sorted_common_at_least (X2, r13): (sorted ARRAY<STRING|BIGINT>,
+  * same type, INT need) → INT via [[SortedCommon.countAtLeast]] or its
+  * BIGINT form — the early-exit merge for `>= need`-monotone verify
+  * filters (see the kernel's caller contract).
   */
 case class SortedCommonAtLeastExpr(first: Expression, second: Expression,
     third: Expression) extends TernaryExpression {
   override def dataType: DataType = IntegerType
   override def nullIntolerant: Boolean = true
-  private def isInt: Boolean = first.dataType match {
-    case ArrayType(IntegerType, _) => true
-    case _ => false
+  override def checkInputDataTypes(): TypeCheckResult = SortedCommon.checkInputs(children)
+  private lazy val isLong = SortedCommon.isLong(first.dataType)
+  override def nullSafeEval(a: Any, b: Any, need: Any): Any = {
+    val (x, y, k) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], need.asInstanceOf[Int])
+    if (isLong) SortedCommon.countAtLeastLong(x, y, k) else SortedCommon.countAtLeast(x, y, k)
   }
-  override def nullSafeEval(a: Any, b: Any, need: Any): Any =
-    if (isInt) SortedCommon.countAtLeastInt(
-      a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      need.asInstanceOf[Int])
-    else SortedCommon.countAtLeast(
-      a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      need.asInstanceOf[Int])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val m = if (isInt) "countAtLeastInt" else "countAtLeast"
+    val m = if (isLong) "countAtLeastLong" else "countAtLeast"
     defineCodeGen(ctx, ev,
       (a, b, k) => s"graft.functions.SortedCommon.$m($a, $b, $k)")
   }

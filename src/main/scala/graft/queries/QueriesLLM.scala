@@ -1597,16 +1597,55 @@ object QueriesLLM {
       .select(col("doc_a"), col("doc_b"))
   }
 
+  /** Largest document frequency a [[shingleKey]] keeps exactly (23 bits). */
+  private[queries] val ShingleKeyDfCap: Long = (1L << 23) - 1
+
+  /** The exact-Jaccard dictionary key of one shingle `s`, packed into
+    * one BIGINT: `dfc << 40 | h32 << 8 | (k − 1)`.
+    *  - `dfc`: the shingle's document frequency, capped at
+    *    [[ShingleKeyDfCap]];
+    *  - `h32`: the low 32 bits of `xxhash64(s)`;
+    *  - `k`: the 1-based rank of `s` among the shingles that share
+    *    (dfc, h32), so at most 256 fit in the low 8 bits.
+    * 23 + 32 + 8 bits fill a non-negative long. While every df is below
+    * 2²³ the key is injective and sorts exactly like (df, h32, s);
+    * past the cap it is still a fixed total order, which is all the
+    * AllPairs and PPJoin bounds in [[exactJaccardPairsPrefix]] need.
+    * A 257th shingle on one (dfc, h32) would collide, so it raises an
+    * error instead.
+    */
+  private[queries] def shingleKey(dfc: Column, h32: Column, k: Column): Column =
+    when(k > 256, raise_error(concat(
+        lit("exact-Jaccard dictionary: more than 256 shingles share df "),
+        dfc.cast("string"), lit(" and hash "), h32.cast("string"))))
+      .otherwise(shiftleft(dfc, 40).bitwiseOR(shiftleft(h32, 8))
+        .bitwiseOR((k - 1).cast("long")))
+
+  /** The dictionary of [[exactJaccardPairsPrefix]]: (s, df) → (s, sid)
+    * with `sid` the [[shingleKey]] of `s`. A projection of `freq` plus
+    * one window partitioned by (dfc, h32), so it is hash-parallel at
+    * any vocabulary size and needs no global rank, no driver collect
+    * and no checkpoint.
+    */
+  private[queries] def shingleDictionary(freq: DataFrame): DataFrame =
+    freq
+      .select(col("s"), least(col("df"), lit(ShingleKeyDfCap)).as("dfc"),
+        xxhash64(col("s")).bitwiseAND(lit(0xFFFFFFFFL)).as("h32"))
+      .withColumn("k", row_number().over(
+        Window.partitionBy(col("dfc"), col("h32")).orderBy(col("s"))))
+      .select(col("s"), shingleKey(col("dfc"), col("h32"), col("k")).as("sid"))
+
   /** AllPairs/PPJoin-style PREFIX-FILTERED exact Jaccard join — the
     * declared web-scale refinement of [[exactJaccardPairs]] when
     * shingle skew makes full posting lists explode (a boilerplate
     * shingle in 10M docs yields 5·10¹³ candidate pairs from that one
     * posting alone). Exactness argument: order each doc's shingles by
-    * GLOBAL ascending frequency (ties by shingle); for Jaccard ≥ τ a
-    * pair must share ≥ 1 of each side's first ⌊(1−τ)·|sh|⌋+1 shingles
-    * in that order (if all shared shingles sat outside one side's
-    * prefix, overlap ≤ (1−τ)·|sh| < τ/(1+τ)·(|a|+|b|) is impossible at
-    * the threshold — the classic AllPairs bound), so joining only on
+    * GLOBAL ascending frequency (ties by a fixed tie-break); for
+    * Jaccard ≥ τ a pair must share ≥ 1 of each side's first
+    * ⌊(1−τ)·|sh|⌋+1 shingles in that order (if all shared shingles sat
+    * outside one side's prefix, overlap ≤ (1−τ)·|sh| < τ/(1+τ)·(|a|+|b|)
+    * is impossible at the threshold — the classic AllPairs bound, which
+    * holds for ANY fixed global total order), so joining only on
     * prefix shingles loses no qualifying pair while hot shingles drop
     * out of most prefixes. Posting lists shrink from |posting| to the
     * docs that carry the shingle IN PREFIX position — the candidate
@@ -1614,127 +1653,58 @@ object QueriesLLM {
     * blow up. Since r13 the candidate join also carries PPJoin's
     * length filter (min size ≥ τ·max size) and positional filter
     * (remaining-overlap bound from the matched positions) — both exact
-    * necessary conditions, argued inline at the join. Since r12 this
-    * IS the builder behind the memoized
-    * [[exactJaccardPairs]] (and so behind all four graph consumers);
-    * LshSpec pins it pair-for-pair equal to both the naive all-pairs
-    * join and the plain inverted-index form.
+    * necessary conditions, argued inline at the join.
+    *
+    * The global order is (df, h32, s), carried by each shingle's
+    * packed BIGINT [[shingleKey]]. The key is computed from the
+    * vocabulary aggregate inside the query, so building this frame runs
+    * the shingle checkpoint and nothing else: no driver collect, and
+    * everything after the checkpoint is one query.
+    *
+    * This IS the builder behind the memoized [[exactJaccardPairs]] (and
+    * so behind all four graph consumers); LshSpec pins it pair-for-pair
+    * equal to both the naive all-pairs join and the plain inverted-index
+    * form.
     */
   def exactJaccardPairsPrefix(s: SparkSession, dir: String, tau: Double = 0.2): DataFrame = {
     // spread (r14): shingling + the posting explode ran in the
     // single-task scan stage before the first exchange. The checkpoint
-    // pins the scan+shingle pass to run exactly ONCE — the dictionary
-    // build below references this lineage twice more (broadcast
-    // collect + posting join), and re-running the shingle kernel and
-    // the spread text exchange per reference measured 2.5× the whole
-    // query (OPTIMIZATION_r14.md §3: 116 s vs 45.6 s same-session at sf1).
+    // pins the scan+shingle pass to run exactly ONCE — the vocabulary
+    // aggregate and the posting join below both read this lineage, and
+    // re-running the shingle kernel and the spread text exchange per
+    // reference measured 2.5× the whole query (OPTIMIZATION_r14.md §3:
+    // 116 s vs 45.6 s same-session at sf1).
     val d = Queries.spread(t(s, dir, "documents"), Queries.SpreadHeavy)
       .select(col("doc_id"), array_distinct(shingles(col("text"), 3)).as("sh"))
       .localCheckpoint()
     val post = d.select(col("doc_id"), explode(col("sh")).as("s"))
     // global shingle frequency — ONE corpus-wide count aggregation
     val freq = post.groupBy(col("s")).agg(count(lit(1)).as("df"))
-    // r14 DICTIONARY ENCODING (OPTIMIZATION_r14.md §3, r13 verdict item 4):
-    // map each distinct shingle to its dense 1-based rank in a global
-    // df-ascending order (r14: (df, s); r15: (df, h32, s) — see below).
-    // That rank order IS the prefix
-    // filter's frequency order, so the per-doc window, the candidate
-    // join key, the positional filter, and the verify arrays all become
-    // 4-byte ints — every downstream exchange shrinks ~5× and the merge
-    // kernel compares ints instead of UTF8 strings. Probe (outputs
-    // pinned identical three ways before timing): sf1 79.4 → 26.6 s for
-    // the dict form alone, → 18.2 s with the post-verify dedup below.
-    //
-    // r15 SCALABLE RANK (verdict item 3): the r14 rank was ONE global
-    // row_number window — a 1-partition sort of the whole vocabulary,
-    // which at a 100 TB corpus (where the broadcast hint is dropped and
-    // the dict joins by shuffle) would be the real scale ceiling. The
-    // global order is now (df asc, h32 asc, s asc) where h32 =
-    // xxhash64(s) & 0xFFFFFFFF — ANY fixed total order with df as the
-    // leading key gives the prefix filter identical pruning power (df
-    // is the rarity signal; the AllPairs bound holds for every fixed
-    // global order), and the hash tie-break is what makes the order
-    // BUCKETABLE without a single-partition sort:
-    //  1. boundaries: approximate quantiles of the composite
-    //     x = min(df, 2³¹−1)·2³² + h32 (one aggregation; the cap keeps
-    //     the composite in a long — capped rows are the ultra-common
-    //     tail and still spread by h32). Collected as ≤ P−1 literals —
-    //     driver-side PARTITION METADATA of the same class as the
-    //     boundaries a range exchange samples internally.
-    //  2. pid = Σᵢ [x > bᵢ] — a LITERAL comparison chain, monotone
-    //     non-decreasing in the global order, so every bucket holds a
-    //     contiguous order range (ties never split: x equal ⇒ same
-    //     pid). Deterministic per row — no spark_partition_id, no
-    //     checkpoint, and the rank below is therefore independent of
-    //     WHERE the boundaries fall: boundaries move occupancy between
-    //     buckets, never a row's global rank.
-    //  3. offsets: bucket counts collected (≤ P rows) and attached as
-    //     a literal-array lookup; sid = offset[pid] + local
-    //     row_number over (pid | df, h32, s) = the exact global rank,
-    //     sorted at defaultParallelism.
-    // Two earlier r15 cuts are on the record because their failure
-    // modes are instructive (plans/r15/x_jaccard_pairs_prefix_probe_evidence.txt):
-    // a range-exchange + spark_partition_id + localCheckpoint rank
-    // produced bit-identical sids BUT the checkpoint's REALISTIC size
-    // statistics (and, in the first cut, an offsets-join row estimate)
-    // replaced the parquet-derived underestimates the downstream plan
-    // was auto-broadcasting on — candidate join and both verify joins
-    // flipped BroadcastHashJoin → SortMergeJoin and the 95M-row sf1
-    // candidate set was exchanged and sorted twice: verify stage
-    // 162.9 s vs 6.55 s on byte-identical inputs. This form keeps the
-    // dict a pure projection over the freq aggregate (no join, no
-    // checkpoint), so the plan estimates — and every downstream join
-    // choice — are exactly the r14 form's, while the sort runs P-way.
-    // The price is that the boundary/count passes re-evaluate freq
-    // (explode over the checkpointed d + one aggregation, ~1.5 s at
-    // sf1) twice more during build; the r14 RDD zipWithIndex attempt
-    // lost 2.5× to lineage re-evaluation of the UNcheckpointed scan —
-    // from the checkpoint it is two cheap passes, measured below.
-    val p = s.sparkContext.defaultParallelism
-    // xxhash64, not the portable md5 hash64: sids are engine-internal
-    // (the oracle is the order-free all-pairs form), and this hash
-    // runs once per vocabulary row per build pass
-    val h32 = xxhash64(col("s")).bitwiseAND(lit(0xFFFFFFFFL))
-    val freqX = freq.withColumn("h32", h32)
-      .withColumn("x",
-        least(col("df"), lit(2147483647L)) * lit(4294967296L) + col("h32"))
-    val qs = (1 until p).map(i => i.toDouble / p)
-    val boundaries: Seq[Long] =
-      if (p <= 1) Seq.empty
-      else freqX.agg(expr(
-          s"percentile_approx(x, array(${qs.mkString(",")}), 10000)").as("b"))
-        .collect()(0).getAs[scala.collection.Seq[Long]]("b") match {
-          case null => Seq.empty
-          case bs => bs.toSeq.distinct.sorted
-        }
-    val pidCol: org.apache.spark.sql.Column =
-      if (boundaries.isEmpty) lit(0)
-      else boundaries.map(b =>
-        when(col("x") > lit(b), 1).otherwise(0)).reduce(_ + _)
-    val freqP = freqX.withColumn("pid", pidCol)
-    val counts = freqP.groupBy(col("pid")).agg(count(lit(1)).as("cnt"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).toMap
-    val nBuckets = boundaries.length + 1
-    val offsets: Seq[Long] =
-      (0 until nBuckets).scanLeft(0L)((acc, pid) => acc + counts.getOrElse(pid, 0L)).init
-    val offCol = element_at(array(offsets.map(lit): _*), col("pid") + 1)
-    val dict = freqP
-      .withColumn("lrank", row_number().over(
-        Window.partitionBy(col("pid")).orderBy(col("df"), col("h32"), col("s"))))
-      .select(col("s"), (offCol + col("lrank")).cast("int").as("sid"))
+    // DICTIONARY ENCODING (r14, OPTIMIZATION_r14.md §3): each shingle
+    // becomes its packed (df, h32, tie) key. That key order IS the
+    // prefix filter's frequency order, so the per-doc window, the
+    // candidate join key, the positional filter and the verify arrays
+    // compare longs instead of UTF8 strings, and every downstream
+    // exchange shrinks (r14 probe at sf1: 79.4 → 26.6 s for the dict
+    // form alone). The dict stays a pure projection of the freq
+    // aggregate: a checkpoint inside this chain replaced the
+    // parquet-derived size estimates the downstream joins broadcast on
+    // and flipped them to SortMergeJoin, verify 162.9 s vs 6.55 s at
+    // sf1 (plans/r15/x_jaccard_pairs_prefix_probe_evidence.txt).
+    val dict = shingleDictionary(freq)
     // broadcast: the dictionary is VOCABULARY-sized (distinct shingles),
     // orders of magnitude below the corpus; a corpus whose vocabulary
     // outgrows broadcast drops the hint and takes the shuffle join
     val posti = post.join(broadcast(dict), Seq("s"))
       .select(col("doc_id"), col("sid"))
-      .localCheckpoint() // feeds the prefix window AND the verify arrays
     // pin the per-doc window's parallelism the same way as the
-    // candidate join below: the posting rows are a few MB of ints, so
+    // candidate join below: the posting rows are a few MB of longs, so
     // AQE coalesces the doc_id exchange toward one partition and the
     // row_number/count windows over ~10M sf1 rows run single-threaded
     // (probed: AQE-on 18.3 s vs AQE-off 10.3 s for the whole query
     // before this pin; the keyed repartition is AQE-exempt and is the
-    // exchange the window needs anyway)
+    // exchange the window needs anyway). It feeds the prefix window AND
+    // the verify arrays; exchange reuse computes it once for both.
     val postiP = posti.repartition(
       s.sparkContext.defaultParallelism, col("doc_id"))
     val w = Window.partitionBy(col("doc_id")).orderBy(col("sid"))
@@ -1753,7 +1723,7 @@ object QueriesLLM {
     //     τ ≤ min/max — one scalar predicate kills every size-skewed
     //     pair before it exists.
     //   positional filter: both docs' shingles sit in the SAME global
-    //     total order (df asc, h32, s — any fixed total order works;
+    //     total order (the sid order — any fixed total order works;
     //     the bound needs only consistency), so any shared shingle
     //     other than the matched one lies strictly before it in BOTH
     //     lists or strictly after it in BOTH lists. Hence for a match
@@ -1769,7 +1739,7 @@ object QueriesLLM {
     // NO pre-verify distinct (r14, the probe's decisive cut): a pair
     // surfaces once per shared PREFIX shingle passing the filters, and
     // the dedup exchange of 87M duplicate-bearing candidate rows cost
-    // more than letting the (early-exiting, int-comparing) verify score
+    // more than letting the (early-exiting, long-comparing) verify score
     // each duplicate and deduping the ~1000× smaller verified output —
     // every duplicate of a pair verifies to the same verdict, so the
     // post-verify distinct returns exactly the old set (probe-pinned).
@@ -1792,10 +1762,10 @@ object QueriesLLM {
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
     // exact verify on the dict-encoded sets: sets are distinct, so
     // |a∪b| = |a|+|b|−|a∩b| and the ONLY per-pair array work is the
-    // codegen sorted-merge intersection count over INT arrays (the r13
-    // string form walked UTF8 comparisons; the r14 arrays sort by the
-    // dictionary rank — a bijection of the shingle sets, so the count
-    // is the same number).
+    // codegen sorted-merge intersection count over BIGINT arrays (the
+    // r13 string form walked UTF8 comparisons; the arrays sort by the
+    // dictionary key — injective on the shingles, so the count is the
+    // same number).
     // built from the SAME pinned repartition as the window: groupBy
     // needs hash-by-doc_id clustering, so postiP's exchange is reused
     // outright and the array build stays parallel under AQE

@@ -70,6 +70,51 @@ class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(viaSql == viaColumn)
   }
 
+  test("sorted_common and sorted_common_at_least take ARRAY<BIGINT> in SQL") {
+    // 2^32 and 2^33 share their low 32 bits with 0: only a BIGINT merge
+    // tells them apart
+    val r = spark.sql(
+      """SELECT sorted_common(array(1L, 4294967296L, 8589934592L),
+        |                     array(4294967296L, 8589934592L, 12884901888L)) AS c,
+        |  sorted_common(array(4294967296L), array(8589934592L)) AS dj,
+        |  sorted_common_at_least(array(1L, 4294967296L, 8589934592L),
+        |                         array(4294967296L, 8589934592L, 12884901888L), 2) AS at2,
+        |  sorted_common_at_least(array(1L, 2L), array(1L, 2L), 3) AS out""".stripMargin)
+      .collect()(0)
+    assert((r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3)) == (2, 0, 2, 0))
+    // integral arrays are widened to BIGINT, on either side
+    val w = spark.sql(
+      """SELECT sorted_common(array(1, 2, 3), array(2, 3, 4)) AS ii,
+        |  sorted_common(array(1L, 2L), array(1, 2)) AS li,
+        |  sorted_common_at_least(array(1, 2, 3), array(2, 3L, 4), 2) AS at2""".stripMargin)
+      .collect()(0)
+    assert((w.getInt(0), w.getInt(1), w.getInt(2)) == (2, 2, 2))
+  }
+
+  test("sorted_common and sorted_common_at_least reject mismatched inputs at analysis") {
+    import org.apache.spark.sql.AnalysisException
+    import org.apache.spark.sql.functions.{col, lit}
+    import graft.functions.GraftFunctions
+    def rejected(sql: String): String =
+      intercept[AnalysisException](spark.sql(s"SELECT $sql")).getCondition
+    Seq("sorted_common(array(1L), array('a'))",
+        "sorted_common(array('a'), array(1L))",
+        "sorted_common(array(1.0D), array(1.0D))",
+        "sorted_common('a', 'a')",
+        "sorted_common_at_least(array(1L), array('a'), 1)",
+        "sorted_common_at_least(array(1L), array(1L), 1L)").foreach { sql =>
+      assert(rejected(sql) == "DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE", sql)
+    }
+    // the Column form does not widen: BIGINT against INT is an analysis
+    // error there too, never an 8-byte read of 4-byte elements
+    val df = spark.sql("SELECT array(1L, 2L) AS l, array(1, 2) AS i")
+    Seq(GraftFunctions.sortedCommon(col("l"), col("i")),
+        GraftFunctions.sortedCommonAtLeast(col("l"), col("i"), lit(1))).foreach { c =>
+      val e = intercept[AnalysisException](df.select(c))
+      assert(e.getCondition == "DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE", e.getMessage)
+    }
+  }
+
   /** Fixture scripts covering several classes, one of each. */
   private def scriptRows: Seq[Array[Byte]] = {
     def b(xs: Int*): Array[Byte] = xs.map(_.toByte).toArray

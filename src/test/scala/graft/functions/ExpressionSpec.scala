@@ -361,6 +361,36 @@ class ExpressionSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("sorted_common(_at_least) over ARRAY<BIGINT>: interpreted == codegen, early exit") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{Expression, InterpretedUnsafeProjection, Literal}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.types.{ArrayType, LongType}
+    def longs(xs: Long*) = Literal.create(xs, ArrayType(LongType, containsNull = false))
+    // one value per evaluation path, so a path that disagrees shows
+    def both(e: Expression): (Int, Int) = (
+      InterpretedUnsafeProjection.createProjection(Seq(e)).apply(InternalRow.empty).getInt(0),
+      GenerateUnsafeProjection.generate(Seq(e)).apply(InternalRow.empty).getInt(0))
+    val g = 1L << 40 // the low 32 bits of every multiple are 0: an INT read would collide
+    val a = longs(g, 3 * g, 5 * g, 7 * g, 9 * g)
+    val b = longs(g, 2 * g, 5 * g, 9 * g, 11 * g)
+    assert(both(SortedCommonExpr(a, b)) == (3, 3))
+    assert(both(SortedCommonExpr(longs(g), longs(2 * g))) == (0, 0))
+    assert(both(SortedCommonExpr(a, longs())) == (0, 0))
+    // at or below the true count the result is exact
+    Seq(0, 2, 3).foreach { need =>
+      assert(both(SortedCommonAtLeastExpr(a, b, Literal(need))) == (3, 3), s"need=$need")
+    }
+    // out of reach from the start (5 elements per side, need 6): exits
+    // before the first comparison with 0, below the true count of 3
+    assert(both(SortedCommonAtLeastExpr(a, b, Literal(6))) == (0, 0))
+    // reachable at first, out of reach after the first mismatch
+    val c = longs(g, 4 * g, 6 * g, 8 * g)
+    val d = longs(g, 5 * g, 6 * g, 8 * g)
+    assert(both(SortedCommonAtLeastExpr(c, d, Literal(4))) == (1, 1))
+    assert(both(SortedCommonExpr(c, d)) == (3, 3))
+  }
+
   test("word_shingles kernel: identical strings to the transform+slice HOF form") {
     import spark.implicits._
     GraftFunctions.register(spark)

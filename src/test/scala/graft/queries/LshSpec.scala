@@ -110,6 +110,54 @@ class LshSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(1500))
   }
 
+  test("building the prefix join submits one job (the shingle checkpoint), no driver collect") {
+    val sc = spark.sparkContext
+    // the names of the jobs `body` submits, with no action after it
+    def jobsWhile(body: => Any): Seq[String] = {
+      val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.add(e.stageInfos.map(_.name).mkString(" + "))
+      }
+      org.apache.spark.sql.GraftInternals.drain(sc)
+      sc.addSparkListener(listener)
+      try { body; org.apache.spark.sql.GraftInternals.drain(sc) }
+      finally sc.removeSparkListener(listener)
+      jobs.toArray.toSeq.map(_.toString)
+    }
+    // Spark infers a parquet schema with a job of its own on every read
+    val read = jobsWhile(Queries.t(spark, dir, "documents"))
+    val build = jobsWhile(QueriesLLM.exactJaccardPairsPrefix(spark, dir))
+    assert(build.size == read.size + 1,
+      s"jobs submitted while building the prefix join: $build (the table read alone: $read)")
+  }
+
+  test("shingle dictionary key: injective, sorts like (df, h32, s); a 257th tie fails") {
+    import graft.functions.GraftFunctions._
+    val freq = Queries.t(spark, dir, "documents")
+      .select(explode(array_distinct(shingles(col("text"), 3))).as("s"))
+      .groupBy(col("s")).agg(count(lit(1)).as("df"))
+    val keyed = QueriesLLM.shingleDictionary(freq).join(freq, Seq("s"))
+      .select(col("sid"), col("df"), xxhash64(col("s")).bitwiseAND(lit(0xFFFFFFFFL)).as("h32"), col("s"))
+      .orderBy(col("df"), col("h32"), col("s"))
+      .collect()
+    assert(keyed.length > 1000, s"only ${keyed.length} shingles in the fixture")
+    // strictly increasing in (df, h32, s) order: injective and the same order
+    val sids = keyed.map(_.getLong(0))
+    val inversions = sids.sliding(2).count { case Array(x, y) => x >= y }
+    assert(inversions == 0, s"$inversions adjacent sids out of (df, h32, s) order")
+    // the fields decode back (every fixture df is far below the cap)
+    keyed.foreach { r =>
+      assert(r.getLong(0) >>> 40 == r.getLong(1) && ((r.getLong(0) >>> 8) & 0xFFFFFFFFL) == r.getLong(2), r)
+    }
+    // the packing guard: 256 ties fit in the low 8 bits, a 257th raises
+    def key(k: Int) = spark.range(1)
+      .select(QueriesLLM.shingleKey(lit(3L), lit(7L), col("id").cast("int") + k)).head().getLong(0)
+    assert(key(256) == (3L << 40 | 7L << 8 | 255L))
+    val tie = intercept[Exception](key(257))
+    assert(tie.getMessage.contains("more than 256 shingles share df 3 and hash 7"), tie.getMessage)
+  }
+
   test("degree-ordered triangle orientation counts identically to the unoriented form") {
     val pairs = QueriesLLM.minhashLshPairs(spark, dir)
       .filter(col("est_jaccard") >= 0.5)
