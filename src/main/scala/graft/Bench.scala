@@ -79,8 +79,9 @@ object Bench {
       df.write.format("noop").mode("overwrite").save()
 
     // warmup: touch every table + codegen/agg/join machinery once, and
-    // write the pay-once layouts (bucketed tables, Z-ordered and
-    // year-partitioned copies) so their write cost is not billed to the
+    // write the layouts paid once per run (bucketed tables, Z-ordered
+    // and year-partitioned copies; SessionMemo.path stages them for
+    // this application only) so their write cost is not billed to the
     // lookup measurements
     // a failed warm-up prints the same stderr line as a failed timed
     // query, so a broken build is never silently billed as a no-op

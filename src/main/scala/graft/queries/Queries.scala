@@ -1,7 +1,13 @@
 package graft.queries
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The declared query inventory (SURVEY.md §2 rows Q/E/S/X): one named
   * DataFrame program per operator, each paired (in [[oracle]]) with an
@@ -29,9 +35,10 @@ object Queries {
   val TableNames: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Collision-free, staleness-aware tag for /tmp staging dirs (and
-    * catalog table names) derived from a fixture dir: hex md5 of the
-    * canonical path plus the dir's (name, length, mtime) listing. The
+  /** Collision-free, staleness-aware fingerprint of a fixture dir (the
+    * [[SessionMemo]] stamp, and the tag in the oracle-published fixture
+    * and stream scratch paths): hex md5 of the canonical path plus the
+    * dir's (name, length, mtime) listing. The
     * old `math.abs(dir.hashCode)` tag could collide across fixture
     * dirs (silently serving one fixture's staged copy for another),
     * is negative for `Int.MinValue`, and never noticed a regenerated
@@ -51,23 +58,56 @@ object Queries {
   }
 
   /** Exact row count from parquet FOOTER metadata — a driver-side
-    * footer read (one block-metadata sum per file), zero Spark jobs,
-    * zero data pages touched. The cheap way to size safety valves and
-    * spines when no catalog statistic exists for a raw parquet path.
+    * footer read (one block-metadata sum per data file), zero Spark
+    * jobs, zero data pages touched. The cheap way to size safety valves
+    * and spines when no catalog statistic exists for a raw parquet path.
     */
   def parquetRowCount(s: SparkSession, path: String): Long = {
     val conf = s.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    val files =
-      if (fs.getFileStatus(p).isDirectory)
-        fs.listStatus(p).filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-      else Array(fs.getFileStatus(p))
-    files.map { st =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+    dataFiles(new Path(path), conf).map { st =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
       try r.getRecordCount finally r.close()
     }.sum
+  }
+
+  /** The schema `s.read.parquet(path)` would infer without schema
+    * merging, read on the driver from the footer of the first data file
+    * (by path order) and converted with the session's converter
+    * settings (`ParquetFileFormat.readSchemaFromFooter`, as inference
+    * does); None when `path` is missing or holds no data file.
+    */
+  private def footerSchema(s: SparkSession, path: String): Option[StructType] = {
+    val conf = s.sessionState.newHadoopConf()
+    val first =
+      try dataFiles(new Path(path), conf).headOption
+      catch { case _: java.io.FileNotFoundException => None }
+    first.map { st =>
+      val footer = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(st, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      ParquetFileFormat.readSchemaFromFooter(new Footer(st.getPath, footer),
+        new ParquetToSparkSchemaConverter(s.sessionState.conf))
+    }
+  }
+
+  /** `s.read.parquet(path)` with the schema taken from [[footerSchema]]:
+    * inference would otherwise run a Spark job of its own on every
+    * read. A path with no data file falls back to inference, so its
+    * error is Spark's own.
+    */
+  def readParquet(s: SparkSession, path: String): DataFrame =
+    footerSchema(s, path).fold(s.read)(s.read.schema).parquet(path)
+
+  /** `path` itself if it is a file, else the files directly under it
+    * that Spark reads as data (names starting with `_` or `.` are
+    * markers, checksums or staging), sorted by path.
+    */
+  private def dataFiles(path: Path, conf: org.apache.hadoop.conf.Configuration): Seq[FileStatus] = {
+    val fs = path.getFileSystem(conf)
+    val st = fs.getFileStatus(path)
+    if (st.isFile) Seq(st)
+    else fs.listStatus(path).toSeq
+      .filter(f => f.isFile && !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
+      .sortBy(_.getPath.toString)
   }
 
   /** The engine's session contract: the conf every registry entry runs
@@ -111,7 +151,7 @@ object Queries {
     * TimestampType in UTC, the value DuckDB computes.
     */
   def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    val df = s.read.parquet(s"$dir/$name.parquet")
+    val df = readParquet(s, s"$dir/$name.parquet")
     if (name == "events") df.withColumn("ts", normalizeTs("ts", df.schema("ts").dataType))
     else df
   }

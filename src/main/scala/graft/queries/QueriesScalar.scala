@@ -106,15 +106,9 @@ object QueriesScalar {
     * original parquet (values must survive both formats exactly).
     */
   def csvJsonScan(s: SparkSession, dir: String): DataFrame = {
-    val base = t(s, dir, "nation")
-    // paths keyed by the fixture tag like every sibling stage: fixed
-    // names let one session's overwrite delete the directory while a
-    // concurrent session's deferred read is still scanning it
-    val tag = Queries.stageTag(dir)
-    val csvPath = s"/tmp/graft_nation_csv_$tag"
-    val jsonPath = s"/tmp/graft_nation_json_$tag"
-    base.write.mode("overwrite").option("header", "true").csv(csvPath)
-    base.write.mode("overwrite").json(jsonPath)
+    val csvPath = SessionMemo.path(s, dir, "nation_csv")(
+      t(s, dir, "nation").write.option("header", "true").csv(_))
+    val jsonPath = SessionMemo.path(s, dir, "nation_json")(t(s, dir, "nation").write.json(_))
     val fromCsv = s.read.option("header", "true").option("inferSchema", "true").csv(csvPath)
       .select(col("n_nationkey").cast("int").as("nationkey"), col("n_name").as("name_csv"))
     val fromJson = s.read.json(jsonPath)
@@ -132,11 +126,7 @@ object QueriesScalar {
     * original table: equality proves the roundtrip is lossless.
     */
   def orcScan(s: SparkSession, dir: String): DataFrame = {
-    val loc = s"/tmp/graft_orc_supplier_${Queries.stageTag(dir)}"
-    if (!new java.io.File(loc, "_SUCCESS").exists()) synchronized {
-      if (!new java.io.File(loc, "_SUCCESS").exists())
-        t(s, dir, "supplier").write.mode("overwrite").orc(loc)
-    }
+    val loc = SessionMemo.path(s, dir, "orc_supplier")(t(s, dir, "supplier").write.orc(_))
     s.read.orc(loc)
       .filter(col("s_nationkey") < 10)
       .groupBy(col("s_nationkey").cast("int").as("nationkey"))
@@ -158,14 +148,10 @@ object QueriesScalar {
     * the compared md5 trims on both sides.
     */
   def xmlScan(s: SparkSession, dir: String): DataFrame = {
-    val loc = s"/tmp/graft_xml_docs_${Queries.stageTag(dir)}"
-    if (!new java.io.File(loc, "_SUCCESS").exists()) synchronized {
-      if (!new java.io.File(loc, "_SUCCESS").exists())
-        t(s, dir, "documents").filter(col("doc_id") % 20 === 0)
-          .select(col("doc_id"), col("lang"), col("source"), col("text"))
-          .write.mode("overwrite")
-          .option("rowTag", "doc").format("xml").save(loc)
-    }
+    val loc = SessionMemo.path(s, dir, "xml_docs")(
+      t(s, dir, "documents").filter(col("doc_id") % 20 === 0)
+        .select(col("doc_id"), col("lang"), col("source"), col("text"))
+        .write.option("rowTag", "doc").format("xml").save(_))
     s.read.format("xml").option("rowTag", "doc").load(loc)
       .select(col("doc_id").cast("long").as("doc_id"),
         col("lang"), col("source"),
@@ -194,26 +180,21 @@ object QueriesScalar {
       .orderBy(col("doc_id"))
   }
 
-  private def stageBinaryDocs(s: SparkSession, dir: String): String = {
-    val loc = s"/tmp/graft_bin_docs_${Queries.stageTag(dir)}"
-    val marker = new java.io.File(loc, "_STAGED")
-    if (!marker.exists()) synchronized {
-      if (!marker.exists()) {
-        new java.io.File(loc).mkdirs()
-        // bounded driver-side fixture write (the nation-fixture
-        // precedent): one file per sampled doc, bytes = UTF-8 text
-        t(s, dir, "documents").filter(col("doc_id") % 40 === 0)
-          .select(col("doc_id"), col("text")).collect()
-          .foreach { r =>
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(loc, s"doc_${r.getLong(0)}.bin"),
-              r.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          }
-        java.nio.file.Files.write(marker.toPath, Array.emptyByteArray)
-      }
+  /** One `doc_<id>.bin` file per sampled document, bytes = its UTF-8
+    * text: a bounded driver-side fixture write (the nation-fixture
+    * precedent).
+    */
+  private[queries] def stageBinaryDocs(s: SparkSession, dir: String): String =
+    SessionMemo.path(s, dir, "bin_docs") { loc =>
+      new java.io.File(loc).mkdirs()
+      t(s, dir, "documents").filter(col("doc_id") % 40 === 0)
+        .select(col("doc_id"), col("text")).collect()
+        .foreach { r =>
+          java.nio.file.Files.write(
+            java.nio.file.Paths.get(loc, s"doc_${r.getLong(0)}.bin"),
+            r.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        }
     }
-    loc
-  }
 
   /** E70: native generator UDTF — corpus shingle frequencies via the
     * custom [[graft.functions.ShingleGenerator]]: shingles stream out
@@ -246,52 +227,7 @@ object QueriesScalar {
     * JDBC round-trip must be lossless.
     */
   def jdbcScan(s: SparkSession, dir: String): DataFrame = {
-    val db = s"/tmp/graft_derby_${Queries.stageTag(dir)}"
-    // territory is pinned EXPLICITLY: database creation derives it from
-    // the JVM default locale, and every bench main sets Locale.ROOT
-    // (empty language — required so f"%.3f" emits dot decimals in the
-    // JSON contract), which Derby rejects with "Supplied locale
-    // description '' is invalid" (found by the r9 registry pass on a
-    // clean staging dir; earlier rounds masked it behind pre-staged dbs)
-    val url = s"jdbc:derby:$db;create=true;territory=en_US"
-    val marker = new java.io.File(db + "_STAGED")
-    if (!marker.exists()) synchronized {
-      if (!marker.exists()) {
-        // a transient boot failure (observed once in a long bench pass:
-        // "Failed to create database" with the cause buried in Derby's
-        // chained SQLException) must not poison the staging forever —
-        // clear the half-created db dir and retry once; on the second
-        // failure surface the CHAIN, not just the outer message
-        def stage(): Unit =
-          t(s, dir, "supplier")
-            .select(col("s_suppkey").as("SUPPKEY"), col("s_name").as("NAME"),
-              col("s_nationkey").as("NATIONKEY"), col("s_acctbal").as("ACCTBAL"))
-            .write.mode("overwrite")
-            .format("jdbc").option("url", url).option("dbtable", "SUPPLIER").save()
-        try stage()
-        catch {
-          case scala.util.control.NonFatal(first) =>
-            org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(db))
-            try stage()
-            catch {
-              case scala.util.control.NonFatal(second) =>
-                def chain(t: Throwable): String = {
-                  val msgs = Iterator.iterate(t)(x =>
-                    x match {
-                      case sql: java.sql.SQLException
-                        if sql.getNextException != null => sql.getNextException
-                      case other => other.getCause
-                    }).takeWhile(_ != null).map(_.getMessage).take(5)
-                  msgs.mkString(" <- ")
-                }
-                throw new RuntimeException(
-                  s"jdbc staging failed twice: [${chain(first)}] then [${chain(second)}]",
-                  second)
-            }
-        }
-        java.nio.file.Files.write(marker.toPath, Array.emptyByteArray)
-      }
-    }
+    val url = s"jdbc:derby:${stageDerby(s, dir)}"
     val hi = t(s, dir, "supplier").agg(max(col("s_suppkey"))).head().getLong(0)
     s.read.format("jdbc")
       .option("url", url).option("dbtable", "SUPPLIER")
@@ -306,42 +242,67 @@ object QueriesScalar {
       .orderBy(col("nationkey"))
   }
 
+  /** The Derby database holding the SUPPLIER table, written once per
+    * session and corpus. The territory is pinned EXPLICITLY: database
+    * creation derives it from the JVM default locale, and every bench
+    * main sets Locale.ROOT (empty language — required so f"%.3f" emits
+    * dot decimals in the JSON contract), which Derby rejects with
+    * "Supplied locale description '' is invalid" (found by the r9
+    * registry pass on a clean staging dir).
+    */
+  private[queries] def stageDerby(s: SparkSession, dir: String): String =
+    SessionMemo.path(s, dir, "derby") { db =>
+      // a transient boot failure (observed once in a long bench pass:
+      // "Failed to create database" with the cause buried in Derby's
+      // chained SQLException) is retried once on a cleared dir; on the
+      // second failure surface the CHAIN, not just the outer message
+      def stage(): Unit =
+        t(s, dir, "supplier")
+          .select(col("s_suppkey").as("SUPPKEY"), col("s_name").as("NAME"),
+            col("s_nationkey").as("NATIONKEY"), col("s_acctbal").as("ACCTBAL"))
+          .write.format("jdbc")
+          .option("url", s"jdbc:derby:$db;create=true;territory=en_US")
+          .option("dbtable", "SUPPLIER").save()
+      try stage()
+      catch {
+        case scala.util.control.NonFatal(first) =>
+          org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(db))
+          try stage()
+          catch {
+            case scala.util.control.NonFatal(second) =>
+              def chain(t: Throwable): String =
+                Iterator.iterate(t) {
+                  case sql: java.sql.SQLException if sql.getNextException != null => sql.getNextException
+                  case other => other.getCause
+                }.takeWhile(_ != null).map(_.getMessage).take(5).mkString(" <- ")
+              throw new RuntimeException(
+                s"jdbc staging failed twice: [${chain(first)}] then [${chain(second)}]", second)
+          }
+      }
+    }
+
+  /** A directory holding one copy of `$dir/events.parquet`: the file
+    * streaming source watches directories, not files. Shared by the
+    * [[stateReader]] and [[streamUpsert]] streams.
+    */
+  private def stageEventsFile(s: SparkSession, dir: String): String =
+    SessionMemo.path(s, dir, "events_src") { loc =>
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(loc))
+      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$dir/events.parquet"),
+        java.nio.file.Paths.get(loc, "events.parquet"))
+    }
+
   /** S12 wrapper: run the keyed streaming aggregation to completion on
     * a staged copy of the corpus events, then read the final per-user
     * state DIRECTLY off the checkpoint with the `statestore` batch
     * source — after the finite stream drains, the aggregation state IS
     * the batch group-by, which is exactly what the oracle asserts.
     */
-  /** Stage `$dir/events.parquet` into `destDir` exactly once,
-    * crash-safe: copy to a dot-prefixed temp name (hidden from Spark's
-    * directory-watching sources) and atomically rename — a JVM killed
-    * mid-copy must not leave a truncated file that passes the exists
-    * check forever — under a double-checked lock so concurrent callers
-    * stage once.
-    */
-  private def stageEventsFile(dir: String, destDir: java.nio.file.Path): Unit = {
-    val dest = destDir.resolve("events.parquet")
-    if (!java.nio.file.Files.exists(dest)) synchronized {
-      if (!java.nio.file.Files.exists(dest)) {
-        java.nio.file.Files.createDirectories(destDir)
-        val tmp = destDir.resolve(".events.parquet.tmp")
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$dir/events.parquet"), tmp,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        java.nio.file.Files.move(tmp, dest,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      }
-    }
-  }
-
-  def stateReader(s: SparkSession, dir: String): DataFrame = {
-    val tag = Queries.stageTag(dir)
-    val src = java.nio.file.Paths.get(s"/tmp/graft_state_src_$tag")
-    stageEventsFile(dir, src)
+  def stateReader(s: SparkSession, dir: String): DataFrame =
     graft.streaming.StreamingQueries
-      .runStateInspect(s, src.toString, s"/tmp/graft_state_ckpt_$tag")
+      .runStateInspect(s, stageEventsFile(s, dir),
+        s"/tmp/graft_state_ckpt_${Queries.stageTag(dir)}")
       .orderBy(col("user_id"))
-  }
 
   /** E25b: map functions — per-user event-type histogram built as a
     * MapType column (`map_from_entries`), then queried with
@@ -453,31 +414,46 @@ object QueriesScalar {
   val CorruptLines: Seq[String] = Seq("notanint,CORRUPT_TYPE,xx", "too,many,fields,here,5")
   private def stageCorruptCsv(s: SparkSession, dir: String): String = {
     val base = corruptCsvPath(dir)
-    // the tag in the path already names the corpus state; the marker
-    // only flags a complete staging (written last). Double-checked:
-    // re-test INSIDE the lock so two concurrent callers can't both
-    // stage (same idiom as QueriesRel.zorderedLineitem)
-    val marker = java.nio.file.Paths.get(base, "_source_dir")
-    def staged = java.nio.file.Files.exists(marker)
-    if (!staged) synchronized { if (!staged) {
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(base))
+    publishFixture(s, dir, base) { tmp =>
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tmp))
       val rows = t(s, dir, "nation")
         .select(col("n_nationkey").cast("long"), col("n_name"), col("n_regionkey").cast("long"))
         .collect().sortBy(_.getLong(0))
         .map(r => s"${r.getLong(0)},${r.getString(1)},${r.getLong(2)}")
       java.nio.file.Files.write(
-        java.nio.file.Paths.get(base, "nation.csv"),
+        java.nio.file.Paths.get(tmp, "nation.csv"),
         ((rows.toSeq ++ CorruptLines).mkString("\n") + "\n").getBytes)
-      java.nio.file.Files.write(marker, dir.getBytes)
-    } }
+    }
     s"$base/nation.csv"
+  }
+
+  /** Stage a fixture DuckDB reads after the JVM exits at its fixed
+    * corpus-tag-keyed path `loc`, once per session. `_source_dir` marks
+    * a complete staging; the fixture is written into a private sibling
+    * and renamed into place, so a stager in another session or JVM never
+    * overwrites files a reader is scanning.
+    */
+  private def publishFixture(s: SparkSession, dir: String, loc: String)(
+      write: String => Unit): Unit = SessionMemo(s, dir, loc) {
+    import java.nio.file.{Files, FileSystemException, Paths, StandardCopyOption}
+    val marker = Paths.get(loc, "_source_dir")
+    if (!Files.exists(marker)) {
+      val tmp = s"$loc.${java.util.UUID.randomUUID}"
+      try {
+        write(tmp)
+        Files.write(Paths.get(tmp, "_source_dir"), dir.getBytes)
+        Files.move(Paths.get(tmp), Paths.get(loc), StandardCopyOption.ATOMIC_MOVE)
+      } catch {
+        case _: FileSystemException if Files.exists(marker) => // staged concurrently
+      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
+    }
   }
 
   /** E38: schema-evolution read — a fact table whose early files lack a
     * column added later (the standard 100 TB reality: years of files,
     * schema drift). `mergeSchema=true` unions the file schemas at scan
     * planning; rows from old files surface NULL for the added column.
-    * The two epochs are staged once per source dir; the oracle reads
+    * The two epochs are staged once per corpus; the oracle reads
     * the same two file sets with DuckDB's union_by_name.
     */
   def schemaEvolution(s: SparkSession, dir: String): DataFrame = {
@@ -498,20 +474,14 @@ object QueriesScalar {
     s"/tmp/graft_schevo_${Queries.stageTag(dir)}"
   def schemaEvolutionDirs(s: SparkSession, dir: String): String = {
     val loc = schemaEvoPath(dir)
-    val marker = java.nio.file.Paths.get(loc, "_source_dir")
-    def staged = java.nio.file.Files.exists(marker)
-    // completion flag, double-checked (see stageCorruptCsv)
-    if (!staged) synchronized { if (!staged) {
+    publishFixture(s, dir, loc) { tmp =>
       val o = t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"),
           Queries.cents(col("o_totalprice")).as("price_cents"),
           year(col("o_orderdate")).as("o_year"), col("o_orderpriority"))
-      o.filter(col("o_year") <= 1996).drop("o_orderpriority")
-        .write.mode("overwrite").parquet(s"$loc/old")
-      o.filter(col("o_year") > 1996)
-        .write.mode("overwrite").parquet(s"$loc/new")
-      java.nio.file.Files.write(marker, dir.getBytes)
-    } }
+      o.filter(col("o_year") <= 1996).drop("o_orderpriority").write.parquet(s"$tmp/old")
+      o.filter(col("o_year") > 1996).write.parquet(s"$tmp/new")
+    }
     loc
   }
 
@@ -547,13 +517,11 @@ object QueriesScalar {
     * latest event per (user_id, event_type), which is exactly the
     * `s_dedup_latest` contract, so the same oracle pins it. The file
     * streaming source watches directories: the single corpus file is
-    * staged once per source dir.
+    * staged once per session and corpus ([[stageEventsFile]]).
     */
   def streamUpsert(s: SparkSession, dir: String): DataFrame = {
     val tag = Queries.stageTag(dir)
-    val src = java.nio.file.Paths.get(s"/tmp/graft_upsert_src_$tag")
-    stageEventsFile(dir, src)
-    graft.streaming.StreamingQueries.runUpsert(s, src.toString,
+    graft.streaming.StreamingQueries.runUpsert(s, stageEventsFile(s, dir),
         s"/tmp/graft_upsert_tgt_$tag", s"/tmp/graft_upsert_ckpt_$tag")
       .select(col("user_id"), col("event_type"),
         col("event_id").as("latest_event_id"),

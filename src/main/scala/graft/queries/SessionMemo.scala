@@ -1,20 +1,33 @@
 package graft.queries
 
+import org.apache.spark.SparkFiles
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The one compute-once cache for per-corpus artifacts reused within a
   * session: pair graphs, ANN models and indexes, BPE merges, the media
-  * frame. An entry is keyed by (session, dir, key) and stamped with the
-  * corpus fingerprint [[Queries.stageTag]]; a call that finds a
-  * different fingerprint (the corpus was rewritten under the same dir)
-  * replaces the entry, so a stale artifact is neither served nor left
-  * pinned beside the fresh one. `key` names the artifact and its
-  * parameters and must be unique across call sites.
+  * frame, and every derived layout a query builder stages on disk. An
+  * entry is keyed by (session, dir, key) and stamped with the corpus
+  * fingerprint [[Queries.stageTag]]; a call that finds a different
+  * fingerprint (the corpus was rewritten under the same dir) replaces
+  * the entry, so a stale artifact is neither served nor left pinned
+  * beside the fresh one. `key` names the artifact and its parameters
+  * and must be unique across call sites.
   *
   * The session is the caller's: a session derived by
   * [[SessionScope.withConf]] resolves to the session it was derived
   * from, so every registry entry run for one caller shares its memo,
   * while a `newSession()` starts empty.
+  *
+  * Staging rule: every directory a builder writes once per corpus (a
+  * derived layout, a foreign-format fixture, an ANN index) comes from
+  * [[path]]. It lives under Spark's per-application file root, which
+  * the driver deletes when the SparkContext stops, so no run serves a
+  * layout an earlier run (or older code) wrote; it belongs to one
+  * holder, so two root sessions never share it; and catalog tables over
+  * it are named after it. The exceptions are the two fixtures DuckDB
+  * reads after the JVM exits (`QueriesScalar.stageCorruptCsv`,
+  * `QueriesScalar.schemaEvolutionDirs`): they keep fixed
+  * corpus-tag-keyed paths and are staged once per session by [[apply]].
   *
   * Lifecycle and locking rules:
   *  - sessions are WEAK keys: when a session is dropped, its entries
@@ -71,16 +84,19 @@ private[graft] object SessionMemo {
     s.createDataFrame(rdd, schema)
   }
 
+  private val paths = new java.util.concurrent.atomic.AtomicLong
+
   /** A directory written once per (session, corpus fingerprint, key):
-    * `write` receives a tmpdir path carrying the application id, the
-    * fingerprint and `key`, so a stale index from another run or
-    * another corpus never shares it; `key` must carry every parameter
-    * the artifact depends on.
+    * `write` receives a path that does not exist yet, unique to this
+    * holder, under the application's staging root (see the staging
+    * rule above); `key` must carry every parameter the artifact
+    * depends on. A failed write is retried by the next caller on a
+    * fresh path.
     */
   def path(s: SparkSession, dir: String, key: String)(write: String => Unit): String =
     holder(s, dir, key, tag => {
-      val p = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_${key}_${s.sparkContext.applicationId}_$tag").getAbsolutePath
+      val p = new java.io.File(SparkFiles.getRootDirectory(),
+        s"graft_${key}_${tag}_${paths.incrementAndGet()}").getAbsolutePath
       write(p)
       p
     }).get.asInstanceOf[String]

@@ -1,14 +1,8 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.format.converter.ParquetMetadataConverter
-import org.apache.parquet.hadoop.Footer
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.StructType
 
 /** The conversion pipeline (SURVEY.md §2.1 R2, §3.1): snapshot →
   * query-optimized Parquet.
@@ -359,49 +353,14 @@ object UtxoConvert {
     * other unsigned-aware readers see `uint64` exactly like the
     * reference's files.
     *
-    * The schema comes from the footer of the first data file (by path
-    * order), read on the driver and converted exactly as
-    * `spark.read.parquet` infers it without schema merging
-    * (`ParquetFileFormat.readSchemaFromFooter` with the session's
-    * converter settings), then handed to the reader. Inference would
-    * otherwise run a one-task Spark job on every call, which is a fixed
-    * cost of every lookup. A path with no data file falls back to
-    * `spark.read.parquet`, so its error is Spark's own.
+    * The schema comes from the footer of the first data file
+    * ([[graft.queries.Queries.readParquet]]), so a lookup starts no
+    * schema-inference job.
     */
   def readConverted(spark: SparkSession, path: String): org.apache.spark.sql.DataFrame = {
-    val df = footerSchema(spark, path) match {
-      case Some(schema) => spark.read.schema(schema).parquet(path)
-      case None => spark.read.parquet(path)
-    }
+    val df = graft.queries.Queries.readParquet(spark, path)
     df.withColumns(Seq("vout", "height", "amount").filter(df.schema.fieldNames.contains)
       .map(c => c -> col(c).cast("long")).toMap)
-  }
-
-  /** The schema `spark.read.parquet(path)` would infer, read from the
-    * footer of `path` itself or of the first data file directly under
-    * it (files whose names start with `_` or `.` are not data); None
-    * when there is no such file.
-    */
-  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val status =
-      try Some(fs.getFileStatus(p))
-      catch { case _: java.io.FileNotFoundException => None }
-    val dataFile = status.flatMap { st =>
-      if (st.isFile) Some(st)
-      else fs.listStatus(p)
-        .filter(f => f.isFile && !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
-        .sortBy(_.getPath.toString)
-        .headOption
-    }
-    dataFile.map { st =>
-      val footer = ParquetFooterReader.readFooter(
-        HadoopInputFile.fromStatus(st, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
-      ParquetFileFormat.readSchemaFromFooter(new Footer(st.getPath, footer),
-        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
-    }
   }
 
   /** CLI parity with the reference binary (`-i snapshot -o parquet`). */

@@ -24,7 +24,7 @@ object StreamingQueries {
     * parquet has shipped as both TIMESTAMP(NANOS) (readable only as
     * long under nanosAsLong) and TIMESTAMP(MICROS) (arrives NTZ);
     * streaming reads need an explicit schema, so probe the actual file
-    * layout with a batch schema read of the same directory and declare
+    * layout from a footer of the same directory and declare
     * `ts` accordingly — generator layout must never be assumed.
     */
   def eventsRawSchema(tsType: DataType): StructType = StructType(Seq(
@@ -36,11 +36,12 @@ object StreamingQueries {
     StructField("props", StringType)))
 
   /** Actual physical `ts` type of the events parquet in `eventsDir`
-    * (LongType for nanos files, TimestampNTZType for micros files).
+    * (LongType for nanos files, TimestampNTZType for micros files), read
+    * from a footer.
     */
   def eventsTsType(spark: SparkSession, eventsDir: String): DataType =
     SessionScope.withConf(spark, "spark.sql.legacy.parquet.nanosAsLong" -> "true")(
-      _.read.parquet(eventsDir).schema("ts").dataType)
+      Queries.readParquet(_, eventsDir).schema("ts").dataType)
 
   /** `eventsDir` must be a DIRECTORY of events parquet files (Spark's
     * file streaming source watches directories, not single files) —
@@ -966,10 +967,23 @@ object StreamingQueries {
   def streamStatePartitions: Int =
     sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "4").toInt
 
+  /** The sizing rule above as a check: a warning naming the partition
+    * count that keeps each under 256 MB when a stream ended with more
+    * per partition and no override set the count; None otherwise.
+    */
+  def stateSizingWarning(query: String, stateBytes: Long, partitions: Int,
+      overridden: Boolean): Option[String] = {
+    val limit = 256L << 20
+    if (overridden || stateBytes / partitions <= limit) None
+    else Some(s"stream '$query' ended with $stateBytes bytes of state over $partitions " +
+      s"partitions; set SPARK_GRAFT_STREAM_STATE_PARTITIONS=${(stateBytes - 1) / limit + 1}")
+  }
+
   /** Run `streamed` to completion into a memory sink and return its
     * table. The stream is re-planned on a session derived from its own
     * (keeping the conf it was built under) with the state-partition
-    * count set; the sink's view never reaches `spark`'s catalog.
+    * count set; the sink's view never reaches `spark`'s catalog. The
+    * state it ended with is checked against [[stateSizingWarning]].
     */
   def runToBatch(spark: SparkSession, streamed: DataFrame, name: String,
       mode: OutputMode = OutputMode.Complete()): DataFrame =
@@ -982,6 +996,10 @@ object StreamingQueries {
         .start()
       try q.processAllAvailable()
       finally q.stop()
+      Option(q.lastProgress).flatMap(p => stateSizingWarning(name,
+          p.stateOperators.map(_.memoryUsedBytes).sum, streamStatePartitions,
+          sys.env.contains("SPARK_GRAFT_STREAM_STATE_PARTITIONS")))
+        .foreach(org.slf4j.LoggerFactory.getLogger(getClass).warn(_))
       d.table(name)
     }
 }

@@ -931,7 +931,7 @@ class QueriesRelSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"expected >=8x fewer files, got ${digest.getInt(1)}")
     assert(digest.getLong(2) == digest.getLong(3), "rows must be conserved")
     // range layout: per-file [min,max] orderkey intervals don't overlap
-    val outDir = s"/tmp/graft_compact_${graft.queries.Queries.stageTag(dir)}/compact"
+    val (_, outDir) = QueriesRel.compactionDirs(spark, dir)
     val ranges = spark.read.parquet(outDir)
       .groupBy(input_file_name().as("f"))
       .agg(min(col("l_orderkey")).as("lo"), max(col("l_orderkey")).as("hi"))

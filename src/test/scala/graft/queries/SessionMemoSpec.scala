@@ -3,6 +3,7 @@ package graft.queries
 import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -55,10 +56,8 @@ class SessionMemoSpec extends AnyFunSuite with BeforeAndAfterAll {
     def functions: Set[String] =
       s2.sessionState.functionRegistry.listFunction().map(_.unquotedString).toSet
     val before = functions
-    // a fresh corpus dir, so the z-ordered layout is built, not reused
-    val fresh = Files.createTempDirectory("zorder-fresh")
-    copyTable(dir, fresh, "lineitem")
-    s2.read.parquet(QueriesRel.zorderedLineitem(s2, fresh.toString)).count()
+    // s2 is a fresh root session, so the z-ordered layout is built
+    s2.read.parquet(QueriesRel.zorderedLineitem(s2, dir)).count()
     QueriesLLM.minhashLshPairs(s2, dir).count()
     QueriesLLM.exactJaccardPairs(s2, dir).count()
     graft.streaming.StreamingQueries.runEventTimeDedup(s2, dir).count()
@@ -100,42 +99,46 @@ class SessionMemoSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("a corpus rewritten under the same dir is rebuilt, not served stale") {
     val corpus = Files.createTempDirectory("graft_memo_stale")
-    copyTable(dir, corpus, "documents")
-    val d = corpus.toString
-    val before = QueriesLLM.exactJaccardPairs(spark, d).count()
-    // append exact copies of three documents under fresh ids: each copy
-    // forms a Jaccard-1.0 pair with its original
-    val docs = spark.read.parquet(s"$d/documents.parquet")
-    val copies = docs.filter(length(col("text")) > 40).orderBy(col("doc_id")).limit(3)
-      .withColumn("doc_id", col("doc_id") + 1000000L)
-    val ids = copies.select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(ids.size == 3)
-    docs.unionByName(copies).coalesce(1).write.parquet(s"$d/next")
-    Files.delete(corpus.resolve("documents.parquet"))
-    Files.move(corpus.resolve("next"), corpus.resolve("documents.parquet"))
+    try {
+      copyTable(dir, corpus, "documents")
+      val d = corpus.toString
+      val before = QueriesLLM.exactJaccardPairs(spark, d).count()
+      // append exact copies of three documents under fresh ids: each copy
+      // forms a Jaccard-1.0 pair with its original
+      val docs = spark.read.parquet(s"$d/documents.parquet")
+      val copies = docs.filter(length(col("text")) > 40).orderBy(col("doc_id")).limit(3)
+        .withColumn("doc_id", col("doc_id") + 1000000L)
+      val ids = copies.select("doc_id").collect().map(_.getLong(0)).toSet
+      assert(ids.size == 3)
+      docs.unionByName(copies).coalesce(1).write.parquet(s"$d/next")
+      Files.delete(corpus.resolve("documents.parquet"))
+      Files.move(corpus.resolve("next"), corpus.resolve("documents.parquet"))
 
-    val after = QueriesLLM.exactJaccardPairs(spark, d)
-    val newPairs = after.filter(col("doc_b").isin(ids.toSeq: _*)).count()
-    assert(newPairs >= 3, "memo served the pair graph of the old corpus")
-    assert(after.count() >= before + 3)
+      val after = QueriesLLM.exactJaccardPairs(spark, d)
+      val newPairs = after.filter(col("doc_b").isin(ids.toSeq: _*)).count()
+      assert(newPairs >= 3, "memo served the pair graph of the old corpus")
+      assert(after.count() >= before + 3)
+    } finally FileUtils.deleteQuietly(corpus.toFile)
   }
 
   test("persisted LSH indexes of corpora with colliding dir hashCodes stay apart") {
-    val root = Files.createTempDirectory("graft_memo_paths").toString
-    val (dirA, dirB) = (s"$root/cAa", s"$root/cBB")
-    assert(dirA.hashCode == dirB.hashCode) // the retired path tag collides
-    copyTable(dir, Paths.get(dirA), "embeddings")
-    spark.read.parquet(s"$dir/embeddings.parquet").filter(col("vec_id") % 2 === 0)
-      .coalesce(1).write.parquet(s"$dirB/embeddings.parquet")
+    val root = Files.createTempDirectory("graft_memo_paths")
+    try {
+      val (dirA, dirB) = (s"$root/cAa", s"$root/cBB")
+      assert(dirA.hashCode == dirB.hashCode) // the retired path tag collides
+      copyTable(dir, Paths.get(dirA), "embeddings")
+      spark.read.parquet(s"$dir/embeddings.parquet").filter(col("vec_id") % 2 === 0)
+        .coalesce(1).write.parquet(s"$dirB/embeddings.parquet")
 
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
-    val wantA = rows(QueriesLLM.annLsh(spark, dirA))
-    val wantB = rows(QueriesLLM.annLsh(spark, dirB))
-    assert(wantA != wantB, "the two corpora must answer differently")
-    for (round <- 1 to 2) {
-      assert(rows(QueriesLLM.annLshPersisted(spark, dirA)) == wantA, s"corpus A, call $round")
-      assert(rows(QueriesLLM.annLshPersisted(spark, dirB)) == wantB, s"corpus B, call $round")
-    }
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
+      val wantA = rows(QueriesLLM.annLsh(spark, dirA))
+      val wantB = rows(QueriesLLM.annLsh(spark, dirB))
+      assert(wantA != wantB, "the two corpora must answer differently")
+      for (round <- 1 to 2) {
+        assert(rows(QueriesLLM.annLshPersisted(spark, dirA)) == wantA, s"corpus A, call $round")
+        assert(rows(QueriesLLM.annLshPersisted(spark, dirB)) == wantB, s"corpus B, call $round")
+      }
+    } finally FileUtils.deleteQuietly(root.toFile)
   }
 }

@@ -57,7 +57,7 @@ class SourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
     val maxLen = rows.map(_._2).max
     val pruned = spark.read.format("binaryFile")
       .option("pathGlobFilter", "*.bin")
-      .load(s"/tmp/graft_bin_docs_${graft.queries.Queries.stageTag(dir)}")
+      .load(QueriesScalar.stageBinaryDocs(spark, dir))
       .filter(col("length") < maxLen)
     assert(pruned.count() == rows.count(_._2 < maxLen))
     assert(pruned.count() < rows.length, "fixture must have a largest file to prune")
@@ -77,7 +77,7 @@ class SourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the JDBC relation must carry the 4-way key-range partitioning —
     // a single-partition scan is the classic JDBC bottleneck
     val scan = spark.read.format("jdbc")
-      .option("url", s"jdbc:derby:/tmp/graft_derby_${graft.queries.Queries.stageTag(dir)}")
+      .option("url", s"jdbc:derby:${QueriesScalar.stageDerby(spark, dir)}")
       .option("dbtable", "SUPPLIER")
       .option("partitionColumn", "SUPPKEY")
       .option("lowerBound", "1").option("upperBound", "1000000")

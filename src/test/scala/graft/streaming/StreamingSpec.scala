@@ -37,6 +37,15 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
+  test("stream state sizing: warn above 256 MB per partition unless overridden") {
+    val limit = 256L << 20
+    assert(StreamingQueries.stateSizingWarning("q", 4 * limit, 4, overridden = false).isEmpty)
+    val warn = StreamingQueries.stateSizingWarning("q", 4 * limit + 4, 4, overridden = false)
+    assert(warn.exists(w => w.contains("'q'") && w.endsWith("SPARK_GRAFT_STREAM_STATE_PARTITIONS=5")),
+      s"got $warn")
+    assert(StreamingQueries.stateSizingWarning("q", 40 * limit, 4, overridden = true).isEmpty)
+  }
+
   test("S1 tumbling window: streaming == batch") {
     val streamed = StreamingQueries.runToBatch(spark,
       StreamingQueries.tumbling(StreamingQueries.readEventsStream(spark, eventsDir)), "s1_out")
