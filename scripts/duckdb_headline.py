@@ -11,15 +11,27 @@ reproduction is complete regardless of which engine reads it.
 
 Usage: python3 scripts/duckdb_headline.py [layout_root]
 (expects <root>/{plain,clustered,bloom}/*.parquet from
- `LQB_KEEP=1 sbt "runMain graft.tools.LargeQueryBench ..."`)
+ `LQB_KEEP=1 sbt "runMain graft.tools.Scale lookup <nCoins>"`, which
+ keeps its scratch dir and prints its path; the default root is the
+ newest kept `graft_scale_lookup_*` dir in /dev/shm or the temp dir)
 """
+import glob
+import os
 import sys
+import tempfile
 import time
 
 import duckdb
 
-root = sys.argv[1] if len(sys.argv) > 1 else '/dev/shm/graft_lqb'
-hot = '76a914' + '88' * 20 + '88ac'  # LargeQueryBench.HotScript
+if len(sys.argv) > 1:
+    root = sys.argv[1]
+else:
+    kept = [d for base in ('/dev/shm', tempfile.gettempdir())
+            for d in glob.glob(os.path.join(base, 'graft_scale_lookup_*'))]
+    if not kept:
+        sys.exit('no kept lookup layouts; run Scale lookup with LQB_KEEP=1')
+    root = max(kept, key=os.path.getmtime)
+hot = '76a914' + '88' * 20 + '88ac'  # graft.tools.Scale.HotScript
 
 for layout in ['plain', 'clustered', 'bloom']:
     con = duckdb.connect()

@@ -101,7 +101,7 @@ object SnapshotGen {
       out.write(Varint.writeCompactSize(k.toLong))
       var j = 0
       while (j < k) {
-        // hot-key injection (LargeQueryBench): every `hotEvery`-th coin
+        // hot-key injection (`Scale lookup`): every `hotEvery`-th coin
         // carries the FIXED `hotScript` instead of its generated one —
         // a heavily-reused address, the reference README's headline
         // query shape (4407 rows for one dust address at 177.5M coins).

@@ -123,7 +123,7 @@ object Multimodal {
   private[graft] val mediaBuilds = new java.util.concurrent.atomic.AtomicLong
 
   /** The un-memoized media build (the raw-builder rule of the memoized
-    * entries: anything that MEASURES the encode — LargeMediaBench, probes
+    * entries: anything that MEASURES the encode — `Scale media`, probes
     * — must see the real build, never a cache hit).
     */
   private[graft] def mediaFromDocumentsUncached(
@@ -338,7 +338,7 @@ object Multimodal {
   /** Scale-proof twin of [[mediaFromDocuments]]: `n` deterministic
     * media rows straight from a range (no documents table bound), same
     * kind mix, same real containers — so the codec surface can be
-    * driven at 100K+ rows ([[graft.tools.LargeMediaBench]]) without a
+    * driven at 100K+ rows ([[graft.tools.Scale]] `media`) without a
     * corpus that size. Generation happens executor-side in
     * `mapPartitions`; nothing rides the driver.
     */

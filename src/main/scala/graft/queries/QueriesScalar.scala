@@ -300,8 +300,7 @@ object QueriesScalar {
     */
   def stateReader(s: SparkSession, dir: String): DataFrame =
     graft.streaming.StreamingQueries
-      .runStateInspect(s, stageEventsFile(s, dir),
-        s"/tmp/graft_state_ckpt_${Queries.stageTag(dir)}")
+      .runStateInspect(s, stageEventsFile(s, dir), SessionMemo.scratch("state_ckpt"))
       .orderBy(col("user_id"))
 
   /** E25b: map functions — per-user event-type histogram built as a
@@ -519,15 +518,13 @@ object QueriesScalar {
     * streaming source watches directories: the single corpus file is
     * staged once per session and corpus ([[stageEventsFile]]).
     */
-  def streamUpsert(s: SparkSession, dir: String): DataFrame = {
-    val tag = Queries.stageTag(dir)
+  def streamUpsert(s: SparkSession, dir: String): DataFrame =
     graft.streaming.StreamingQueries.runUpsert(s, stageEventsFile(s, dir),
-        s"/tmp/graft_upsert_tgt_$tag", s"/tmp/graft_upsert_ckpt_$tag")
+        SessionMemo.scratch("upsert_tgt"), SessionMemo.scratch("upsert_ckpt"))
       .select(col("user_id"), col("event_type"),
         col("event_id").as("latest_event_id"),
         unix_millis(col("ts")).as("ts_ms"))
       .orderBy(col("user_id"), col("event_type"))
-  }
 
   /** S1 batch analogue: tumbling 1-hour windows via `window()` (the same
     * expression the streaming path uses), keyed output as epoch millis.

@@ -17,8 +17,9 @@ import graft.sources.UtxoConvert
   */
 object QueriesUtxo {
 
-  private val SnapPath = "/tmp/graft_utxo_e2e.bin"
-  /** Public: the oracle SQL reads this parquet directly from DuckDB. */
+  /** Public: the oracle SQL reads this parquet directly from DuckDB,
+    * after the JVM exits, so it keeps a fixed path.
+    */
   val ParquetPath = "/tmp/graft_utxo_e2e_parquet"
   private val NCoins = 100000
 
@@ -26,23 +27,38 @@ object QueriesUtxo {
   val knownScript: Array[Byte] = ScriptCodec.decompress(0, Array.tabulate[Byte](20)(i => (i + 1).toByte))
   val knownHex: String = Hex.encode(knownScript)
 
+  /** This JVM's mark on the converted fixture, written next to its
+    * `_SUCCESS`: a convert written by another JVM (an earlier run, older
+    * code) is never served.
+    */
+  private val Token = java.util.UUID.randomUUID().toString
+  private val TokenFile = "_graft_jvm_token"
+
   private val lock = new Object
 
-  /** Idempotently build snapshot + converted parquet (cached in /tmp). */
+  /** Convert the marked snapshot once per JVM. */
   private def ensureConverted(s: SparkSession): String = lock.synchronized {
-    val snap = new File(SnapPath)
-    val done = new File(ParquetPath, "_SUCCESS")
-    if (!snap.exists() || !done.exists()) {
+    val token = new File(ParquetPath, TokenFile)
+    val current = new File(ParquetPath, "_SUCCESS").exists() && token.isFile &&
+      java.nio.file.Files.readString(token.toPath) == Token
+    if (!current) {
       val marked = Seq(
         SnapshotGen.Group("11" * 32, Seq(SnapshotGen.GenCoin(0, 30, coinbase = false, 5000, knownScript))),
         SnapshotGen.Group("22" * 32, Seq(SnapshotGen.GenCoin(1, 10, coinbase = true, 7000, knownScript))),
         SnapshotGen.Group("33" * 32, Seq(SnapshotGen.GenCoin(2, 20, coinbase = false, 9000, knownScript))))
-      val tmp = new File(SnapPath + ".tmp")
-      val out = new java.io.BufferedOutputStream(new java.io.FileOutputStream(tmp), 1 << 20)
-      try SnapshotGen.write(out, marked ++ SnapshotGen.synthetic(NCoins, seed = 1234L))
-      finally out.close()
-      if (!tmp.renameTo(snap)) throw new java.io.IOException(s"rename $tmp -> $snap failed")
-      UtxoConvert.convert(s, SnapPath, ParquetPath) // _SUCCESS is the convert's own commit marker
+      // the snapshot (and the split index the convert writes beside it)
+      // is scratch under the application's staging root
+      val snapDir = new File(SessionMemo.scratch("utxo_e2e_snapshot"))
+      snapDir.mkdirs()
+      val snap = new File(snapDir, "snapshot.bin")
+      try {
+        val out = new java.io.BufferedOutputStream(new java.io.FileOutputStream(snap), 1 << 20)
+        try SnapshotGen.write(out, marked ++ SnapshotGen.synthetic(NCoins, seed = 1234L))
+        finally out.close()
+        org.apache.commons.io.FileUtils.deleteDirectory(new File(ParquetPath))
+        UtxoConvert.convert(s, snap.getPath, ParquetPath)
+      } finally org.apache.commons.io.FileUtils.deleteQuietly(snapDir)
+      java.nio.file.Files.writeString(token.toPath, Token)
     }
     ParquetPath
   }

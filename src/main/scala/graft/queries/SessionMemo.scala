@@ -95,9 +95,15 @@ private[graft] object SessionMemo {
     */
   def path(s: SparkSession, dir: String, key: String)(write: String => Unit): String =
     holder(s, dir, key, tag => {
-      val p = new java.io.File(SparkFiles.getRootDirectory(),
-        s"graft_${key}_${tag}_${paths.incrementAndGet()}").getAbsolutePath
+      val p = scratch(s"${key}_$tag")
       write(p)
       p
     }).get.asInstanceOf[String]
+
+  /** A path no other call returns, under the application's staging
+    * root: scratch for one call, such as a stream's checkpoint.
+    */
+  def scratch(name: String): String =
+    new java.io.File(SparkFiles.getRootDirectory(),
+      s"graft_${name}_${paths.incrementAndGet()}").getAbsolutePath
 }

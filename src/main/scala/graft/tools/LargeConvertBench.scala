@@ -1,135 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-/** Large-snapshot convert proof: generate a ≥100M-coin synthetic
-  * snapshot (the reference's headline is 177.5M rows at 507K rows/s in
-  * 4.4 GB RSS — `/root/reference/README.md`), run the full convert
-  * pipeline (plain and globally script-clustered) several times, and
-  * print one JSON line with per-run seconds, sustained rows/s, and the
-  * process peak RSS (`VmHWM`, the whole local-mode JVM — the honest
-  * analogue of the reference's single-process figure).
-  *
-  * Not part of the driver's per-round bench (a 100M-coin run is a
-  * minutes-scale proof, not a regression gate); invoked on demand:
-  *
-  * {{{ sbt "runMain graft.tools.LargeConvertBench [nCoins] [runs]" }}}
-  *
-  * Every timed convert is a [[Metrics.capture]]; the pass also writes
-  * `PROFILE_convert_<nCoins>.json` to the working directory: each run's
-  * wall and per-stage metrics (task run/CPU/GC time, shuffle bytes,
-  * shuffle write and fetch-wait time, spill — the clustered convert is
-  * the decode+shuffle-write map stage and the sort+write reduce stage),
-  * next to what the numbers depend on: the JVM's real max heap, the
-  * `SPARK_DRIVER_MEM` override, the core count, the bucket size the
-  * clustered auto sizing derives from them (`rows_per_bucket`) and the
-  * peak RSS.
-  */
+/** Kept under this name because perfbench, which compiles `src/main`, reads it. */
 object LargeConvertBench {
-
-  /** Peak resident set of this JVM in bytes (Linux VmHWM), -1 unknown. */
-  def peakRssBytes(): Long =
-    try {
-      val src = scala.io.Source.fromFile("/proc/self/status")
-      try src.getLines().collectFirst {
-        case l if l.startsWith("VmHWM:") =>
-          l.split("\\s+")(1).toLong * 1024
-      }.getOrElse(-1L)
-      finally src.close()
-    } catch { case _: Throwable => -1L }
-
-  def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT) // JSON decimals must be dots
-    val nCoins = args.headOption.map(_.toInt).getOrElse(100000000)
-    val runs = args.drop(1).headOption.map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // shuffle spill to tmpfs when available: the clustered convert
-    // shuffles the whole decoded snapshot once (~1.3× snapshot bytes),
-    // and on this host the default /tmp spill dir billed /dev/vda
-    // writeback to the measurement (observed 121 s vs 26 s for the
-    // same shuffle at 100M coins). A production cluster spills to
-    // dedicated NVMe; tmpfs is the local-mode stand-in that measures
-    // the engine.
-    val shmSpill = new java.io.File("/dev/shm")
-    val localDir = if (shmSpill.isDirectory && shmSpill.canWrite) {
-      val d = new java.io.File(shmSpill, "graft_large_spill")
-      d.mkdirs(); d.getAbsolutePath
-    } else System.getProperty("java.io.tmpdir")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-large-convert")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.local.dir", localDir)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val snap = new java.io.File(s"/tmp/graft_large_snap_$nCoins.bin")
-    if (!snap.exists() || snap.length() == 0) {
-      val tmp = new java.io.File(snap.getPath + ".tmp")
-      val out = new java.io.BufferedOutputStream(new java.io.FileOutputStream(tmp), 1 << 20)
-      val t0 = System.nanoTime()
-      try graft.codec.SnapshotGen.writeSynthetic(out, nCoins, seed = 7L)
-      finally out.close()
-      if (!tmp.renameTo(snap)) throw new java.io.IOException(s"rename $tmp -> $snap failed")
-      System.err.println(f"[large] generated ${snap.length() / 1e9}%.2f GB in ${(System.nanoTime() - t0) / 1e9}%.1f s")
-    }
-
-    // outputs to tmpfs when available (measure the engine, not disk
-    // writeback weather — same policy as Bench); parquet of 100M coins
-    // is a few GB, well inside /dev/shm
-    val shm = new java.io.File("/dev/shm")
-    val scratch = if (shm.isDirectory && shm.canWrite)
-      new java.io.File(shm, "graft_large") else new java.io.File("/tmp/graft_large_scratch")
-    scratch.mkdirs()
-
-    def syncFs(): Unit =
-      try Runtime.getRuntime.exec(Array("sync")).waitFor()
-      catch { case _: Throwable => () }
-
-    def profileConvert(out: String, range: Boolean): Metrics.Profile = {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
-      new java.io.File(out).mkdirs()
-      syncFs()
-      Metrics.capture(spark)(graft.sources.UtxoConvert.convert(spark, snap.getPath, out,
-        partitions = cpus.toInt, rangePartition = range))._2
-    }
-
-    // untimed warmups, one per shape: the first convert in a fresh JVM
-    // pays ~30 s of codegen/writer init at 100M coins, which is
-    // cold-start, not steady-state throughput (same policy as Bench)
-    profileConvert(s"$scratch/warm", range = false)
-    profileConvert(s"$scratch/warm", range = true)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$scratch/warm"))
-
-    val plainProfiles = (1 to runs).map(_ => profileConvert(s"$scratch/plain", range = false))
-    val clusteredProfiles = (1 to runs).map(_ => profileConvert(s"$scratch/clustered", range = true))
-    val plain = plainProfiles.map(_.wallSec)
-    val clustered = clusteredProfiles.map(_.wallSec)
-    val outBytes = org.apache.commons.io.FileUtils
-      .sizeOfDirectory(new java.io.File(s"$scratch/clustered"))
-    org.apache.commons.io.FileUtils.deleteQuietly(scratch)
-
-    def arr(rs: Seq[Double]) = rs.map(r => f"$r%.3f").mkString("[", ",", "]")
-    val bestPlain = plain.min
-    val bestClustered = clustered.min
-    println(
-      s"""{"metric":"large_convert","coins":$nCoins,"runs":$runs,""" +
-      s""""snapshot_bytes":${snap.length()},"parquet_bytes":$outBytes,""" +
-      s""""plain_sec":${arr(plain)},"clustered_sec":${arr(clustered)},""" +
-      f""""plain_best_rows_per_s":${(nCoins / bestPlain).toLong},""" +
-      f""""clustered_best_rows_per_s":${(nCoins / bestClustered).toLong},""" +
-      f""""plain_spread":${plain.max / bestPlain}%.2f,"clustered_spread":${clustered.max / bestClustered}%.2f,""" +
-      s""""peak_rss_bytes":${peakRssBytes()}}""")
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"PROFILE_convert_$nCoins.json"),
-      s"""{"coins":$nCoins,"runs":$runs,"heap_max_bytes":${Runtime.getRuntime.maxMemory},""" +
-      s""""driver_mem_env":"${sys.env.getOrElse("SPARK_DRIVER_MEM", "(default 8g)")}","cpus":$cpus,""" +
-      s""""rows_per_bucket":${graft.sources.UtxoConvert.clusterRowsPerBucket(spark)},""" +
-      s""""peak_rss_bytes":${peakRssBytes()},""" +
-      s""""plain":${plainProfiles.map(_.toJson).mkString("[\n", ",\n", "\n]")},""" +
-      s""""clustered":${clusteredProfiles.map(_.toJson).mkString("[\n", ",\n", "\n]")}}""" + "\n")
-    spark.stop()
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File("/dev/shm/graft_large_spill"))
-  }
+  def peakRssBytes(): Long = Scale.peakRssBytes()
 }

@@ -1,168 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-
-/** Reference-scale HEADLINE QUERY proof: the one apples-to-apples
-  * number round 5 left unmeasured. The reference's README times its
-  * flagship query — all coins of one heavily-reused dust address,
-  * `WHERE script = X ORDER BY height` returning 4407 rows — at 0.632 s
-  * (DuckDB over the 177.5M-row converted file,
-  * `/root/reference/README.md:105-107`). This tool measures the same
-  * query at the same row count against OUR converted outputs in all
-  * three layouts (plain / script-clustered / plain+bloom), plus the
-  * unique-key point lookup, and reports wall time and candidate row
-  * groups (stats-only vs bloom) per layout.
-  *
-  * The synthetic snapshot injects the reused address deterministically:
-  * every 40,000th coin carries one fixed p2pkh script → ~4437
-  * occurrences at 177.5M coins, matching the README's 4407-row result
-  * shape; heights stay random, so the hot rows scatter across the
-  * whole height range exactly like a real dust address.
-  *
-  * Not part of the per-round bench (generating + triple-converting a
-  * ~12 GB snapshot is a minutes-scale proof, not a regression gate):
-  *
-  * {{{ sbt "runMain graft.tools.LargeQueryBench [nCoins] [runs]" }}}
-  */
+/** Kept under this name because perfbench, which compiles `src/main`, reads it. */
 object LargeQueryBench {
-
-  /** The reused address: fixed mid-range p2pkh (hash20 = 0x88 bytes —
-    * inside every plain file's script span, so stats-only skipping
-    * can't prune by accident of key placement).
-    */
-  val HotScript: Array[Byte] =
-    graft.codec.ScriptCodec.decompress(0, Array.fill(20)(0x88.toByte))
-
-  def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
-    val calBefore = Calibration.sample() // weather anchor (r12 item 5)
-    val nCoins = args.headOption.map(_.toInt).getOrElse(177500000)
-    val runs = args.drop(1).headOption.map(_.toInt).getOrElse(5)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val shmSpill = new java.io.File("/dev/shm")
-    val localDir = if (shmSpill.isDirectory && shmSpill.canWrite) {
-      val d = new java.io.File(shmSpill, "graft_lqb_spill")
-      d.mkdirs(); d.getAbsolutePath
-    } else System.getProperty("java.io.tmpdir")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-large-query")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.local.dir", localDir)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // hot-keyed snapshot (own cache name: the hot injection changes the
-    // byte stream vs LargeConvertBench's snapshot of the same size)
-    val snap = new java.io.File(s"/tmp/graft_lqb_snap_$nCoins.bin")
-    if (!snap.exists() || snap.length() == 0) {
-      val tmp = new java.io.File(snap.getPath + ".tmp")
-      val out = new java.io.BufferedOutputStream(new java.io.FileOutputStream(tmp), 1 << 20)
-      val t0 = System.nanoTime()
-      try graft.codec.SnapshotGen.writeSynthetic(out, nCoins, seed = 7L,
-        hotEvery = 40000, hotScript = HotScript)
-      finally out.close()
-      if (!tmp.renameTo(snap)) throw new java.io.IOException(s"rename $tmp -> $snap failed")
-      System.err.println(f"[lqb] generated ${snap.length() / 1e9}%.2f GB in ${(System.nanoTime() - t0) / 1e9}%.1f s")
-    }
-
-    val shm = new java.io.File("/dev/shm")
-    val scratch = if (shm.isDirectory && shm.canWrite)
-      new java.io.File(shm, "graft_lqb") else new java.io.File("/tmp/graft_lqb_scratch")
-    scratch.mkdirs()
-
-    def syncFs(): Unit =
-      try Runtime.getRuntime.exec(Array("sync")).waitFor()
-      catch { case _: Throwable => () }
-
-    def convert(out: String, range: Boolean, bloom: Boolean): Double = {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
-      syncFs()
-      val t0 = System.nanoTime()
-      graft.sources.UtxoConvert.convert(spark, snap.getPath, out,
-        partitions = cpus.toInt, rangePartition = range, bloomFilterScript = bloom)
-      (System.nanoTime() - t0) / 1e9
-    }
-    val layouts = Seq(
-      ("plain", s"$scratch/plain", false, false),
-      ("clustered", s"$scratch/clustered", true, false),
-      ("bloom", s"$scratch/bloom", false, true))
-    val convertSec = layouts.map { case (name, out, range, bloom) =>
-      val s = convert(out, range, bloom)
-      System.err.println(f"[lqb] convert $name: $s%.1f s")
-      name -> s
-    }.toMap
-
-    val hotHex = HotScript.map("%02x".format(_)).mkString
-    // unique-key lookup: the Bench discipline — smallest script at or
-    // above the halfway prefix (mid-range, deterministic), which here
-    // is never the hot key (hot starts 0x76, the p2pkh opcode prefix)
-    val parq = spark.read.parquet(s"$scratch/plain")
-    val uniqHex = parq.filter(hex(col("script")) >= "80")
-      .agg(min(hex(col("script")))).collect()(0).getString(0)
-
-    def runQuery(path: String, keyHex: String): (Double, Long) = {
-      val t0 = System.nanoTime()
-      val rows = spark.read.parquet(path)
-        .filter(col("script") === unhex(lit(keyHex)))
-        .select("txid", "vout", "amount", "height")
-        .orderBy("height")
-        .collect()
-      ((System.nanoTime() - t0) / 1e9, rows.length.toLong)
-    }
-    // per (layout, key): one untimed warmup, then `runs`× timed, min —
-    // the min is the engine's latency, the spread is the host's
-    def measure(path: String, keyHex: String): (Double, Seq[Double], Long) = {
-      val (_, n) = runQuery(path, keyHex)
-      syncFs()
-      val ts = (1 to runs).map(_ => runQuery(path, keyHex)._1)
-      (ts.min, ts, n)
-    }
-
-    val results = layouts.map { case (name, out, _, _) =>
-      val (hotBest, hotRuns, hotRows) = measure(out, hotHex)
-      val (uniqBest, _, uniqRows) = measure(out, uniqHex)
-      // candidate row groups per key: stats-only everywhere,
-      // bloom-possible additionally on the bloom layout. The HOT key is
-      // genuinely present in many groups (bloom rightly can't skip
-      // those — clustering is the layout that wins there); the UNIQUE
-      // key lives in one group, which is where the bloom filter closes
-      // the stats-only gap.
-      val (total, hotStats) = LayoutReport.statsMatch(out, "script", hotHex)
-      val (_, uniqStats) = LayoutReport.statsMatch(out, "script", uniqHex)
-      val (hotBloom, uniqBloom) = if (name == "bloom")
-        (LayoutReport.bloomMatch(out, "script", hotHex)._2,
-         LayoutReport.bloomMatch(out, "script", uniqHex)._2) else (-1, -1)
-      System.err.println(f"[lqb] $name: hot $hotBest%.3f s ($hotRows rows, " +
-        f"stats $hotStats/$total, bloom $hotBloom), point $uniqBest%.3f s " +
-        f"($uniqRows rows, stats $uniqStats/$total, bloom $uniqBloom)")
-      (name, hotBest, hotRuns, hotRows, uniqBest, uniqRows, total,
-        hotStats, hotBloom, uniqStats, uniqBloom)
-    }
-
-    def arr(rs: Seq[Double]) = rs.map(r => f"$r%.3f").mkString("[", ",", "]")
-    val per = results.map { case (name, hb, hr, hn, ub, un, tot, hs, hbm, us, ubm) =>
-      s""""$name":{"hot_best_sec":${f"$hb%.3f"},"hot_runs_sec":${arr(hr)},""" +
-      s""""hot_rows":$hn,"point_best_sec":${f"$ub%.3f"},"point_rows":$un,""" +
-      s""""row_groups_total":$tot,"hot_stats_candidates":$hs,"hot_bloom_candidates":$hbm,""" +
-      s""""point_stats_candidates":$us,"point_bloom_candidates":$ubm,""" +
-      s""""convert_sec":${f"${convertSec(name)}%.1f"}}"""
-    }.mkString(",")
-    println(
-      s"""{"metric":"large_query","coins":$nCoins,"runs":$runs,""" +
-      s""""reference_headline_sec":0.632,$per,""" +
-      s""""peak_rss_bytes":${LargeConvertBench.peakRssBytes()},${Calibration.json(calBefore, Calibration.sample())}}""")
-    spark.stop()
-    // LQB_KEEP=1 leaves the converted layouts in place for
-    // cross-engine checks (e.g. timing DuckDB against OUR stamped
-    // files — the reference's own published number is DuckDB-on-its-
-    // file, so DuckDB-on-ours isolates layout quality from the engine)
-    if (!sys.env.get("LQB_KEEP").contains("1")) {
-      org.apache.commons.io.FileUtils.deleteQuietly(scratch)
-    }
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File("/dev/shm/graft_lqb_spill"))
-  }
+  val HotScript: Array[Byte] = Scale.HotScript
 }

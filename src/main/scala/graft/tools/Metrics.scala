@@ -36,8 +36,8 @@ import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryPro
   *
   * Listener events are delivered asynchronously; the bus is drained
   * before the listener is added (so earlier work is not counted) and
-  * after `body` returns (so none of its events is missed). `RegistryBench`
-  * and `LargeConvertBench` write their profiles through this object.
+  * after `body` returns (so none of its events is missed). [[Scale]]
+  * times every body through this object.
   */
 object Metrics {
 

@@ -133,7 +133,7 @@ class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // parquet-backed source: a LocalRelation would be eagerly evaluated
     // by ConvertToLocalRelation, leaving no Filter to inspect
-    val dir = java.nio.file.Files.createTempDirectory("scripts-parq").toString
+    val dir = graft.TempDirs.create("scripts-parq").toString
     scriptRows.map(Tuple1(_)).toDF("script")
       .orderBy(col("script")).write.mode("overwrite").parquet(dir)
     val df = spark.read.parquet(dir)
@@ -173,7 +173,7 @@ class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
       b(Seq(0x41, 0x04) ++ Seq.fill(64)(0x03) ++ Seq(0xac): _*), // p2pk uncompressed
       b(Seq(0x21, 0x04) ++ Seq.fill(32)(0x04) ++ Seq(0xac): _*), // not p2pk (bad parity byte)
       b(Seq(0x41, 0x05) ++ Seq.fill(64)(0x05) ++ Seq(0xac): _*)) // not p2pk
-    val dir = java.nio.file.Files.createTempDirectory("p2pk-parq").toString
+    val dir = graft.TempDirs.create("p2pk-parq").toString
     rows.map(Tuple1(_)).toDF("script")
       .orderBy(col("script")).write.mode("overwrite").parquet(dir)
     val filtered = spark.read.parquet(dir)
@@ -199,7 +199,7 @@ class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the reference's third asserted class (`src/main.rs:159`): with the
     // OR-of-ranges rewrite the p2pk slices must overlap fewer row
     // groups than the file holds
-    val tmp = java.nio.file.Files.createTempDirectory("p2pk-skip").toFile
+    val tmp = graft.TempDirs.create("p2pk-skip").toFile
     val snap = new java.io.File(tmp, "snap.bin")
     val out = new java.io.BufferedOutputStream(new java.io.FileOutputStream(snap))
     try graft.codec.SnapshotGen.writeSynthetic(out, 20000, seed = 11L)
@@ -227,7 +227,7 @@ class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the p2pkh class range must overlap strictly fewer row groups than
     // the file holds — the measured payoff of ScriptClassPrefixRule on
     // the reference layout (sorted scripts + footer stats)
-    val tmp = java.nio.file.Files.createTempDirectory("ext-skip").toFile
+    val tmp = graft.TempDirs.create("ext-skip").toFile
     val snap = new java.io.File(tmp, "snap.bin")
     val out = new java.io.BufferedOutputStream(new java.io.FileOutputStream(snap))
     try graft.codec.SnapshotGen.writeSynthetic(out, 20000, seed = 7L)

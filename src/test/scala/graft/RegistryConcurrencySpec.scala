@@ -23,10 +23,12 @@ class RegistryConcurrencySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val corpora = Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")
   // temp-view entries (q_rollup, q_subquery, q_udaf_geomean), conf-tuned
-  // entries (q_join_bloom, q_join_skew_aqe, q_recursive), a stream
-  // (s_eventlog_tumbling) and the flagship
+  // entries (q_join_bloom, q_join_skew_aqe, q_recursive), streams
+  // (s_eventlog_tumbling; s_state_reader and s_upsert, which write a
+  // checkpoint, and a target, per call) and the flagship
   private val entries = Seq("q_rollup", "q_subquery", "q_join_bloom", "q_join_skew_aqe",
-    "q_recursive", "q_udaf_geomean", "s_eventlog_tumbling", "q0_flagship")
+    "q_recursive", "q_udaf_geomean", "s_eventlog_tumbling", "q0_flagship",
+    "s_state_reader", "s_upsert")
 
   /** Row count and an order-insensitive hash of one entry's result. */
   private def digest(name: String, dir: String): (Int, Int) = {
@@ -37,7 +39,7 @@ class RegistryConcurrencySpec extends AnyFunSuite with BeforeAndAfterAll {
   test("8 threads running registry entries on one session get the serial results") {
     val runs = for (dir <- corpora; name <- entries) yield (name, dir)
     val serial = runs.map(r => r -> digest(r._1, r._2)).toMap
-    // 4 threads per corpus, each running two of the entries
+    // 4 threads per corpus, thread i running entries i, i + 4, ...
     val pool = Executors.newFixedThreadPool(8)
     val start = new CountDownLatch(1)
     try {
@@ -45,7 +47,7 @@ class RegistryConcurrencySpec extends AnyFunSuite with BeforeAndAfterAll {
         pool.submit(new Callable[Seq[((String, String), (Int, Int))]] {
           def call() = {
             start.await()
-            Seq(entries(i), entries(i + 4)).map(n => (n, dir) -> digest(n, dir))
+            entries.indices.filter(_ % 4 == i).map(entries).map(n => (n, dir) -> digest(n, dir))
           }
         })
       start.countDown()

@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * sf1 registry pass caught a real one-core defect, but its scaling
   * audit lived only in prose. This spec reads the CHECKED-IN registry
   * bench artifacts (`BENCH_sf1_r0N.json` + `BENCH_sf01_registry_r0N
-  * .json`, emitted by [[graft.tools.RegistryBench]] at sf1 and sf0.1
+  * .json`, the `registry_total` line of [[graft.tools.Scale]]'s
+  * `registry` workload (formerly `RegistryBench`) at sf1 and sf0.1
   * on the same host) and asserts the superlinear set is EXACTLY a
   * subset of the declared brute-force/exact oracle-contract twins —
   * so a future round that regresses a scale path to superlinear fails

@@ -97,7 +97,8 @@ class SparkEntrySpec extends AnyFunSuite with BeforeAndAfterAll {
     // shrinks the set); any NEW query or shape lands here and must be
     // justified in the lists below. State-store discipline (RocksDB
     // where declared) is pinned separately by StreamingSpec and
-    // LargeStreamBench, which set the provider explicitly.
+    // the `stream` workload of graft.tools.Scale, which set the provider
+    // explicitly.
     val dir = "/root/testdata/sf0.001"
     val bnljAllowed = Set(
       // broadcast 1-row / tiny-frame spine idioms

@@ -88,7 +88,7 @@ class ExpressionSpec extends AnyFunSuite with BeforeAndAfterAll {
       if (v < 0x10) tokens(0) else if (v < 0x20) tokens(1)
       else if (v < 0x30) tokens(2) else tokens(3)
     }
-    val dir = java.nio.file.Files.createTempDirectory("route-test").toString
+    val dir = graft.TempDirs.create("route-test").toString
     val rows = (0 until 256 by 5).map(i => Tuple1(Array(i.toByte, 0x01.toByte)))
     rows.toDF("script").write.mode("overwrite").parquet(dir)
     val df = spark.read.parquet(dir)
@@ -454,7 +454,7 @@ class ExpressionSpec extends AnyFunSuite with BeforeAndAfterAll {
     // a file-backed scan: a purely local relation constant-folds the
     // expressions away entirely (itself proof of Catalyst integration —
     // ScalaUDFs cannot fold)
-    val dir = java.nio.file.Files.createTempDirectory("cg-test").toString
+    val dir = graft.TempDirs.create("cg-test").toString
     Seq((1L, Array[Byte](0x6a.toByte))).toDF("a", "s")
       .write.mode("overwrite").parquet(dir)
     spark.read.parquet(dir).createOrReplaceTempView("cg_test")

@@ -346,7 +346,7 @@ class LshSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the production split (r8): build the index ONCE, WRITE it as a
     // table, and serve queries from the loaded artifact — across
     // sessions, with no KMeans refit, answering bit-identically
-    val out = java.nio.file.Files.createTempDirectory("pq-index").toFile
+    val out = graft.TempDirs.create("pq-index").toFile
       .getAbsolutePath + "/idx"
     val direct = QueriesLLM.annIvfPq(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
@@ -379,7 +379,7 @@ class LshSpec extends AnyFunSuite with BeforeAndAfterAll {
     // PQ — build/write ONCE, then a fresh session answers from the
     // artifact with no fit AND no per-call corpus re-assignment (the
     // documented ivf_p4 residual), bit-identically to the per-call path
-    val out = java.nio.file.Files.createTempDirectory("ivf-index").toFile
+    val out = graft.TempDirs.create("ivf-index").toFile
       .getAbsolutePath + "/idx"
     val direct = QueriesLLM.annIvf(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
@@ -413,37 +413,39 @@ class LshSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("persisted sign-LSH index: round-trip, no re-projection, pruned serving") {
     val out = java.nio.file.Files.createTempDirectory("graft_lsh_idx").toString
-    val direct = QueriesLLM.annLsh(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
-    QueriesLLM.lshIndexWrite(spark, dir, out)
-    val writes = QueriesLLM.lshIndexWrites.get()
-    val s2 = spark.newSession()
-    val loaded = QueriesLLM.annLshFrom(s2, dir, out).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
-    assert(QueriesLLM.lshIndexWrites.get() == writes,
-      "serving from the persisted LSH index re-projected the corpus")
-    assert(loaded == direct,
-      "persisted-LSH answers differ from the per-call path")
-    // the candidate table is partitioned by bucket and the probe join
-    // prunes to the probed buckets — the DPP serving story at 100 TB
-    val buckets = new java.io.File(s"$out/buckets").listFiles()
-      .count(_.getName.startsWith("bucket="))
-    assert(buckets > 1, s"candidate table not partitioned by bucket ($buckets dirs)")
-    val one = QueriesLLM.annLshFrom(s2, dir, out)
-    val plan = one.queryExecution.executedPlan.toString
-    assert(plan.contains("dynamicpruning") || plan.contains("PartitionFilters: [dynamic"),
-      s"probe join over the partitioned candidate table lost dynamic partition pruning:\n" +
-        plan.linesIterator.filter(_.contains("buckets")).take(5).mkString("\n"))
-    // a mismatched parameterization must fail fast, not answer wrongly
-    intercept[IllegalArgumentException] {
-      QueriesLLM.annLshFrom(s2, dir, out, tables = 8, bitsPerTable = 6)
-    }
-    // the registry entry memoizes the artifact: repeat call, zero writes
-    QueriesLLM.annLshPersisted(spark, dir).count()
-    val w2 = QueriesLLM.lshIndexWrites.get()
-    QueriesLLM.annLshPersisted(spark, dir).count()
-    assert(QueriesLLM.lshIndexWrites.get() == w2,
-      "repeat annLshPersisted call rewrote the index instead of hitting the memo")
+    try {
+      val direct = QueriesLLM.annLsh(spark, dir).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
+      QueriesLLM.lshIndexWrite(spark, dir, out)
+      val writes = QueriesLLM.lshIndexWrites.get()
+      val s2 = spark.newSession()
+      val loaded = QueriesLLM.annLshFrom(s2, dir, out).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
+      assert(QueriesLLM.lshIndexWrites.get() == writes,
+        "serving from the persisted LSH index re-projected the corpus")
+      assert(loaded == direct,
+        "persisted-LSH answers differ from the per-call path")
+      // the candidate table is partitioned by bucket and the probe join
+      // prunes to the probed buckets — the DPP serving story at 100 TB
+      val buckets = new java.io.File(s"$out/buckets").listFiles()
+        .count(_.getName.startsWith("bucket="))
+      assert(buckets > 1, s"candidate table not partitioned by bucket ($buckets dirs)")
+      val one = QueriesLLM.annLshFrom(s2, dir, out)
+      val plan = one.queryExecution.executedPlan.toString
+      assert(plan.contains("dynamicpruning") || plan.contains("PartitionFilters: [dynamic"),
+        s"probe join over the partitioned candidate table lost dynamic partition pruning:\n" +
+          plan.linesIterator.filter(_.contains("buckets")).take(5).mkString("\n"))
+      // a mismatched parameterization must fail fast, not answer wrongly
+      intercept[IllegalArgumentException] {
+        QueriesLLM.annLshFrom(s2, dir, out, tables = 8, bitsPerTable = 6)
+      }
+      // the registry entry memoizes the artifact: repeat call, zero writes
+      QueriesLLM.annLshPersisted(spark, dir).count()
+      val w2 = QueriesLLM.lshIndexWrites.get()
+      QueriesLLM.annLshPersisted(spark, dir).count()
+      assert(QueriesLLM.lshIndexWrites.get() == w2,
+        "repeat annLshPersisted call rewrote the index instead of hitting the memo")
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
   }
 
   test("ANN paths: bounded top-k for k=3 rankings, exactly one window for the PQ shortlist") {

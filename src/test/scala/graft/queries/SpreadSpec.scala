@@ -31,7 +31,7 @@ class SpreadSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = spark.stop()
 
   private def tmpDir(name: String): String =
-    java.nio.file.Files.createTempDirectory(name).toString
+    graft.TempDirs.create(name).toString
 
   test("multi-file input (files >= parallelism) is returned untouched — no exchange") {
     val p = spark.sparkContext.defaultParallelism

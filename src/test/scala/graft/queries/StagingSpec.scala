@@ -73,6 +73,28 @@ class StagingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Queries.parquetRowCount(spark, lb) == rows)
   }
 
+  test("an e2e fixture converted by another JVM is converted again, not served") {
+    val lookup = graft.SparkEntry.queries("utxo_e2e_point_lookup")
+    def heights(): Seq[Long] =
+      lookup(spark, dir).collect().map(_.getAs[Number]("height").longValue).toSeq
+    assert(heights() == Seq(10L, 20L, 30L))
+    // plant a complete convert, marked by another JVM, without the
+    // marked coins
+    val fixture = new File(QueriesUtxo.ParquetPath)
+    val tmp = java.nio.file.Files.createTempDirectory("graft_e2e_stale").toFile
+    try {
+      val stale = new File(tmp, "stale")
+      graft.sources.UtxoConvert.readConverted(spark, fixture.getPath)
+        .filter(col("script") =!= unhex(lit(QueriesUtxo.knownHex)))
+        .write.parquet(stale.getPath)
+      java.nio.file.Files.writeString(new File(stale, "_graft_jvm_token").toPath, "another-jvm")
+      org.apache.commons.io.FileUtils.deleteDirectory(fixture)
+      java.nio.file.Files.move(stale.toPath, fixture.toPath)
+      assert(new File(fixture, "_SUCCESS").exists())
+      assert(heights() == Seq(10L, 20L, 30L), "the stale fixture was served")
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(tmp)
+  }
+
   test("no staged directory outlives its application") {
     // the directory that holds the given data files' layout
     def stagedDir(df: org.apache.spark.sql.DataFrame, key: String): File = {

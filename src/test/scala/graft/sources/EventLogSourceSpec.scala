@@ -50,7 +50,7 @@ class EventLogSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     */
   private def publishSegment(df: org.apache.spark.sql.DataFrame, log: String,
       name: String): Unit = {
-    val tmp = java.nio.file.Files.createTempDirectory("eventlog-stage")
+    val tmp = graft.TempDirs.create("eventlog-stage")
     df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     val part = tmp.toFile.listFiles().filter(_.getName.endsWith(".parquet")).head
     java.nio.file.Files.move(part.toPath, java.nio.file.Paths.get(log, name))
@@ -67,7 +67,7 @@ class EventLogSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val opts = new java.util.HashMap[String, String]()
     opts.put("partitions", partitions.toString)
     table.newScanBuilder(new CaseInsensitiveStringMap(opts)).build()
-      .toMicroBatchStream(java.nio.file.Files.createTempDirectory("elck").toString)
+      .toMicroBatchStream(graft.TempDirs.create("elck").toString)
       .asInstanceOf[EventLogMicroBatchStream]
   }
 
@@ -90,7 +90,7 @@ class EventLogSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("rate-limited stream drains in multiple micro-batches and equals the batch read") {
-    val ckpt = java.nio.file.Files.createTempDirectory("eventlog-ck").toString
+    val ckpt = graft.TempDirs.create("eventlog-ck").toString
     val rows = scala.collection.mutable.ArrayBuffer.empty[Long]
     val q = spark.readStream.format("eventlog")
       .option("partitions", "4")
@@ -114,8 +114,8 @@ class EventLogSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("kill/restart: second incarnation resumes exactly-once from the committed offsets") {
     val total = groundTruth.count()
     val perBatch = math.max(1L, total / 20) // ~20 batches: the kill lands mid-stream
-    val ckpt = java.nio.file.Files.createTempDirectory("eventlog-recov-ck").toString
-    val out = java.nio.file.Files.createTempDirectory("eventlog-recov-out").toString + "/t"
+    val ckpt = graft.TempDirs.create("eventlog-recov-ck").toString
+    val out = graft.TempDirs.create("eventlog-recov-out").toString + "/t"
     def start() = spark.readStream.format("eventlog")
       .option("partitions", "4")
       .option("maxRowsPerTrigger", perBatch.toString)
@@ -158,7 +158,7 @@ class EventLogSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Trigger.AvailableNow drains the log in rate-limited batches, then stops (S13 shape)") {
-    val ckpt = java.nio.file.Files.createTempDirectory("eventlog-an-ck").toString
+    val ckpt = graft.TempDirs.create("eventlog-an-ck").toString
     val q = spark.readStream.format("eventlog")
       .option("partitions", "4")
       .option("maxRowsPerTrigger", "300")
@@ -183,7 +183,7 @@ class EventLogSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("INT96 timestamp segments (the Spark writer's default layout) read identically") {
-    val dir = java.nio.file.Files.createTempDirectory("eventlog-int96").toString + "/t"
+    val dir = graft.TempDirs.create("eventlog-int96").toString + "/t"
     val prev = spark.conf.getOption("spark.sql.parquet.outputTimestampType")
     spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
     try groundTruth.select("event_id", "ts", "event_type")
@@ -231,7 +231,7 @@ class EventLogSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("segment-identity drift: a same-count segment swap fails loudly on resume") {
-    val log = java.nio.file.Files.createTempDirectory("eventlog-swap").toString
+    val log = graft.TempDirs.create("eventlog-swap").toString
     val total = groundTruth.count()
     publishSegment(groundTruth.filter(col("event_id") < total / 2), log, "seg-000.parquet")
     publishSegment(groundTruth.filter(col("event_id") >= total / 2), log, "seg-001.parquet")
@@ -261,7 +261,7 @@ class EventLogSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("append-only contract: in-place mutation and mid-sort inserts fail loudly on refresh") {
-    val log = java.nio.file.Files.createTempDirectory("eventlog-mut").toString
+    val log = graft.TempDirs.create("eventlog-mut").toString
     val total = groundTruth.count()
     publishSegment(groundTruth.filter(col("event_id") < total / 2), log, "seg-005.parquet")
     val s = streamOver(log, 2)
@@ -275,7 +275,7 @@ class EventLogSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(e.getMessage.contains("immutable"))
 
     // a new segment sorting BEFORE an existing one would remap chains
-    val log2 = java.nio.file.Files.createTempDirectory("eventlog-mut2").toString
+    val log2 = graft.TempDirs.create("eventlog-mut2").toString
     publishSegment(groundTruth.filter(col("event_id") < total / 2), log2, "seg-005.parquet")
     val s2 = streamOver(log2, 2)
     s2.latestOffset(s2.initialOffset(), ReadLimit.allAvailable())
@@ -287,12 +287,12 @@ class EventLogSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("growth: a segment landing mid-stream is admitted exactly-once") {
-    val log = java.nio.file.Files.createTempDirectory("eventlog-grow").toString
+    val log = graft.TempDirs.create("eventlog-grow").toString
     val total = groundTruth.count()
     val a = groundTruth.filter(col("event_id") < total / 2)
     val b = groundTruth.filter(col("event_id") >= total / 2)
     publishSegment(a, log, "seg-000.parquet")
-    val ckpt = java.nio.file.Files.createTempDirectory("eventlog-grow-ck").toString
+    val ckpt = graft.TempDirs.create("eventlog-grow-ck").toString
     val q = spark.readStream.format("eventlog")
       .option("partitions", "4")
       .option("maxRowsPerTrigger", math.max(1L, total / 10).toString)
@@ -318,13 +318,13 @@ class EventLogSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("growth across kill/restart: appended segment admitted exactly-once by the next incarnation") {
-    val log = java.nio.file.Files.createTempDirectory("eventlog-growk").toString
+    val log = graft.TempDirs.create("eventlog-growk").toString
     val total = groundTruth.count()
     val a = groundTruth.filter(col("event_id") < total / 2)
     val b = groundTruth.filter(col("event_id") >= total / 2)
     publishSegment(a, log, "seg-000.parquet")
-    val ckpt = java.nio.file.Files.createTempDirectory("eventlog-growk-ck").toString
-    val out = java.nio.file.Files.createTempDirectory("eventlog-growk-out").toString + "/t"
+    val ckpt = graft.TempDirs.create("eventlog-growk-ck").toString
+    val out = graft.TempDirs.create("eventlog-growk-out").toString + "/t"
     def start() = spark.readStream.format("eventlog")
       .option("partitions", "4")
       .option("maxRowsPerTrigger", math.max(1L, total / 40).toString)
@@ -365,11 +365,11 @@ class EventLogSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     // a sorted multi-row-group segment: ascending ids, tiny groups →
     // a selective range predicate overlaps very few groups
-    val log = java.nio.file.Files.createTempDirectory("eventlog-skip").toString
+    val log = graft.TempDirs.create("eventlog-skip").toString
     val df = spark.range(200000).select(col("id"),
       concat(lit("u"), format_string("%07d", col("id"))).as("tag"))
       .orderBy("id")
-    val tmp = java.nio.file.Files.createTempDirectory("eventlog-skip-stage")
+    val tmp = graft.TempDirs.create("eventlog-skip-stage")
     df.coalesce(1).write.mode("overwrite")
       .option("parquet.block.size", "65536")
       .option("parquet.page.size", "8192")
@@ -412,7 +412,7 @@ class EventLogSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     // rule (GraftExtensions), which forwards the query's own filter as
     // the source's skipWhere option
     val skip1 = EventLogTable.Metrics.rowGroupsSkipped.get()
-    val ckpt = java.nio.file.Files.createTempDirectory("eventlog-skip-ck").toString
+    val ckpt = graft.TempDirs.create("eventlog-skip-ck").toString
     val q = spark.readStream.format("eventlog")
       .option("partitions", "4")
       .option("maxRowsPerTrigger", "50000")

@@ -39,7 +39,7 @@ class StampingConvertSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  private val tmp = Files.createTempDirectory("stamp-convert-spec").toFile
+  private val tmp = graft.TempDirs.create("stamp-convert-spec").toFile
 
   private lazy val fixturePath: String = {
     val f = new java.io.File(tmp, "fixture.bin")

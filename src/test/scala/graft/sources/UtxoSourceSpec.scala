@@ -22,7 +22,7 @@ class UtxoSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  private val tmp = Files.createTempDirectory("utxo-spec").toFile
+  private val tmp = graft.TempDirs.create("utxo-spec").toFile
   private val knownScript = ScriptCodec.decompress(0, Array.tabulate[Byte](20)(i => (i + 1).toByte))
   private val knownHex = Hex.encode(knownScript)
 

@@ -39,7 +39,7 @@ class FileIngestOrderSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  private val tmp = Files.createTempDirectory("ingest-order-spec").toFile
+  private val tmp = graft.TempDirs.create("ingest-order-spec").toFile
 
   /** hour-0 window split across two files (minutes 0–29 in part-00000,
     * 30–59 in part-00001) + two hour-5 watermark-pushers (the second

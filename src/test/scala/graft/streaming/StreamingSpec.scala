@@ -17,7 +17,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     * parquet into a temp dir once.
     */
   private lazy val eventsDir: String = {
-    val d = java.nio.file.Files.createTempDirectory("events-stream")
+    val d = graft.TempDirs.create("events-stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$dir/events.parquet"),
       d.resolve("events.parquet"))
@@ -182,8 +182,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("parquet file sink + checkpoint: the production write path lands the dedup stream") {
-    val outDir = java.nio.file.Files.createTempDirectory("sink-out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("sink-ckpt").toString
+    val outDir = graft.TempDirs.create("sink-out").toString
+    val ckpt = graft.TempDirs.create("sink-ckpt").toString
     val q = StreamingQueries.dedup(StreamingQueries.readEventsStream(spark, eventsDir))
       .writeStream
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
@@ -204,18 +204,18 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     import java.nio.file.{Files, Paths}
     // split the events into 3 chunk files so maxFilesPerTrigger=1 forces
     // 3 micro-batches — each one MERGEs into the target incrementally
-    val srcDir = Files.createTempDirectory("upsert-src")
+    val srcDir = graft.TempDirs.create("upsert-src")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(s"$dir/events.parquet") // ts stays long
     (0 until 3).foreach { i =>
-      val tmp = Files.createTempDirectory(s"upsert-chunk$i")
+      val tmp = graft.TempDirs.create(s"upsert-chunk$i")
       raw.filter(col("event_id") % 3 === i).coalesce(1)
         .write.mode("overwrite").parquet(tmp.toString)
       val part = tmp.toFile.listFiles().find(_.getName.endsWith(".parquet")).get
       Files.move(part.toPath, srcDir.resolve(s"chunk-$i.parquet"))
     }
-    val ckpt = Files.createTempDirectory("upsert-ckpt").toString
-    val target = Files.createTempDirectory("upsert-tgt").toString + "/t"
+    val ckpt = graft.TempDirs.create("upsert-ckpt").toString
+    val target = graft.TempDirs.create("upsert-tgt").toString + "/t"
     val got = StreamingQueries.runUpsert(spark, srcDir.toString, target, ckpt,
         maxFilesPerTrigger = Some(1))
       .select(col("user_id"), col("event_type"), col("event_id"), unix_millis(col("ts")))
@@ -234,7 +234,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("S8b upsert publish crash between renames auto-recovers from _old (no key loss)") {
     import org.apache.hadoop.fs.Path
     import java.nio.file.Files
-    val base = Files.createTempDirectory("upsert-crash").toString
+    val base = graft.TempDirs.create("upsert-crash").toString
     val target = s"$base/t"
     val fs = new Path(target).getFileSystem(spark.sparkContext.hadoopConfiguration)
     import spark.implicits._
@@ -266,18 +266,18 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // micro-batches, then terminate WITHOUT processAllAvailable/stop —
     // the batch-over-stream backfill mode (Trigger.Once's replacement
     // that still honors rate limits)
-    val srcDir = Files.createTempDirectory("avnow-src")
+    val srcDir = graft.TempDirs.create("avnow-src")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(s"$dir/events.parquet")
     (0 until 3).foreach { i =>
-      val tmp = Files.createTempDirectory(s"avnow-chunk$i")
+      val tmp = graft.TempDirs.create(s"avnow-chunk$i")
       raw.filter(col("event_id") % 3 === i).coalesce(1)
         .write.mode("overwrite").parquet(tmp.toString)
       val part = tmp.toFile.listFiles().find(_.getName.endsWith(".parquet")).get
       Files.move(part.toPath, srcDir.resolve(s"chunk-$i.parquet"))
     }
-    val ckpt = Files.createTempDirectory("avnow-ckpt").toString
-    val out = Files.createTempDirectory("avnow-out").toString + "/t"
+    val ckpt = graft.TempDirs.create("avnow-ckpt").toString
+    val out = graft.TempDirs.create("avnow-out").toString + "/t"
     val tsType = StreamingQueries.eventsTsType(spark, srcDir.toString)
     val events = spark.readStream
       .schema(StreamingQueries.eventsRawSchema(tsType))
@@ -307,18 +307,18 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("S14 checkpoint recovery: a stopped query resumes exactly-once from its offsets") {
     import java.nio.file.Files
-    val srcDir = Files.createTempDirectory("recov-src")
+    val srcDir = graft.TempDirs.create("recov-src")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(s"$dir/events.parquet")
     (0 until 3).foreach { i =>
-      val tmp = Files.createTempDirectory(s"recov-chunk$i")
+      val tmp = graft.TempDirs.create(s"recov-chunk$i")
       raw.filter(col("event_id") % 3 === i).coalesce(1)
         .write.mode("overwrite").parquet(tmp.toString)
       val part = tmp.toFile.listFiles().find(_.getName.endsWith(".parquet")).get
       Files.move(part.toPath, srcDir.resolve(s"chunk-$i.parquet"))
     }
-    val ckpt = Files.createTempDirectory("recov-ckpt").toString
-    val out = Files.createTempDirectory("recov-out").toString + "/t"
+    val ckpt = graft.TempDirs.create("recov-ckpt").toString
+    val out = graft.TempDirs.create("recov-out").toString + "/t"
     def start() = spark.readStream
       .schema(StreamingQueries.eventsRawSchema(
         StreamingQueries.eventsTsType(spark, srcDir.toString)))
@@ -380,11 +380,11 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val hi = cross.getLong(0) // the dropped doc, in the middle slice
     val docsB = graft.queries.Queries.t(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
-    val watch = java.nio.file.Files.createTempDirectory("docs-stream").toString
+    val watch = graft.TempDirs.create("docs-stream").toString
     Seq(col("doc_id") < b1,
       col("doc_id") >= b1 && col("doc_id") <= hi,
       col("doc_id") > hi).zipWithIndex.foreach { case (p, i) =>
-      val tmp = java.nio.file.Files.createTempDirectory(s"docs-slice$i")
+      val tmp = graft.TempDirs.create(s"docs-slice$i")
       docsB.filter(p).coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val f = tmp.toFile.listFiles().filter(_.getName.endsWith(".parquet")).head
       java.nio.file.Files.move(f.toPath,
@@ -435,11 +435,11 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val hi = cross.getLong(0)
     val docsB = graft.queries.Queries.t(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
-    val watch = java.nio.file.Files.createTempDirectory("docs-stream-w").toString
+    val watch = graft.TempDirs.create("docs-stream-w").toString
     Seq(col("doc_id") < b1,
       col("doc_id") >= b1 && col("doc_id") <= hi,
       col("doc_id") > hi).zipWithIndex.foreach { case (p, i) =>
-      val tmp = java.nio.file.Files.createTempDirectory(s"docs-wslice$i")
+      val tmp = graft.TempDirs.create(s"docs-wslice$i")
       docsB.filter(p).coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val f = tmp.toFile.listFiles().filter(_.getName.endsWith(".parquet")).head
       java.nio.file.Files.move(f.toPath,
@@ -487,7 +487,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val maxId = docsB.agg(max(col("doc_id"))).collect()(0).getLong(0)
     val delay = maxId + 2 // covers ANY permutation of this corpus
     val sentinelId = maxId + delay + 2
-    val watch = java.nio.file.Files.createTempDirectory("docs-et-spec").toString
+    val watch = graft.TempDirs.create("docs-et-spec").toString
     val slices = Seq(
       docsB.filter(col("doc_id") >= b1 && col("doc_id") <= hi),
       docsB.filter(col("doc_id") > hi),
@@ -498,7 +498,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       spark.range(1).select(lit(sentinelId).as("doc_id"),
         lit("sentinel").as("text")))
     slices.zipWithIndex.foreach { case (p, i) =>
-      val tmp = java.nio.file.Files.createTempDirectory(s"docs-etslice$i")
+      val tmp = graft.TempDirs.create(s"docs-etslice$i")
       p.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val f = tmp.toFile.listFiles().filter(_.getName.endsWith(".parquet")).head
       java.nio.file.Files.move(f.toPath,

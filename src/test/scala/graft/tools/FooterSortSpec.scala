@@ -15,7 +15,7 @@ class FooterSortSpec extends AnyFunSuite {
     * the tail magic: 112 bytes.
     */
   private def tailFile(lengthField: Array[Byte], magic: String): java.io.File = {
-    val dir = Files.createTempDirectory("footer-sort-spec").toFile
+    val dir = graft.TempDirs.create("footer-sort-spec").toFile
     val f = new java.io.File(dir, "x.parquet")
     Files.write(f.toPath,
       "PAR1".getBytes("US-ASCII") ++ new Array[Byte](100) ++ lengthField ++

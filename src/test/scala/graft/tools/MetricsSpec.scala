@@ -25,7 +25,7 @@ class MetricsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  private val tmp = Files.createTempDirectory("metrics-spec").toFile
+  private val tmp = graft.TempDirs.create("metrics-spec").toFile
 
   private lazy val table: String = {
     val dir = new java.io.File(tmp, "table").getAbsolutePath
