@@ -283,9 +283,10 @@ object QueriesScalar {
 
   /** A directory holding one copy of `$dir/events.parquet`: the file
     * streaming source watches directories, not files. Shared by the
-    * [[stateReader]] and [[streamUpsert]] streams.
+    * [[stateReader]] and [[streamUpsert]] streams; the S12 spec stages
+    * its own stream's events through it too.
     */
-  private def stageEventsFile(s: SparkSession, dir: String): String =
+  private[queries] def stageEventsFile(s: SparkSession, dir: String): String =
     SessionMemo.path(s, dir, "events_src") { loc =>
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(loc))
       java.nio.file.Files.copy(java.nio.file.Paths.get(s"$dir/events.parquet"),

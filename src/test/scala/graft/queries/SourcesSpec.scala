@@ -98,10 +98,12 @@ class SourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(state.nonEmpty && state.toSeq == batch.toSeq)
 
     // the raw reader surface: one state row per key, partitioned as the
-    // shuffle that wrote it (partition_id bounded by shuffle partitions)
-    val raw = spark.read.format("statestore")
-      .option("path", s"/tmp/graft_state_ckpt_${graft.queries.Queries.stageTag(dir)}")
-      .load()
+    // shuffle that wrote it (partition_id bounded by shuffle partitions),
+    // read off a checkpoint this test's own stream writes
+    val ckpt = graft.TempDirs.create("state-ckpt").toString
+    graft.streaming.StreamingQueries
+      .runStateInspect(spark, QueriesScalar.stageEventsFile(spark, dir), ckpt)
+    val raw = spark.read.format("statestore").option("path", ckpt).load()
     assert(raw.columns.contains("partition_id"))
     assert(raw.count() == batch.length)
     val maxPart = raw.agg(max(col("partition_id"))).head().getInt(0)
