@@ -15,6 +15,10 @@ import graft.functions.GraftFunctions
   * clients such as the Thrift server. This is the standard drop-in path
   * for a Spark-native library on a shared 1000-executor cluster: ship
   * the jar, set one conf, query.
+  *
+  * It also injects three plan rules: [[graft.plans.ScriptClassPrefixRule]]
+  * (optimizer), [[graft.plans.EventLogStreamPushDown]] (resolution) and
+  * [[graft.plans.SortedCollectStrategy]] (planner).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -34,5 +38,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // so a resolution rule forwards them as the source's `skipWhere`
     // row-group-skip hint — see the rule's scaladoc
     ext.injectResolutionRule(_ => graft.plans.EventLogStreamPushDown)
+    // a collected ORDER BY sorts inside its scan tasks and merges on the
+    // driver: one job instead of a sampling scan, a second scan and a
+    // shuffle — see the strategy's scaladoc
+    ext.injectPlannerStrategy(_ => graft.plans.SortedCollectStrategy)
   }
 }

@@ -86,26 +86,30 @@ object SnapshotIndexer {
 
   private[graft] def clearMemo(): Unit = memo.clear()
 
-  /** Merge contiguous fine-grained splits into ranges of ≥ `coinsPerSplit`
-    * coins. Fine splits cut at group boundaries, so any concatenation of
-    * adjacent fine splits is also group-aligned and independently
-    * decodable. Identity when the input granularity already ≥ target.
+  /** Merge contiguous fine-grained splits into ranges of at most
+    * `coinsPerSplit` coins: a range closes before the split that would
+    * take it past the target, so only a fine split that is itself larger
+    * stays larger. Fine splits cut at group boundaries, so any
+    * concatenation of adjacent fine splits is also group-aligned and
+    * independently decodable (sidecars written by the older ≥ rule
+    * included). Identity when the input granularity equals the target.
     */
   private[graft] def mergeSplits(fine: Seq[Split], coinsPerSplit: Long): Seq[Split] = {
     val out = Vector.newBuilder[Split]
     var off = -1L
     var n = 0L
     fine.foreach { s =>
-      if (off < 0) off = s.offset
+      if (n > 0 && n + s.nCoins > coinsPerSplit) { out += Split(off, n); n = 0L }
+      if (n == 0) off = s.offset
       n += s.nCoins
-      if (n >= coinsPerSplit) { out += Split(off, n); off = -1L; n = 0L }
     }
-    if (off >= 0) out += Split(off, n)
+    if (n > 0) out += Split(off, n)
     out.result()
   }
 
-  /** Index a snapshot file into splits of ~`coinsPerSplit` coins
-    * (memoized per file identity; sidecar-cached per cluster). Reads
+  /** Index a snapshot file into splits of at most `coinsPerSplit` coins
+    * (a split is larger only when its one txid group is; memoized per
+    * file identity; sidecar-cached per cluster). Reads
     * through the Hadoop FileSystem API so snapshots on HDFS/S3/file://
     * all index identically — at 100 TB the snapshot lives on a
     * distributed store, not a driver-local path. Pass the session's
@@ -288,6 +292,10 @@ object SnapshotIndexer {
     s
   }
 
+  /** One skip-parse pass: splits of at most `coinsPerSplit` coins, each
+    * starting at a txid-group boundary; a group that alone exceeds the
+    * target is a split of its own.
+    */
   private def indexUncached(p: Path, coinsPerSplit: Long,
       conf: Configuration): (SnapshotHeader, Seq[Split]) = {
     uncachedPasses.incrementAndGet()
@@ -300,15 +308,18 @@ object SnapshotIndexer {
       var splitCoins = 0L
       var remaining = header.numUtxos
       while (remaining > 0) {
-        // group boundary: candidate split point
-        if (splitCoins >= coinsPerSplit) {
-          splits += Split(splitStart, splitCoins)
-          splitStart = r.bytesRead
-          splitCoins = 0L
-        }
+        // group boundary: cut here if this group would take the split
+        // past `coinsPerSplit`, so a split (one plain-convert file) never
+        // outgrows a 64Ki-row row group by a few coins
+        val groupStart = r.bytesRead
         r.skipFully(32) // txid
         var inGroup = Varint.readCompactSize(r)
         require(inGroup > 0, "empty txid coin group")
+        if (splitCoins > 0 && splitCoins + inGroup > coinsPerSplit) {
+          splits += Split(splitStart, splitCoins)
+          splitStart = groupStart
+          splitCoins = 0L
+        }
         remaining -= inGroup
         splitCoins += inGroup
         while (inGroup > 0) { skipCoin(r); inGroup -= 1 }

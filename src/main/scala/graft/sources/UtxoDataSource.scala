@@ -157,10 +157,19 @@ class UtxoPartitionReader(file: String, offset: Long, nCoins: Long, columns: Arr
       SnapshotCodec.coins(reader, nCoins, renderTxid)
     }
 
+  // the coins of one txid group share one `txid` String instance
+  // (SnapshotCodec.coins): encode it once per group, not once per coin
+  private var txidHex: String = null
+  private var txidUtf8: UTF8String = null
+  private def txid(hex: String): UTF8String = {
+    if (hex ne txidHex) { txidHex = hex; txidUtf8 = UTF8String.fromString(hex) }
+    txidUtf8
+  }
+
   // pruned projection: precompute the per-column writers once
   private val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(columns.length)
   private val setters: Array[graft.codec.Coin => Any] = columns.map {
-    case "txid" => (c: graft.codec.Coin) => UTF8String.fromString(c.txid)
+    case "txid" => (c: graft.codec.Coin) => txid(c.txid)
     case "vout" => (c: graft.codec.Coin) => c.vout
     case "height" => (c: graft.codec.Coin) => c.height
     case "coinbase" => (c: graft.codec.Coin) => c.coinbase

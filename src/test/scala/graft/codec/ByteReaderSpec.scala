@@ -64,6 +64,8 @@ class ByteReaderSpec extends AnyFunSuite {
       val conf = new Configuration()
       val (_, splits) = SnapshotIndexer.index(f.toString, 50L, conf, sidecar = false)
       assert(splits.size > 10)
+      // groups hold at most 3 coins here: no split may pass the target
+      assert(splits.forall(_.nCoins <= 50), splits.map(_.nCoins))
       val seq = decodeTracked(new ByteReader(new ByteArrayInputStream(bigMiddle)))
       // offset of coin i = bytesRead after coin i - 1 (the header for coin 0)
       val starts = (51L +: seq.map(_._2)).take(seq.size)
@@ -78,6 +80,15 @@ class ByteReaderSpec extends AnyFunSuite {
       assert(first == seq.size)
       assert(viaSplits == seq.map(_._1))
     } finally Files.delete(f)
+  }
+
+  test("merged splits stay at most the target; older at-least-target splits still merge") {
+    import SnapshotIndexer.{Split, mergeSplits}
+    // a sidecar written by the older rule: each split just past 256 coins
+    val old = Seq(Split(10, 257), Split(20, 258), Split(30, 257), Split(40, 5))
+    assert(mergeSplits(old, 256) == old)
+    assert(mergeSplits(old, 600) == Seq(Split(10, 515), Split(30, 262)))
+    assert(mergeSplits(Seq(Split(0, 100), Split(5, 100), Split(9, 56)), 256) == Seq(Split(0, 256)))
   }
 
   test("truncation at every byte offset raises EOFException, never a short iterator") {

@@ -315,11 +315,12 @@ class QueriesRelSpec extends AnyFunSuite with BeforeAndAfterAll {
     // catalog tables + ANALYZE: the statistics half of a 100 TB deployment
     // (AQE re-plans at runtime; CBO plans right the first time)
     val tag = graft.queries.Queries.stageTag(dir)
+    lazy val root = graft.TempDirs.create("graft_cbo")
     Seq("customer", "orders", "nation").foreach { tbl =>
       val name = s"cbo_${tbl}_$tag"
       if (!spark.catalog.tableExists(name)) {
         Queries.t(spark, dir, tbl).write.mode("overwrite")
-          .option("path", s"/tmp/graft_cbo_$tag/$tbl").saveAsTable(name)
+          .option("path", root.resolve(tbl).toString).saveAsTable(name)
         spark.sql(s"ANALYZE TABLE $name COMPUTE STATISTICS FOR ALL COLUMNS")
       }
     }
